@@ -2,7 +2,7 @@ package graft
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -42,13 +42,6 @@ import org.apache.spark.sql.types.StructType
   */
 object ModelParquet {
 
-  private def codecOf(spark: SparkSession): CompressionCodecName = {
-    val name = spark.conf
-      .get("spark.sql.parquet.compression.codec", "snappy").toUpperCase
-    try CompressionCodecName.valueOf(name)
-    catch { case _: IllegalArgumentException => CompressionCodecName.SNAPPY }
-  }
-
   private class RowsBuilder(path: Path, ws: ParquetWriteSupport)
       extends ParquetWriter.Builder[InternalRow, RowsBuilder](path) {
     override def self(): RowsBuilder = this
@@ -77,7 +70,10 @@ object ModelParquet {
     val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
     val writer = new RowsBuilder(file, new ParquetWriteSupport)
       .withConf(conf)
-      .withCompressionCodec(codecOf(spark))
+      // the codec Spark's ParquetOptions mapped the session's codec name to
+      // (`none` → UNCOMPRESSED, `lz4_raw` → LZ4_RAW, ...), as a write job does
+      .withCompressionCodec(
+        CompressionCodecName.valueOf(conf.get(ParquetOutputFormat.COMPRESSION)))
       .build()
     try rows.foreach(r => writer.write(toInternal(r).asInstanceOf[InternalRow]))
     finally writer.close()

@@ -17,10 +17,17 @@ import org.apache.spark.sql.SparkSession
   * latency (their 8-vs-32-core ratio is ≈1).
   *
   * Failure semantics: every task runs to completion or failure; the first
-  * failure is rethrown (unwrapped) after all tasks settle, so a crashed
-  * surface write can never be masked by a sibling still writing — and the
-  * manifest commit after [[run]] therefore never publishes a half-landed
-  * epoch, exactly as in the sequential order.
+  * failure (in task order) is rethrown unwrapped after all tasks settle,
+  * with every later failure attached to it via `addSuppressed`. So a
+  * crashed surface write can never be masked by a sibling still writing,
+  * no sibling's failure is lost, and the manifest commit after [[run]]
+  * never publishes a half-landed epoch, exactly as in the sequential order.
+  *
+  * Pools may nest: a task may itself call [[run]]
+  * (CorpusPrep.buildPrepState → IncrementalDedup.buildIndex → writeEpoch).
+  * Each call owns a fresh pool whose threads block only on their own
+  * tasks, so nesting cannot deadlock; it only multiplies the driver
+  * threads in flight.
   */
 object Par {
   def run(spark: SparkSession, tasks: Seq[() => Unit]): Unit = {
@@ -38,15 +45,15 @@ object Par {
           }
         })
       }
-      var firstFailure: Option[Throwable] = None
-      futs.foreach { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            if (firstFailure.isEmpty) firstFailure = Some(e.getCause)
-        }
+      val failures = futs.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
       }
-      firstFailure.foreach(throw _)
+      failures.headOption.foreach { first =>
+        // tasks may rethrow one shared instance; self-suppression throws
+        failures.tail.filter(_ ne first).foreach(first.addSuppressed)
+        throw first
+      }
     } finally pool.shutdown()
   }
 }

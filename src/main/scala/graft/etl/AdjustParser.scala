@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -33,70 +33,40 @@ object AdjustParser {
   private val PARSE_SCHEMA: StructType =
     RAW_SCHEMA.add(StructField("_corrupt", StringType, nullable = true))
 
+  /** Error labels of the parsed struct `_r`, bound once (one `from_json`
+    * per row in the filter, however many fields the checks read).
+    */
+  private val errors: Column = ParseResult.bindOnce(col("_r")) { r =>
+    // bad_json is the SOLE error for a malformed line — the per-field
+    // labels below would all fire spuriously on its null-struct fields
+    when(r.isNull || r("_corrupt").isNotNull, array(lit("bad_json")))
+      .otherwise(filter(array(
+        when(r("created_at").isNull, lit("missing:created_at"))
+          .when(r("created_at").try_cast(LongType).isNull, lit("bad_bigint:created_at")),
+        when(r("revenue_float").isNotNull && r("revenue_float").try_cast(DoubleType).isNull,
+          lit("bad_double:revenue_float")),
+        when(r("activity_kind").isNull || !r("activity_kind").isin(ACTIVITY_KINDS: _*),
+          lit("bad_activity_kind"))
+      ), _.isNotNull))
+  }
+
+  /** Typed good columns, in RAW_SCHEMA order (revenue keeps its coerced name). */
+  private val goodCols: Seq[Column] = RAW_SCHEMA.fieldNames.toSeq.map {
+    case "created_at" =>
+      timestamp_seconds(col("_r.created_at").try_cast(LongType)).as("created_at")
+    case "is_organic" =>
+      val v = col("_r.is_organic")
+      when(v === "1", true).when(v === "0", false).as("is_organic")
+    case "revenue_float" => col("_r.revenue_float").try_cast(DoubleType).as("revenue")
+    case n => col(s"_r.$n").as(n)
+  }
+
   def parseLines(raw: DataFrame): ParseResult = {
-    val parsed = raw.withColumn(
-      "_r", from_json(col("value"), PARSE_SCHEMA,
+    val typed = raw
+      .withColumn("_r", from_json(col("value"), PARSE_SCHEMA,
         Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt")))
-
-    val typed = parsed
-      .withColumn("created_at_ts",
-        expr("timestamp_seconds(try_cast(_r.created_at AS BIGINT))"))
-      .withColumn("revenue", expr("try_cast(_r.revenue_float AS DOUBLE)"))
-      .withColumn("is_organic_b",
-        expr("CASE WHEN _r.is_organic = '1' THEN true " +
-          "WHEN _r.is_organic = '0' THEN false END"))
-      .withColumn("_errors", expr(
-        // bad_json is the SOLE error for a malformed line — the per-field
-        // labels below would all fire spuriously on its null-struct fields
-        s"""CASE WHEN _r IS NULL OR _r._corrupt IS NOT NULL
-           |     THEN array('bad_json')
-           |ELSE filter(array(
-           |  CASE WHEN _r.created_at IS NULL
-           |       THEN 'missing:created_at' END,
-           |  CASE WHEN _r.created_at IS NOT NULL
-           |        AND try_cast(_r.created_at AS BIGINT) IS NULL
-           |       THEN 'bad_bigint:created_at' END,
-           |  CASE WHEN _r.revenue_float IS NOT NULL
-           |        AND try_cast(_r.revenue_float AS DOUBLE) IS NULL
-           |       THEN 'bad_double:revenue_float' END,
-           |  CASE WHEN _r.activity_kind IS NULL
-           |        OR _r.activity_kind NOT IN (${ACTIVITY_KINDS.map("'" + _ + "'").mkString(",")})
-           |       THEN 'bad_activity_kind' END
-           |), x -> x IS NOT NULL)
-           |END""".stripMargin))
-
-    val good = typed
-      .filter(size(col("_errors")) === 0)
-      .select(
-        col("_r.activity_kind").as("activity_kind"),
-        col("_r.event_token").as("event_token"),
-        col("_r.app_token").as("app_token"),
-        col("_r.adid").as("adid"),
-        col("_r.idfa").as("idfa"),
-        col("_r.gps_adid").as("gps_adid"),
-        col("created_at_ts").as("created_at"),
-        col("_r.tracker").as("tracker"),
-        col("_r.tracker_name").as("tracker_name"),
-        col("_r.network_name").as("network_name"),
-        col("_r.campaign_name").as("campaign_name"),
-        col("_r.adgroup_name").as("adgroup_name"),
-        col("_r.creative_name").as("creative_name"),
-        col("_r.country").as("country"),
-        col("_r.os_name").as("os_name"),
-        col("_r.os_version").as("os_version"),
-        col("_r.device_name").as("device_name"),
-        col("is_organic_b").as("is_organic"),
-        col("revenue"),
-        col("_r.currency").as("currency"))
-
-    val bad = typed
-      .filter(size(col("_errors")) > 0)
-      .select(
-        col("value").as("line"),
-        col("_errors").as("errors"),
-        current_timestamp().as("failure_tstamp"))
-
-    ParseResult(good, bad)
+      .withColumn("_errors", errors)
+    ParseResult.route(typed, goodCols)
   }
 
   def read(spark: SparkSession, path: String): ParseResult =

@@ -10,8 +10,8 @@ import org.apache.spark.sql.types._
   *
   * The oracle reads the same fixture file as raw LINES (a 1-byte \x01
   * separator with quoting disabled, so embedded tabs survive into one
-  * column), splits positionally on chr(9), and mirrors
-  * [[SnowplowParser]]'s per-field semantics: exact 131-field count,
+  * column), splits positionally on chr(9), and mirrors the per-field
+  * check [[SnowplowParser]] zips over its split array: exact 131-field count,
   * required fields, UUID shape on event_id, typed coercions via try_cast,
   * and the 0/1 boolean encoding — with the same first-match-wins error
   * labels. Every expression is GENERATED from [[SnowplowSchema.FIELDS]],
@@ -25,7 +25,7 @@ object SnowplowOracle {
   /** DuckDB lists are 1-based; empty TSV field → NULL (parser convention). */
   private def raw(i: Int): String = s"nullif(f[${i + 1}], '')"
 
-  /** Typed value of field `i` — mirror of SnowplowParser.typedExpr. */
+  /** Typed value of field `i` — mirror of SnowplowParser's typed good projection. */
   private def typed(dt: DataType, i: Int): String = {
     val r = raw(i)
     dt match {
@@ -42,8 +42,9 @@ object SnowplowOracle {
   private def typedByName(name: String): String =
     typed(FIELDS(idx(name))._2, idx(name))
 
-  /** Per-field error label CASE — same WHEN order and labels as
-    * SnowplowParser.errExpr (required, then uuid, then coercion).
+  /** Per-field error label CASE — same WHEN order and labels as the
+    * lambda SnowplowParser zips over each field and its metadata
+    * (required, then uuid, then coercion).
     */
   private def errCase(name: String, dt: DataType, i: Int): Option[String] = {
     val r = raw(i)

@@ -4,16 +4,15 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Parsed feed split into loadable rows and dead-lettered bad rows (A9).
-  * Bad rows are never dropped: they carry the raw line plus the reasons.
-  */
-case class ParseResult(good: DataFrame, bad: DataFrame)
-
 /** Snowplow enriched-event TSV parser (SURVEY.md §2.1 J1/J3/A2/A9).
   *
-  * Pure column expressions over one `split()` pass — no UDFs, stays inside
-  * whole-stage codegen, and (being a narrow projection) pushes down through
-  * to the text scan at any scale. Strictness:
+  * Pure column expressions, no UDFs. Each line is split once per operator:
+  * the error check runs ONE lambda over the split array zipped with a
+  * literal per-field metadata array (name, type, required), so its cost does
+  * not grow with references to the fields. That check is a higher-order
+  * function, so the filter holding it is evaluated outside whole-stage
+  * codegen; so is the 131-column typed projection, which is wider than
+  * `spark.sql.codegen.maxFields` (100). Strictness:
   *
   *   - field count must be exactly 131 (line-shift protection);
   *   - empty string → NULL (TSV convention);
@@ -21,78 +20,48 @@ case class ParseResult(good: DataFrame, bad: DataFrame)
   *     that fails coercion marks the row bad (never silently nulled);
   *   - booleans accept the Snowplow `0`/`1` encoding only;
   *   - `event_id` must be a UUID; REQUIRED fields must be non-NULL.
+  *
+  * Each field reports its first failing check only, in the order required,
+  * uuid, coercion; the row's errors keep field order.
   */
 object SnowplowParser {
   import SnowplowSchema._
 
-  private def rawField(i: Int): String = s"nullif(_f[$i], '')"
-
-  /** SQL expression string producing the typed value of field `i`. */
-  private def typedExpr(name: String, dt: DataType, i: Int): String = {
-    val raw = rawField(i)
-    dt match {
-      case StringType    => raw
-      case IntegerType   => s"try_cast($raw AS INT)"
-      case DoubleType    => s"try_cast($raw AS DOUBLE)"
-      case TimestampType => s"try_cast($raw AS TIMESTAMP)"
-      case BooleanType =>
-        s"CASE WHEN $raw = '1' THEN true WHEN $raw = '0' THEN false END"
-      case other => sys.error(s"unsupported snowplow field type $other")
-    }
+  /** Typed value of a raw field (NULL when the field is empty). */
+  private def typed(dt: DataType, raw: Column): Column = dt match {
+    case StringType                               => raw
+    case IntegerType | DoubleType | TimestampType => raw.try_cast(dt)
+    case BooleanType => when(raw === "1", true).when(raw === "0", false)
+    case other => sys.error(s"unsupported snowplow field type $other")
   }
 
-  /** Per-field error message, NULL when the field is fine. */
-  private def errExpr(name: String, dt: DataType, i: Int): String = {
-    val raw = rawField(i)
-    val typed = typedExpr(name, dt, i)
-    val coercion =
-      if (dt == StringType) None
-      else Some(s"WHEN $raw IS NOT NULL AND ($typed) IS NULL " +
-        s"THEN 'bad_${dt.simpleString}:$name'")
-    val uuid =
-      if (name == "event_id")
-        Some(s"WHEN $raw IS NOT NULL AND NOT $raw RLIKE '$UUID_RE' " +
-          s"THEN 'bad_uuid:$name'")
-      else None
-    val required =
-      if (REQUIRED.contains(name)) Some(s"WHEN $raw IS NULL THEN 'missing:$name'")
-      else None
-    val whens = (required ++ uuid ++ coercion).mkString(" ")
-    if (whens.isEmpty) "CAST(NULL AS STRING)" else s"CASE $whens END"
+  private case class FieldMeta(n: String, t: String, req: Boolean)
+
+  /** One literal struct per TSV position: name, `simpleString` type, required. */
+  private val fieldMeta: Column = typedLit(FIELDS.map { case (n, t) =>
+    FieldMeta(n, t.simpleString, REQUIRED.contains(n))
+  })
+
+  /** Error label of raw field `x` described by `m`, NULL when it is fine. */
+  private def fieldCheck(x: Column, m: Column): Column = {
+    val coercionFails = FIELDS.map(_._2).distinct.filter(_ != StringType)
+      .map(dt => m("t") === dt.simpleString && typed(dt, x).isNull).reduce(_ || _)
+    when(x.isNull, when(m("req"), concat(lit("missing:"), m("n"))))
+      .when(m("t") === "string",
+        when(m("n") === "event_id" && !x.rlike(UUID_RE), lit("bad_uuid:event_id")))
+      .when(coercionFails, concat(lit("bad_"), m("t"), lit(":"), m("n")))
+  }
+
+  private val errors: Column = ParseResult.bindOnce(col("_f")) { f =>
+    when(size(f) =!= NUM_FIELDS, array(concat(lit("field_count:"), size(f).cast("string"))))
+      .otherwise(filter(zip_with(f, fieldMeta, fieldCheck), _.isNotNull))
   }
 
   /** Parse a DataFrame of raw lines (single `value` string column). */
   def parseLines(raw: DataFrame): ParseResult = {
-    val withFields = raw
-      .withColumn("_f", split(col("value"), "\t", -1))
-      .withColumn("_n", size(col("_f")))
-
-    val errList = FIELDS.zipWithIndex.map { case ((n, t), i) => errExpr(n, t, i) }
-    val errorsCol =
-      s"""filter(
-         |  CASE WHEN _n <> $NUM_FIELDS
-         |       THEN array(concat('field_count:', CAST(_n AS STRING)))
-         |       ELSE array(${errList.mkString(",\n    ")})
-         |  END,
-         |  x -> x IS NOT NULL)""".stripMargin
-
-    val typed = withFields.withColumn("_errors", expr(errorsCol))
-
-    val goodCols: Seq[Column] = FIELDS.zipWithIndex.map { case ((n, t), i) =>
-      expr(typedExpr(n, t, i)).as(n)
-    }
-    val good = typed
-      .filter(size(col("_errors")) === 0)
-      .select(goodCols: _*)
-
-    val bad = typed
-      .filter(size(col("_errors")) > 0)
-      .select(
-        col("value").as("line"),
-        col("_errors").as("errors"),
-        current_timestamp().as("failure_tstamp"))
-
-    ParseResult(good, bad)
+    val fields = transform(split(col("value"), "\t", -1), nullif(_, lit("")))
+    val goodCols = FIELDS.zipWithIndex.map { case ((n, t), i) => typed(t, col("_f")(i)).as(n) }
+    ParseResult.route(raw.withColumn("_f", fields).withColumn("_errors", errors), goodCols)
   }
 
   /** Read + parse a TSV path (A2). */

@@ -89,6 +89,34 @@ class ModelParquetSpec extends AnyFunSuite {
       "copyDir must copy the data file bytes unchanged")
   }
 
+  test("overwrite compresses with the codec a Spark write job picks") {
+    def codecOf(dir: String) = {
+      val f = new java.io.File(dir).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.getPath),
+        spark.sparkContext.hadoopConfiguration)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try reader.getFooter.getBlocks.get(0).getColumns.get(0).getCodec.name
+      finally reader.close()
+    }
+    val key = "spark.sql.parquet.compression.codec"
+    val prior = spark.conf.getOption(key)
+    try {
+      for ((name, codec) <- Seq("snappy" -> "SNAPPY", "none" -> "UNCOMPRESSED",
+             "uncompressed" -> "UNCOMPRESSED", "lz4_raw" -> "LZ4_RAW",
+             "gzip" -> "GZIP")) {
+        spark.conf.set(key, name)
+        val sparkDir = freshDir("codec_spark")
+        val driverDir = freshDir("codec_driver")
+        centroidsDf.coalesce(1).write.mode("overwrite").parquet(sparkDir)
+        ModelParquet.overwriteFrom(centroidsDf, driverDir)
+        assert(codecOf(sparkDir) === codec, name)
+        assert(codecOf(driverDir) === codec, name)
+      }
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("overwrite replaces prior contents (overwrite semantics)") {
     val dir = freshDir("replace")
     ModelParquet.overwriteFrom(modelDf, dir)

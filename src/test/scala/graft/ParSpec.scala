@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Par overlaps independent epoch-surface writes (guide §2.6). The safety
   * claim the epoch commit protocol leans on: EVERY task settles before
-  * run() returns, and the first failure is rethrown unwrapped — so a
+  * run() returns, and the first failure is rethrown unwrapped with the
+  * later ones suppressed on it — so a
   * manifest commit sequenced after run() can never publish a half-landed
   * epoch.
   */
@@ -29,6 +30,19 @@ class ParSpec extends AnyFunSuite {
     assert(got eq boom, "original exception, not ExecutionException")
     assert(done.contains(1) && done.contains(3),
       "siblings must settle before the failure is rethrown")
+  }
+
+  test("later sibling failures ride on the first as suppressed exceptions") {
+    val first = new IllegalStateException("first surface failed")
+    val second = new IllegalArgumentException("second surface failed")
+    val got = intercept[IllegalStateException] {
+      Par.run(spark, Seq(
+        () => { Thread.sleep(50); throw first },
+        () => (),
+        () => throw second))
+    }
+    assert(got eq first, "first failure in task order, not first to finish")
+    assert(got.getSuppressed.toSeq == Seq(second))
   }
 
   test("spark actions work from pool threads (active session pinned)") {

@@ -71,6 +71,34 @@ class EtlSpec extends AnyFunSuite {
     assert(errs.contains("field_count:132"))
   }
 
+  test("P1: each field reports its first failing check, errors in field order") {
+    import spark.implicits._
+    val pos = SnowplowSchema.FIELDS.map(_._1).zipWithIndex.toMap
+    def withFields(kvs: (String, String)*): String = {
+      val f = EtlFixtures.goodPageView.split("\t", -1)
+      kvs.foreach { case (n, v) => f(pos(n)) = v }
+      f.mkString("\t")
+    }
+    val faulty = withFields(
+      "event" -> "", "event_id" -> "not-a-uuid", "txn_id" -> "abc",
+      "br_features_pdf" -> "yes", "dvce_created_tstamp" -> "not-a-time")
+    // required wins over uuid and coercion on an empty required field
+    val missing = withFields("event_id" -> "", "collector_tstamp" -> "")
+    val fields = EtlFixtures.goodPageView.split("\t", -1)
+    val lines = Seq(faulty, missing, fields.init.mkString("\t"),
+      (fields :+ "extra").mkString("\t"))
+    val res = SnowplowParser.parseLines(lines.toDF("value"))
+    assert(res.good.count() == 0)
+    val errors = res.bad.collect()
+      .map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
+    assert(errors(faulty) == List(
+      "bad_timestamp:dvce_created_tstamp", "missing:event", "bad_uuid:event_id",
+      "bad_int:txn_id", "bad_boolean:br_features_pdf"))
+    assert(errors(missing) == List("missing:collector_tstamp", "missing:event_id"))
+    assert(errors(lines(2)) == List("field_count:130"))
+    assert(errors(lines(3)) == List("field_count:132"))
+  }
+
   test("P1: empty TSV fields become NULL, not empty strings") {
     val r = sp.good.filter(col("event_id") === EtlFixtures.uuidStruct).head()
     assert(r.isNullAt(r.fieldIndex("page_url")))
