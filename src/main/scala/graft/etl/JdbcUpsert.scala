@@ -3,7 +3,6 @@ package graft.etl
 import java.sql.{Connection, DriverManager, PreparedStatement, Timestamp}
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
 
@@ -24,8 +23,9 @@ import org.apache.spark.sql.types._
   *
   * Idempotency (effectively-once, I9): the key set is the primary key, so
   * replaying the same micro-batches any number of times converges to the
-  * same table state. Within one batch the frame is deduped on the key and
-  * repartitioned by it, so no two concurrent tasks race on one key.
+  * same table state. Within one batch the frame is deduped on the key;
+  * the dedup's final aggregate already clusters each key into one
+  * partition, so no two concurrent tasks race on one key.
   */
 object JdbcUpsert {
 
@@ -122,8 +122,9 @@ object JdbcUpsert {
     }
   }
 
-  /** Upsert a batch DataFrame. Dedupes on the key within the batch and
-    * repartitions by key so each key is written by exactly one task.
+  /** Upsert a batch DataFrame. Dedupes on the key within the batch; the
+    * dedup clusters by key (one shuffle, none for single-partition input),
+    * so each key is written by exactly one task.
     */
   def upsertBatch(df: DataFrame, url: String, table: String, keys: Seq[String],
       chunkSize: Int = 500): Unit = {
@@ -136,7 +137,6 @@ object JdbcUpsert {
     val stmts = dialect.statements(table, cols, keys)
 
     df.dropDuplicates(keys)
-      .repartition(keys.map(col): _*)
       .foreachPartition { rows: Iterator[Row] =>
         if (rows.nonEmpty) {
           val conn = DriverManager.getConnection(url)
@@ -152,49 +152,28 @@ object JdbcUpsert {
   }
 
   private def writeChunk(conn: Connection, stmts: Statements, chunk: Seq[Row],
-      schema: StructType, keyIdx: Seq[Int], nonKeyIdx: Seq[Int]): Unit =
-    stmts match {
-      case SingleStatement(sql) =>
-        val ps = conn.prepareStatement(sql)
-        try {
-          chunk.foreach { row =>
-            schema.fields.zipWithIndex.foreach { case (f, i) =>
-              bind(ps, i + 1, row, i, f.dataType)
-            }
-            ps.addBatch()
+      schema: StructType, keyIdx: Seq[Int], nonKeyIdx: Seq[Int]): Unit = {
+    // one batched statement over `rows`, binding the fields `idx` in order
+    def batch(sql: String, rows: Seq[Row], idx: Seq[Int]): Array[Int] = {
+      val ps = conn.prepareStatement(sql)
+      try {
+        rows.foreach { row =>
+          idx.zipWithIndex.foreach { case (i, p) =>
+            bind(ps, p + 1, row, i, schema.fields(i).dataType)
           }
-          ps.executeBatch()
-        } finally ps.close()
-
-      case UpdateThenInsert(updateSql, insertSql) =>
-        val upd = conn.prepareStatement(updateSql)
-        val missed =
-          try {
-            chunk.foreach { row =>
-              var p = 1
-              nonKeyIdx.foreach { i =>
-                bind(upd, p, row, i, schema.fields(i).dataType); p += 1
-              }
-              keyIdx.foreach { i =>
-                bind(upd, p, row, i, schema.fields(i).dataType); p += 1
-              }
-              upd.addBatch()
-            }
-            upd.executeBatch().zip(chunk).collect { case (0, row) => row }
-          } finally upd.close()
-        if (missed.nonEmpty) {
-          val ins = conn.prepareStatement(insertSql)
-          try {
-            missed.foreach { row =>
-              schema.fields.zipWithIndex.foreach { case (f, i) =>
-                bind(ins, i + 1, row, i, f.dataType)
-              }
-              ins.addBatch()
-            }
-            ins.executeBatch()
-          } finally ins.close()
+          ps.addBatch()
         }
+        ps.executeBatch()
+      } finally ps.close()
     }
+    stmts match {
+      case SingleStatement(sql) => batch(sql, chunk, schema.indices)
+      case UpdateThenInsert(updateSql, insertSql) =>
+        val missed = batch(updateSql, chunk, nonKeyIdx ++ keyIdx)
+          .zip(chunk).collect { case (0, row) => row }.toSeq
+        if (missed.nonEmpty) batch(insertSql, missed, schema.indices)
+    }
+  }
 
   /** Streaming sink: checkpointed micro-batches + key-idempotent upsert =
     * effectively-once delivery (I9). Usage:

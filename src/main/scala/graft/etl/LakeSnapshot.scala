@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{ClaimStore, FsClaimStore, IncrementalDedup}
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 /** Snapshot-atomic event lake (VERDICT r11 #1): MERGE / DELETE whose
   * touched-day set commits as ONE atomic unit, closing the crash window
@@ -53,10 +54,10 @@ import graft.ops.{ClaimStore, FsClaimStore, IncrementalDedup}
   * the same retention gate as the index vacuums (the caller promises no
   * reader outlives `retainMs`; `retainMs <= 0` forces).
   *
-  * Schema evolution (VERDICT r11 #4): merge reads stored generations with
-  * `mergeSchema` and unions by name with null-fill in BOTH directions, so
-  * a batch may ADD columns; old rows surface them as NULL, and [[read]]
-  * merges footers across generations so mixed-schema days coexist.
+  * Schema evolution (VERDICT r11 #4): merge unions stored rows and the
+  * batch by name with null-fill in BOTH directions, so a batch may ADD
+  * columns; old rows surface them as NULL, and [[read]] merges one
+  * footer per generation, on the driver, so mixed-schema days coexist.
   *
   * MERGE-ON-READ row deltas (VERDICT r12 #1): [[mergeDelta]] /
   * [[deleteKeysDelta]] commit the batch itself as a row-delta generation
@@ -609,9 +610,9 @@ object LakeSnapshot {
       s"at ${p.manifest}")
   }
 
-  /** The committed live view as one DataFrame. `mergeSchema` lets
-    * generations written before and after a schema evolution coexist;
-    * added columns surface as NULL on pre-evolution rows.
+  /** The committed live view as one DataFrame. Generations written
+    * before and after a schema evolution coexist; added columns surface
+    * as NULL on pre-evolution rows. Building it launches no Spark job.
     */
   def read(spark: SparkSession, dir: String): DataFrame =
     readView(spark, dir, liveView(spark, dir))
@@ -630,9 +631,7 @@ object LakeSnapshot {
   def readDaysAt(
       spark: SparkSession, dir: String, asOf: Int,
       days: Set[String]): DataFrame = {
-    val view = viewAt(spark, dir, asOf)
-    readDaysRaw(spark, dir, view, days)
-      .withColumn("day", col("day").cast("date"))
+    readDaysRaw(spark, dir, viewAt(spark, dir, asOf), days, "date")
   }
 
   /** The day-grain diff between two epoch-pinned views — what an
@@ -666,63 +665,99 @@ object LakeSnapshot {
   private def readView(
       spark: SparkSession, dir: String, view: LakeState): DataFrame = {
     require(view.nonEmpty, s"no committed snapshot at $dir")
-    readDaysRaw(spark, dir, view, view.days.keySet)
-      .withColumn("day", col("day").cast("date"))
+    readDaysRaw(spark, dir, view, view.days.keySet, "date")
   }
 
-  /** The union file schema of `paths` (generation leaf dirs) with every
-    * widened physical column surfaced at its WIDENED type, plus the
-    * partition columns — the explicit read schema a widened table needs:
-    * `mergeSchema` refuses int32-vs-int64 footers for the same column,
-    * while an explicit schema makes the parquet reader upcast natively
-    * (int32→long, float→double, decimal rescale — probed on Spark 4.1).
-    * One footer read per leaf dir, driver-side, ONLY when a widen
-    * binding exists — unwidened tables keep the exact pre-r17 plan.
+  /** The schema of the first data file, in path order, in the first of
+    * `dirs` that holds one: the footer schema inference reads for a
+    * directory without mergeSchema, read on the driver with no Spark job.
     */
-  private def widenedUnionSchema(
-      spark: SparkSession, paths: Seq[String],
-      widened: Map[String, String],
-      partCols: Seq[org.apache.spark.sql.types.StructField])
-      : org.apache.spark.sql.types.StructType = {
+  private[graft] def footerSchema(
+      spark: SparkSession, dirs: Seq[String])
+      : Option[org.apache.spark.sql.types.StructType] =
+    dirs.iterator.flatMap { d =>
+      fsOf(spark, d).listStatus(new Path(d)).filter { st =>
+        val n = st.getPath.getName
+        st.isFile && st.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
+      }.minByOption(_.getPath.toString)
+    }.nextOption().map(GraftBridge.parquetFileSchema(
+      spark, _, spark.sparkContext.hadoopConfiguration))
+
+  /** The file columns behind `groups` of generation leaf directories
+    * (`<root>/gen=G/day=D`), each tagged with the group that first
+    * surfaces it, from ONE footer per generation — each generation is one
+    * write job's output ([[adoptParquet]] refuses a mixed source) —
+    * merged group by group, each in path order, as schema inference
+    * would. A widened column surfaces at its WIDENED type (the parquet
+    * reader upcasts narrow files); other type conflicts fail loudly.
+    */
+  private def genSchema(
+      spark: SparkSession, groups: Seq[Seq[String]],
+      widened: Map[String, String])
+      : Seq[(Int, org.apache.spark.sql.types.StructField)] = {
     import org.apache.spark.sql.types._
-    val types = scala.collection.mutable.LinkedHashMap.empty[String, DataType]
-    paths.foreach { leaf =>
-      spark.read.parquet(leaf).schema.fields.foreach { f =>
-        types(f.name) = types.get(f.name)
-          .map(t => widerType(f.name, t, f.dataType)).getOrElse(f.dataType)
-      }
+    val merged = scala.collection.mutable.LinkedHashMap
+      .empty[String, (Int, StructField)]
+    val seen = scala.collection.mutable.Set.empty[String]
+    def genDir(leaf: String) = leaf.substring(0, leaf.lastIndexOf('/'))
+    groups.zipWithIndex.foreach { case (leaves, gi) =>
+      val byGen = leaves.filterNot(l => seen(genDir(l))).groupBy(genDir)
+      seen ++= byGen.keys
+      // unwidened reads met footers in sorted file-path order ("gen=1/"
+      // before "gen=10/"), widened ones in leaf order: keep both orders
+      val order =
+        if (widened.isEmpty) byGen.keys.toSeq.sortBy(_ + "/")
+        else leaves.map(genDir).distinct.filter(byGen.contains)
+      order.flatMap(g => footerSchema(spark, byGen(g)))
+        .foreach(_.fields.foreach { f =>
+          merged(f.name) = merged.get(f.name) match {
+            case None => (gi, f)
+            case Some((g0, prev)) => (g0,
+              if (widened.contains(f.name)) prev
+              else prev.copy(dataType =
+                widerType(f.name, prev.dataType, f.dataType, widen = false)))
+          }
+        })
     }
-    widened.foreach { case (phys, ddl) =>
-      if (types.contains(phys)) types(phys) = DataType.fromDDL(ddl)
+    merged.values.toSeq.map { case (gi, f) => (gi,
+      widened.get(f.name).fold(f)(t => f.copy(dataType = DataType.fromDDL(t))))
     }
-    StructType(types.toSeq.map { case (n, t) =>
-      StructField(n, t, nullable = true) } ++ partCols)
   }
 
-  /** Resolve two file types observed for the SAME column to the wider
-    * one — the only way footers legitimately disagree is a widening
-    * commit (narrow files predate it), so the wide type always reads
-    * both. Evolved struct columns union by field name (mergeSchema's
-    * rule). Anything else is a genuine conflict and fails loudly.
+  /** Resolve two file types observed for the SAME column. Evolved struct
+    * columns union by field name and collections merge element-wise
+    * (mergeSchema's rules). With `widen`, the wider of two numeric types
+    * wins — footers legitimately disagree that way only across a widening
+    * commit (narrow files predate it), so the wide type reads both.
+    * Anything else is a genuine conflict and fails loudly.
     */
   private[graft] def widerType(
       name: String,
       a: org.apache.spark.sql.types.DataType,
-      b: org.apache.spark.sql.types.DataType)
+      b: org.apache.spark.sql.types.DataType,
+      widen: Boolean = true)
       : org.apache.spark.sql.types.DataType = {
     import org.apache.spark.sql.types._
+    def wider(n: String, x: DataType, y: DataType) = widerType(n, x, y, widen)
     (a, b) match {
       case _ if a == b => a
       case (x: StructType, y: StructType) =>
         val extra = y.fields.filterNot(f => x.fieldNames.contains(f.name))
         StructType(x.fields.map(f =>
           y.fields.find(_.name == f.name)
-            .map(g => f.copy(dataType = widerType(s"$name.${f.name}",
+            .map(g => f.copy(dataType = wider(s"$name.${f.name}",
               f.dataType, g.dataType)))
             .getOrElse(f)) ++ extra)
-      case (IntegerType, LongType) | (LongType, IntegerType) => LongType
-      case (FloatType, DoubleType) | (DoubleType, FloatType) => DoubleType
-      case (f: DecimalType, t: DecimalType) if f.scale == t.scale =>
+      case (ArrayType(x, xn), ArrayType(y, yn)) =>
+        ArrayType(wider(s"$name.element", x, y), xn || yn)
+      case (MapType(xk, xv, xn), MapType(yk, yv, yn)) =>
+        MapType(wider(s"$name.key", xk, yk),
+          wider(s"$name.value", xv, yv), xn || yn)
+      case (IntegerType, LongType) | (LongType, IntegerType) if widen =>
+        LongType
+      case (FloatType, DoubleType) | (DoubleType, FloatType) if widen =>
+        DoubleType
+      case (f: DecimalType, t: DecimalType) if widen && f.scale == t.scale =>
         DecimalType(math.max(f.precision, t.precision), f.scale)
       case _ => sys.error(
         s"graft-lake: column '$name' has conflicting file types " +
@@ -731,82 +766,77 @@ object LakeSnapshot {
     }
   }
 
-  /** The folded image of `days` under `view`, `day` typed STRING — the
+  /** The folded image of `days` under `view`, `day` typed `dayType` — the
     * ONE read path every consumer (current read, time travel, CDC
     * endpoints, COW staging, OPTIMIZE) shares. Days without deltas stream
-    * straight off their base generation — no shuffle, the pre-delta plan
-    * unchanged; days with deltas fold base + deltas with a single window
-    * over (day, key): youngest commit wins per key, delete markers drop
-    * rows. Plan cost is O(requested days) on either path — only listed
-    * generation directories are ever opened. Widened tables read with an
-    * explicit union schema ([[widenedUnionSchema]]) instead of
-    * mergeSchema so mixed physical widths upcast instead of refusing.
+    * straight off their base generation — no shuffle; days with deltas
+    * fold base + deltas with a single window over (day, key): youngest
+    * commit wins per key, delete markers drop rows. Plan cost is
+    * O(requested days) on either path — only listed generation
+    * directories are ever opened — and building the frame launches no
+    * Spark job: scans carry the [[genSchema]] schema and delta rows look
+    * their fold position up in a literal map. Columns surface as a
+    * by-name union of the sides would: the first side's, then `day`
+    * (first of all when only deltas are read), then later sides' extras.
     */
   private[etl] def readDaysRaw(
       spark: SparkSession, dir: String, view: LakeState,
-      days: Set[String]): DataFrame = {
+      days: Set[String], dayType: String = "string"): DataFrame = {
     val p = LakePaths(dir)
     val sel = view.days.filter { case (d, _) => days(d) }
     require(sel.nonEmpty, s"no requested day is present at $dir")
-    val fast = sel.filter(_._2.deltas.isEmpty).toSeq.sortBy(_._1)
-    val fold = sel.filter(_._2.deltas.nonEmpty).toSeq.sortBy(_._1)
-    // widened tables read under an explicit union schema (mixed physical
-    // widths upcast); everything else keeps the exact mergeSchema plan
-    def genRead(basePath: String, paths: Seq[String]): DataFrame = {
-      val rd = spark.read.option("basePath", basePath)
-      if (view.widened.isEmpty)
-        rd.option("mergeSchema", "true").parquet(paths: _*)
-      else rd.schema(widenedUnionSchema(spark, paths, view.widened, Seq(
-        org.apache.spark.sql.types.StructField("gen",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("day",
-          org.apache.spark.sql.types.DateType))))
-        .parquet(paths: _*)
+    val (fast, fold) = sel.toSeq.sortBy(_._1).partition(_._2.deltas.isEmpty)
+    // base sides: plain days first, then DV-carrying ones
+    def split(states: Seq[(String, DayState)]) = {
+      val (dv, plain) = states.filter(_._2.base >= 0).partition(_._2.dvs.nonEmpty)
+      (plain, dv)
     }
-    def readBase(pairs: Seq[(String, Int)]): DataFrame =
-      genRead(p.data,
-        pairs.map { case (d, g) => s"${p.data}/gen=$g/day=$d" })
-        .drop("gen")
-        .withColumn("day", col("day").cast("string"))
-    // base image of `states`' days with DELETION VECTORS folded: days
-    // without DVs stream straight off their base; DV-carrying days
-    // subtract their positional tombstones with ONE broadcast anti-join
-    // on (file, row position) — no key shuffle, no window, wide rows
-    // never move (the DV selling point vs row markers)
-    def readBaseFolded(states: Seq[(String, DayState)]): DataFrame = {
-      val (dvPairs, plainPairs) = states.partition(_._2.dvs.nonEmpty)
-      val plain =
-        if (plainPairs.isEmpty) None
-        else Some(readBase(plainPairs.map { case (d, s) => (d, s.base) }))
-      val dvd =
-        if (dvPairs.isEmpty) None
+    def baseLeaves(states: Seq[(String, DayState)]) =
+      states.map { case (d, s) => s"${p.data}/gen=${s.base}/day=$d" }
+    val (fastPlain, fastDv) = split(fast)
+    val (foldPlain, foldDv) = split(fold)
+    val deltaLeaves = fold.flatMap { case (d, s) =>
+      s.deltas.map(g => s"${p.delta}/gen=$g/day=$d") }
+    val groups = Seq(fastPlain, fastDv, foldPlain, foldDv).map(baseLeaves) :+
+      deltaLeaves
+    // the scan's partition columns own `gen` and `day`: a data column of
+    // either name never surfaces (the partition value shadows it)
+    val fields = genSchema(spark, groups, view.widened)
+      .filterNot { case (_, f) => f.name == "gen" || f.name == "day" }
+    val first = groups.indexWhere(_.nonEmpty)
+    val (head, tail) = fields.map { case (gi, f) => (gi, f.name) }
+      .filterNot(_._2 == "__op")
+      .span { case (gi, _) => gi <= first && first < groups.size - 1 }
+    val outCols = head.map(_._2) ++ ("day" +: tail.map(_._2))
+    val schema = org.apache.spark.sql.types.StructType(fields.map(_._2))
+      .add("gen", "int").add("day", "date")
+    def scan(root: String, leaves: Seq[String]): DataFrame =
+      spark.read.option("basePath", root).schema(schema).parquet(leaves: _*)
+    val out = outCols.map(c =>
+      if (c == "day") col("day").cast(dayType).as("day") else col(c))
+    // the base image of `plain` + `dv` days projected to `out ++ extra`;
+    // DV-carrying days subtract their positional tombstones with ONE
+    // anti-join — no key shuffle, no window, wide rows never move (the DV
+    // selling point vs row markers)
+    def baseSide(
+        plain: Seq[(String, DayState)], dv: Seq[(String, DayState)],
+        extra: Seq[org.apache.spark.sql.Column]): Option[DataFrame] = {
+      val plainDf =
+        if (plain.isEmpty) None
+        else Some(scan(p.data, baseLeaves(plain)).select(out ++ extra: _*))
+      val dvDf =
+        if (dv.isEmpty) None
         else {
-          val base = genRead(p.data, dvPairs.map { case (d, s) =>
-              s"${p.data}/gen=${s.base}/day=$d" })
-            .withColumn("__file", col("_metadata.file_path"))
-            .withColumn("__pos", col("_metadata.row_index"))
-            .drop("gen")
-            .withColumn("day", col("day").cast("string"))
-          val dvPaths = dvPairs.flatMap { case (d, s) =>
-            s.dvs.map(g => s"${p.dv}/gen=$g/day=$d") }
-          val tomb = spark.read.option("basePath", p.dv)
-            .parquet(dvPaths: _*)
-            .select(col("file").as("__file"), col("pos").as("__pos"))
-          // broadcast only while the tombstone set is broadcast-sized;
-          // a big accumulated DV tier joins shuffled instead (p29)
-          Some(base.join(maybeBroadcast(spark, tomb, dvPaths),
-            Seq("__file", "__pos"), "left_anti")
+          val base = scan(p.data, baseLeaves(dv))
+            .select(out ++ extra ++ Seq(col("_metadata.file_path").as("__file"),
+              col("_metadata.row_index").as("__pos")): _*)
+          Some(dropTombstoned(spark, p, base, dv.flatMap { case (d, s) =>
+            s.dvs.map(g => s"${p.dv}/gen=$g/day=$d") })
             .drop("__file", "__pos"))
         }
-      (plain, dvd) match {
-        case (Some(a), Some(b)) => a.unionByName(b, allowMissingColumns = true)
-        case (Some(a), None) => a
-        case (None, b) => b.get
-      }
+      (plainDf ++ dvDf).reduceOption(_ union _)
     }
-    val fastDf =
-      if (fast.isEmpty) None
-      else Some(readBaseFolded(fast))
+    val fastDf = baseSide(fastPlain, fastDv, Nil)
     val foldDf =
       if (fold.isEmpty) None
       else {
@@ -817,37 +847,24 @@ object LakeSnapshot {
         // commit-ordered — a stager that claimed earlier can commit
         // later, so position comes from the manifest fold, never from
         // the generation number)
-        val seqRows = fold.flatMap { case (d, s) =>
-          s.deltas.zipWithIndex.map { case (g, i) => (d, g, (i + 1).toLong) } }
-        import spark.implicits._
-        val seqDf = seqRows.toDF("day", "gen", "__seq")
-        val deltaPaths = fold.flatMap { case (d, s) =>
-          s.deltas.map(g => s"${p.delta}/gen=$g/day=$d") }.distinct
-        val deltas = genRead(p.delta, deltaPaths)
-          .withColumn("day", col("day").cast("string"))
-          .join(broadcast(seqDf), Seq("day", "gen"))
-          .drop("gen")
-        val baseStates = fold.filter(_._2.base >= 0)
-        val withBase =
-          if (baseStates.isEmpty) deltas
-          else readBaseFolded(baseStates) // DVs fold below the key fold
-            .withColumn("__seq", lit(0L))
-            .withColumn("__op", lit("u"))
-            .unionByName(deltas, allowMissingColumns = true)
+        val seq = typedLit(fold.flatMap { case (d, s) =>
+          s.deltas.zipWithIndex.map { case (g, i) => s"$d/$g" -> (i + 1L) }
+        }.toMap)
+        val deltas = scan(p.delta, deltaLeaves).select(out ++ Seq(
+          element_at(seq, concat_ws("/", col("day").cast("string"),
+            col("gen").cast("string"))).as("__seq"), col("__op")): _*)
+        // DVs fold below the key fold
+        val all = (baseSide(foldPlain, foldDv,
+          Seq(lit(0L).as("__seq"), lit("u").as("__op"))) ++ Some(deltas))
+          .reduce(_ union _)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("day") +: keyParts(keyCol).map(col): _*)
           .orderBy(col("__seq").desc)
-        Some(withBase
-          .withColumn("__rn", row_number().over(w))
+        Some(all.select(col("*"), row_number().over(w).as("__rn"))
           .filter(col("__rn") === 1 && col("__op") =!= "d")
-          .drop("__rn", "__seq", "__op"))
+          .select(outCols.map(col): _*))
       }
-    val raw = (fastDf, foldDf) match {
-      case (Some(a), Some(b)) => a.unionByName(b, allowMissingColumns = true)
-      case (Some(a), None) => a
-      case (None, b) => b.get
-    }
-    toLogical(raw, view)
+    toLogical((fastDf ++ foldDf).reduce(_ union _), view)
   }
 
   /** Surface a raw (physical-named) frame through `view`'s column
@@ -1004,15 +1021,38 @@ object LakeSnapshot {
     // natural physical is taken (re-add after drop/rename) get fresh
     // physical ids, recorded in the commit row
     val (viewX, addcols) = allocatePhysicals(b, live)
-    val physMerged = toPhysical(merged, viewX)
-    microsWrite(physMerged)(_
+    writeBase(spark, p, gen, toPhysical(merged, viewX))
+    if (cdf) stageCdfMerge(spark, p, gen, stored, b, keyCol)
+    Staged(gen, base, days, Nil, cdf = cdf, addcols = addcols,
+      key = Some(keyCol))
+  }
+
+  /** Write `rows` (physical names, partitioned by `day`) as base
+    * generation `gen` and stage its file-stats and bloom sidecars.
+    */
+  private def writeBase(
+      spark: SparkSession, p: LakePaths, gen: Int, rows: DataFrame): Unit = {
+    microsWrite(rows)(_
       .write.options(BloomStats.writeOptions(spark, p.dir))
       .mode("append").partitionBy("day").parquet(s"${p.data}/gen=$gen"))
     FileStats.stage(spark, s"${p.data}/gen=$gen")
     BloomStats.stage(spark, p.dir, gen)
-    if (cdf) stageCdfMerge(spark, p, gen, stored, b, keyCol)
-    Staged(gen, base, days, Nil, cdf = cdf, addcols = addcols,
-      key = Some(keyCol))
+  }
+
+  /** The days base generation `gen` holds, for FREE from the written
+    * layout: the partitioned write creates a day directory iff that day
+    * kept ≥ 1 row, so one listing of the (invisible, single-owner) staged
+    * gen replaces a second pass over the survivors — an earlier cut
+    * localCheckpoint'ed the whole survivor set (data-sized executor
+    * storage) just to count its days.
+    */
+  private def writtenDays(
+      spark: SparkSession, p: LakePaths, gen: Int): Set[String] = {
+    val f = fsOf(spark, p.dir)
+    val genPath = new Path(s"${p.data}/gen=$gen")
+    if (!f.exists(genPath)) Set.empty
+    else f.listStatus(genPath).filter(_.isDirectory)
+      .map(_.getPath.getName.stripPrefix("day=")).toSet
   }
 
   /** Stage the write-time change rows of a merge: updates where any
@@ -1133,29 +1173,13 @@ object LakeSnapshot {
     val gen = claimGen(spark, dir, base + 1, store)
     val stored = readDaysRaw(spark, dir, live, days.toSet)
     val delKeys = b.select(keyParts(keyCol).map(col): _*).distinct()
-    val physSurv = toPhysical(
-      stored.join(delKeys, keyParts(keyCol), "left_anti"), live)
-    microsWrite(physSurv)(_
-      .write.options(BloomStats.writeOptions(spark, p.dir))
-      .mode("append").partitionBy("day").parquet(s"${p.data}/gen=$gen"))
-    FileStats.stage(spark, s"${p.data}/gen=$gen")
-    BloomStats.stage(spark, p.dir, gen)
+    writeBase(spark, p, gen, toPhysical(
+      stored.join(delKeys, keyParts(keyCol), "left_anti"), live))
     if (cdf)
       writeCdf(spark, p, gen,
         stored.join(delKeys, keyParts(keyCol), "left_semi")
           .withColumn("_change_type", lit("delete")))
-    // surviving-day census for FREE from the written layout: the
-    // partitioned write creates a day directory iff that day kept ≥ 1
-    // row, so one listing of the (invisible, single-owner) staged gen
-    // replaces a second pass over the survivors — the earlier cut
-    // localCheckpoint'ed the whole survivor set (data-sized executor
-    // storage) just to count its days
-    val f = fsOf(spark, dir)
-    val genPath = new Path(s"${p.data}/gen=$gen")
-    val surviving =
-      if (!f.exists(genPath)) Set.empty[String]
-      else f.listStatus(genPath).filter(_.isDirectory)
-        .map(_.getPath.getName.stripPrefix("day=")).toSet
+    val surviving = writtenDays(spark, p, gen)
     Staged(gen, base,
       days.filter(surviving), days.filterNot(surviving), cdf = cdf,
       key = Some(keyCol))
@@ -1374,12 +1398,7 @@ object LakeSnapshot {
       s.dvs.map(g => s"${p.dv}/gen=$g/day=$d") }
     val liveBase =
       if (priorPaths.isEmpty) baseMeta
-      else baseMeta.join(
-        maybeBroadcast(spark,
-          spark.read.option("basePath", p.dv).parquet(priorPaths: _*)
-            .select(col("file").as("__file"), col("pos").as("__pos")),
-          priorPaths),
-        Seq("__file", "__pos"), "left_anti")
+      else dropTombstoned(spark, p, baseMeta, priorPaths)
     val tomb = liveBase
       .join(b.select(keyParts(keyCol).map(col): _*).distinct(),
         keyParts(keyCol), "left_semi")
@@ -1389,16 +1408,20 @@ object LakeSnapshot {
     Staged(gen, base, days, Nil, dv = true, key = Some(keyCol))
   }
 
-  /** Broadcast `df` only while its on-disk footprint stays
-    * broadcast-sized (the session's autoBroadcastJoinThreshold, or
-    * 64 MB when unset/disabled): positional tombstones are usually
-    * tiny, but a DV tier that accumulated a big deleted set must not
-    * OOM the driver — past the bound the hint drops and Spark plans a
-    * shuffled join on (file, pos) instead (ADVICE-r13-adjacent p29
-    * hygiene: "bound the position broadcast").
+  /** `df` (carrying `__file`, `__pos`) minus the rows the deletion-vector
+    * directories `paths` tombstone: ONE anti-join on (file, row
+    * position). The tombstones broadcast only while their on-disk
+    * footprint stays broadcast-sized (the session's
+    * autoBroadcastJoinThreshold, or 64 MB when unset/disabled):
+    * positional tombstones are usually tiny, but a DV tier that
+    * accumulated a big deleted set must not OOM the driver — past the
+    * bound the hint drops and Spark plans a shuffled join on (file, pos)
+    * instead (ADVICE-r13-adjacent p29 hygiene: "bound the position
+    * broadcast").
     */
-  private def maybeBroadcast(
-      spark: SparkSession, df: DataFrame, paths: Seq[String]): DataFrame = {
+  private def dropTombstoned(
+      spark: SparkSession, p: LakePaths, df: DataFrame,
+      paths: Seq[String]): DataFrame = {
     val fs = fsOf(spark, paths.head)
     val bytes = paths.map { d =>
       val dp = new Path(d)
@@ -1411,10 +1434,14 @@ object LakeSnapshot {
       .flatMap(s => scala.util.Try(
         org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s)).toOption)
       .getOrElse(64L * 1024 * 1024)
+    val tomb = spark.read.option("basePath", p.dv)
+      .schema("file STRING, pos BIGINT").parquet(paths: _*)
+      .select(col("file").as("__file"), col("pos").as("__pos"))
     // a user who EXPLICITLY disabled broadcasts (threshold <= 0) means
     // it — never force the hint over their head (ADVICE r14); only the
     // unset/unparsable case falls back to the 64 MB bound
-    if (limit > 0L && bytes <= limit) broadcast(df) else df
+    df.join(if (limit > 0L && bytes <= limit) broadcast(tomb) else tomb,
+      Seq("__file", "__pos"), "left_anti")
   }
 
   /** Publish a staged row delta. NO overlap abort, by design: a row
@@ -1812,18 +1839,28 @@ object LakeSnapshot {
     val dayDirs = kids
       .filter(st => st.isDirectory && DayName.matches(st.getPath.getName))
     require(dayDirs.nonEmpty, s"no day=YYYY-MM-DD directories at $srcDir")
-    val badFiles = dayDirs.flatMap { d =>
-      f.listStatus(d.getPath).filter { st =>
-        val n = st.getPath.getName
-        !(n.startsWith("_") || n.startsWith(".") || n.startsWith("part-"))
-      }.map(st => s"${d.getPath.getName}/${st.getPath.getName}")
-    }
+    val files = dayDirs.flatMap(d => f.listStatus(d.getPath).filter { st =>
+      val n = st.getPath.getName
+      !(n.startsWith("_") || n.startsWith("."))
+    })
+    def rel(st: org.apache.hadoop.fs.FileStatus) =
+      s"${st.getPath.getParent.getName}/${st.getPath.getName}"
+    val badFiles = files.filterNot(_.getPath.getName.startsWith("part-"))
+      .map(rel)
     // the lake's listings (stats staging, DSv2 planning) only see
     // `part-*` data files — an adopted file outside that convention
     // would silently vanish from reads, so refuse it up front
     require(badFiles.isEmpty,
       s"data files must be named part-* (Spark's own convention) — " +
         s"found ${badFiles.sorted.take(6).mkString(", ")} at $srcDir")
+    // readers take a generation's schema from ONE of its footers
+    // (genSchema), so every adopted file must carry the same columns
+    val schemas = files.filter(_.getLen > 0).map(st => rel(st) ->
+      GraftBridge.parquetFileSchema(
+        spark, st, spark.sparkContext.hadoopConfiguration).simpleString)
+    val mixed = schemas.find(_._2 != schemas.head._2)
+    require(mixed.isEmpty, s"conversion source $srcDir mixes file " +
+      s"schemas: ${schemas.head} vs ${mixed.get} — rewrite it under one first")
     val days = dayDirs.map(_.getPath.getName.stripPrefix("day="))
       .sorted
     if (validate) {
@@ -2213,7 +2250,30 @@ object LakeSnapshot {
 
   def compactDays(
       spark: SparkSession, dir: String, days: Seq[String] = Nil,
-      store: ClaimStore = FsClaimStore): Seq[String] = {
+      store: ClaimStore = FsClaimStore): Seq[String] =
+    rewriteDays(spark, dir, days, store) { (live, touched) =>
+      toPhysical(readDaysRaw(spark, dir, live, touched.toSet), live)
+        // co-locate each day in one task → one file per day directory,
+        // with task parallelism ACROSS days (never a single global
+        // funnel); bound single-file size for huge days with
+        // spark.sql.files.maxRecordsPerFile if needed. Pending row deltas
+        // are ABSORBED here (readDaysRaw folds them), so OPTIMIZE is also
+        // the maintenance step that returns delta-heavy days to the
+        // shuffle-free fast read path.
+        .repartition(col("day"))
+    }
+
+  /** A content-identical maintenance rewrite (OPTIMIZE / ZORDER) of the
+    * live `days` (default: all): `build` turns the staging view and the
+    * touched days into the new base rows, written as ONE generation and
+    * committed CDC-silent. A day whose rows all folded away (delta
+    * deletes) writes no directory and commits as dropped — the same
+    * written-layout census as stageDelete.
+    */
+  private def rewriteDays(
+      spark: SparkSession, dir: String, days: Seq[String],
+      store: ClaimStore)(
+      build: (LakeState, Seq[String]) => DataFrame): Seq[String] = {
     val p = LakePaths(dir)
     val (base, live) = stagingSnapshot(spark, dir)
     val touched =
@@ -2221,29 +2281,8 @@ object LakeSnapshot {
        else days.filter(live.days.contains)).sorted
     if (touched.isEmpty) return Nil
     val gen = claimGen(spark, dir, base + 1, store)
-    val compacted = toPhysical(readDaysRaw(spark, dir, live, touched.toSet), live)
-      // co-locate each day in one task → one file per day directory, with
-      // task parallelism ACROSS days (never a single global funnel);
-      // bound single-file size for huge days with
-      // spark.sql.files.maxRecordsPerFile if needed. Pending row deltas
-      // are ABSORBED here (readDaysRaw folds them), so OPTIMIZE is also
-      // the maintenance step that returns delta-heavy days to the
-      // shuffle-free fast read path.
-      .repartition(col("day"))
-    microsWrite(compacted)(_
-      .write.options(BloomStats.writeOptions(spark, p.dir))
-      .mode("append").partitionBy("day")
-      .parquet(s"${p.data}/gen=$gen"))
-    FileStats.stage(spark, s"${p.data}/gen=$gen")
-    BloomStats.stage(spark, p.dir, gen)
-    // a day whose rows all folded away (delta deletes) writes no
-    // directory — the same written-layout census as stageDelete
-    val f = fsOf(spark, dir)
-    val genPath = new Path(s"${p.data}/gen=$gen")
-    val surviving =
-      if (!f.exists(genPath)) Set.empty[String]
-      else f.listStatus(genPath).filter(_.isDirectory)
-        .map(_.getPath.getName.stripPrefix("day=")).toSet
+    writeBase(spark, p, gen, build(live, touched))
+    val surviving = writtenDays(spark, p, gen)
     commit(spark, dir,
       Staged(gen, base, touched.filter(surviving), touched.filterNot(surviving),
         maint = true))
@@ -2286,50 +2325,29 @@ object LakeSnapshot {
     require(k >= 2, s"z-order needs at least 2 dimensions, got $k")
     val bits = math.min(16, 62 / k)
     val scale = (1L << bits) - 1
-    val p = LakePaths(dir)
-    val (base, live) = stagingSnapshot(spark, dir)
-    val touched =
-      (if (days.isEmpty) live.days.keys.toSeq
-       else days.filter(live.days.contains)).sorted
-    if (touched.isEmpty) return Nil
-    val gen = claimGen(spark, dir, base + 1, store)
-    val raw = readDaysRaw(spark, dir, live, touched.toSet)
-    val df = dims.zipWithIndex.foldLeft(raw) { case (d, (c, i)) =>
-      d.withColumn(s"__z$i", c.cast("long"))
+    rewriteDays(spark, dir, days, store) { (live, touched) =>
+      val raw = readDaysRaw(spark, dir, live, touched.toSet)
+      val df = dims.zipWithIndex.foldLeft(raw) { case (d, (c, i)) =>
+        d.withColumn(s"__z$i", c.cast("long"))
+      }
+      val aggs = (0 until k).flatMap(i => Seq(min(s"__z$i"), max(s"__z$i")))
+      val bounds = df.agg(aggs.head, aggs.tail: _*).head()
+      val bucketed = (0 until k).foldLeft(df) { (d, i) =>
+        val (mn, mx) = (bounds.getLong(2 * i), bounds.getLong(2 * i + 1))
+        // p12's overflow-proof bucketize: DECIMAL(38,0) multiply, integral
+        // divide, every dimension stretched to the full per-dim bit scale
+        d.withColumn(s"__b$i",
+          expr(s"(CAST(__z$i - $mn AS DECIMAL(38,0)) * $scale) div " +
+            s"${math.max(1L, mx - mn)}"))
+      }
+      bucketed
+        .withColumn("__zkey",
+          ZOrder.mortonKeyN((0 until k).map(i => col(s"__b$i")), bits))
+        .repartitionByRange(files, col("day"), col("__zkey"))
+        .sortWithinPartitions(col("day"), col("__zkey"))
+        .drop((0 until k).flatMap(i => Seq(s"__z$i", s"__b$i")) :+ "__zkey": _*)
+        .transform(toPhysical(_, live))
     }
-    val aggs = (0 until k).flatMap(i => Seq(min(s"__z$i"), max(s"__z$i")))
-    val bounds = df.agg(aggs.head, aggs.tail: _*).head()
-    val bucketed = (0 until k).foldLeft(df) { (d, i) =>
-      val (mn, mx) = (bounds.getLong(2 * i), bounds.getLong(2 * i + 1))
-      // p12's overflow-proof bucketize: DECIMAL(38,0) multiply, integral
-      // divide, every dimension stretched to the full per-dim bit scale
-      d.withColumn(s"__b$i",
-        expr(s"(CAST(__z$i - $mn AS DECIMAL(38,0)) * $scale) div " +
-          s"${math.max(1L, mx - mn)}"))
-    }
-    val zordered = bucketed
-      .withColumn("__zkey",
-        ZOrder.mortonKeyN((0 until k).map(i => col(s"__b$i")), bits))
-      .repartitionByRange(files, col("day"), col("__zkey"))
-      .sortWithinPartitions(col("day"), col("__zkey"))
-      .drop((0 until k).flatMap(i => Seq(s"__z$i", s"__b$i")) :+ "__zkey": _*)
-      .transform(toPhysical(_, live))
-    microsWrite(zordered)(_
-      .write.options(BloomStats.writeOptions(spark, p.dir))
-      .mode("append").partitionBy("day")
-      .parquet(s"${p.data}/gen=$gen"))
-    FileStats.stage(spark, s"${p.data}/gen=$gen")
-    BloomStats.stage(spark, p.dir, gen)
-    val f = fsOf(spark, dir)
-    val genPath = new Path(s"${p.data}/gen=$gen")
-    val surviving =
-      if (!f.exists(genPath)) Set.empty[String]
-      else f.listStatus(genPath).filter(_.isDirectory)
-        .map(_.getPath.getName.stripPrefix("day=")).toSet
-    commit(spark, dir,
-      Staged(gen, base, touched.filter(surviving), touched.filterNot(surviving),
-        maint = true))
-    touched
   }
 
   /** CHANGE DATA FEED: the row-level difference between two committed

@@ -2,6 +2,9 @@ package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
+
+import graft.functions.ReferencedConstant
 
 /** Parsed feed split into loadable rows and dead-lettered bad rows (A9).
   * Bad rows are never dropped: they carry the raw line plus the reasons.
@@ -21,7 +24,9 @@ object ParseResult {
     transform(array(bound), body)(0)
 
   /** Route `typed` on its `_errors` array: rows with no errors project
-    * `goodCols`; the rest become (line, errors, failure_tstamp).
+    * `goodCols`; the rest become (line, errors, failure_tstamp). The
+    * pass's one instant is referenced, not inlined, so repeated passes
+    * reuse one compiled class.
     */
   private[etl] def route(typed: DataFrame, goodCols: Seq[Column]): ParseResult =
     ParseResult(
@@ -29,5 +34,6 @@ object ParseResult {
       typed.filter(size(col("_errors")) > 0).select(
         col("value").as("line"),
         col("_errors").as("errors"),
-        current_timestamp().as("failure_tstamp")))
+        GraftBridge.column(ReferencedConstant(
+          GraftBridge.expression(current_timestamp()))).as("failure_tstamp")))
 }

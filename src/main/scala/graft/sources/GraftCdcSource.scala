@@ -54,8 +54,8 @@ import graft.etl.LakeSnapshot
   * window containing a sidecar-less (cdf=false) mutation fails the
   * batch rather than silently skipping its changes.
   *
-  * The schema is inferred from the existing sidecars (mergeSchema
-  * across generations) + `_commit_epoch INT`; the sidecar writer pins
+  * The schema is inferred from the existing sidecars (one footer per
+  * generation, merged) + `_commit_epoch INT`; the sidecar writer pins
   * TIMESTAMP_MICROS so the standalone reader never meets INT96.
   */
 class GraftCdcSource extends TableProvider with DataSourceRegister {
@@ -89,12 +89,13 @@ object GraftCdcSource {
     StructType(fields :+ StructField("_commit_epoch", IntegerType))
   }
 
-  /** Sidecar schema inference that never routes through partition
-    * discovery: reads the `gen=G` leaf directories as explicit input
-    * paths, so the `gen` directory key can't leak into the feed schema
-    * as a spurious always-null data column, and a real table column
-    * named `gen` can't collide with it (ADVICE r15). mergeSchema still
-    * unions evolved footers across generations.
+  /** Sidecar schema inference from one footer per `gen=G` directory,
+    * read on the driver ([[LakeSnapshot.footerSchema]]) — never through
+    * partition discovery, so the `gen` directory key can't leak into the
+    * feed schema as a spurious always-null data column, and a real table
+    * column named `gen` can't collide with it (ADVICE r15). Evolved
+    * footers union across generations, and sidecars written before and
+    * after a TYPE WIDENING commit resolve to the wider type (r17).
     */
   private[sources] def sidecarFields(
       spark: SparkSession, cdfRoot: String): Seq[StructField] = {
@@ -108,26 +109,14 @@ object GraftCdcSource {
       .filter(s => s.isDirectory && s.getPath.getName.matches("gen=\\d+"))
       .sortBy(_.getPath.getName.stripPrefix("gen=").toInt)
       .map(_.getPath.toString).toSeq
-    if (genDirs.isEmpty) Nil
-    else {
-      // width-tolerant union (r17): sidecars written before and after a
-      // TYPE WIDENING commit carry different physical widths for the
-      // same column — plain mergeSchema refuses int32-vs-int64; resolve
-      // to the wider type (one footer-read per generation dir,
-      // driver-side, same cost shape as mergeSchema's own inference)
-      val merged =
-        scala.collection.mutable.LinkedHashMap.empty[String, StructField]
-      genDirs.foreach { d =>
-        spark.read.parquet(d).schema.fields.foreach { f =>
-          merged(f.name) = merged.get(f.name) match {
-            case None => f
-            case Some(prev) => prev.copy(dataType =
-              LakeSnapshot.widerType(f.name, prev.dataType, f.dataType))
-          }
-        }
-      }
-      merged.values.toSeq
-    }
+    val merged =
+      scala.collection.mutable.LinkedHashMap.empty[String, StructField]
+    genDirs.flatMap(d => LakeSnapshot.footerSchema(spark, Seq(d)))
+      .foreach(_.fields.foreach { f =>
+        merged(f.name) = merged.get(f.name).fold(f)(prev => prev.copy(
+          dataType = LakeSnapshot.widerType(f.name, prev.dataType, f.dataType)))
+      })
+    merged.values.toSeq
   }
 }
 

@@ -70,4 +70,23 @@ object GraftBridge {
       .prepareWrite(session.sessionState.conf, job, schema, opts)
     job.getConfiguration
   }
+
+  /** One parquet file's Spark schema as schema inference reads its footer
+    * (row groups skipped), nullable throughout as a relation surfaces it.
+    */
+  def parquetFileSchema(
+      spark: SparkSession, file: org.apache.hadoop.fs.FileStatus,
+      conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val footer = new org.apache.parquet.hadoop.Footer(file.getPath,
+      ParquetFooterReader.readFooter(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf),
+        org.apache.parquet.format.converter.ParquetMetadataConverter
+          .SKIP_ROW_GROUPS))
+    ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(spark.asInstanceOf[
+        org.apache.spark.sql.classic.SparkSession].sessionState.conf))
+      .asNullable
+  }
 }

@@ -2,8 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path => JPath, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.TestJobs
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The r20 driver-side model parquet writer replaces `coalesce(1).write`
@@ -58,19 +58,8 @@ class ModelParquetSpec extends AnyFunSuite {
     val dir = freshDir("zero_jobs")
     val df = centroidsDf // Seq.toDF: LocalTableScan, collects without a job
     df.count() // force plan/codegen warm-up outside the measured window
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      ModelParquet.overwriteFrom(df, dir)
-      // listener events are posted async — allow the bus to drain. A job,
-      // had one launched, posts its start event within milliseconds.
-      Thread.sleep(1000)
-      assert(jobs.get() === 0, "driver-side model write must launch no job")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(TestJobs.launched(spark)(ModelParquet.overwriteFrom(df, dir)).jobs === 0,
+      "driver-side model write must launch no job")
     assert(spark.read.parquet(dir).count() === 2)
   }
 

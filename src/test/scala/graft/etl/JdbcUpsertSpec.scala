@@ -3,7 +3,10 @@ package graft.etl
 import java.sql.DriverManager
 
 import graft.TestSpark
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.TestJobs
 import org.scalatest.funsuite.AnyFunSuite
 
 /** P3/P4 on embedded Derby (SURVEY.md §2.2): upsert idempotency,
@@ -64,6 +67,30 @@ class JdbcUpsertSpec extends AnyFunSuite {
     JdbcUpsert.upsertBatch(df, url, "t", Seq("id"))
     val r = readBack(url, "t").filter(col("id") === 2).head()
     assert(r.isNullAt(r.fieldIndex("name")) && r.isNullAt(r.fieldIndex("v")))
+  }
+
+  /** Shuffle exchanges in the plans `upsertBatch` executed. */
+  private def upsertShuffles(df: org.apache.spark.sql.DataFrame, url: String): Int = {
+    val plans = TestJobs.launched(spark)(
+      JdbcUpsert.upsertBatch(df, url, "t", Seq("id"))).plans
+    assert(plans.nonEmpty, "the upsert must run a query")
+    plans.map(p => new AdaptiveSparkPlanHelper {}
+      .collect(p) { case e: ShuffleExchangeExec => e }.size).sum
+  }
+
+  test("a key present in two input partitions writes one row, through at " +
+    "most one shuffle (none for single-partition input)") {
+    val url = freshUrl("split")
+    val df = spark.sparkContext
+      .parallelize(Seq((1L, "a", 1.0), (1L, "a", 1.0), (2L, "b", 2.0)), 2)
+      .toDF("id", "name", "v")
+    assert(df.filter(col("id") === 1L).select(spark_partition_id())
+      .distinct().count() == 2, "key 1 must start in two partitions")
+    JdbcUpsert.ensureTable(url, "t", df.schema, Seq("id"))
+    assert(upsertShuffles(df, url) <= 1)
+    assert(upsertShuffles(df.coalesce(1), url) == 0)
+    assert(readBack(url, "t").orderBy("id").as[(Long, String, Double)]
+      .collect().toSeq == Seq((1L, "a", 1.0), (2L, "b", 2.0)))
   }
 
   test("Postgres dialect emits INSERT .. ON CONFLICT DO UPDATE") {

@@ -1,8 +1,11 @@
 package graft.etl
 
 import graft.TestSpark
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Expression, JsonToStructs, StringSplit}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{StructField, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan lock for the feed parsers: each line is split (Snowplow) or parsed
@@ -11,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the split array or parsed struct and inlines it at every reference; the
   * parsers bind it once in a lambda so the count cannot grow with the field
   * list. Plans come from file sources: a local relation constant-folds the
-  * parse away.
+  * parse away. A repeated dead-letter pass reuses its compiled classes.
   */
 class ParsePlanSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -31,6 +34,18 @@ class ParsePlanSpec extends AnyFunSuite {
       assert(n == 1, s"$arm: $n StringSplit in one operator")
     }
     assert(res.good.count() == 5 && res.bad.count() == 3)
+  }
+
+  test("a repeated dead-letter pass compiles no new class and keeps one " +
+    "instant per pass") {
+    def bad = SnowplowParser.read(spark, EtlFixtures.snowplowTsv()).bad
+    def instants() = bad.select(col("failure_tstamp")).distinct().collect()
+    instants()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(instants().length == 1)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before == 0)
+    assert(bad.schema("failure_tstamp") ===
+      StructField("failure_tstamp", TimestampType, nullable = false))
   }
 
   test("Adjust good and bad plans parse each line's JSON once per operator") {
