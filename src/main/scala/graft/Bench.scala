@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark harness (BASELINE.md protocol).
   *
@@ -541,20 +541,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     // Derby (pipeline suite) writes its log wherever the JVM starts; pin it
     // into target/ so the repo root stays clean (VERDICT.md r2 wrong #4).
-    System.setProperty("derby.stream.error.file", "target/derby.log")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // bench the scale-safe plan, not the single-task window (q13)
-      .config("spark.graft.rewriteGlobalTrailingWindow", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = LocalSession()
 
     // Exclude by SUITE MEMBERSHIP, not name prefix (ADVICE r2: a future
     // `simhash_*` query would silently vanish under startsWith("s")):

@@ -24,7 +24,7 @@ import org.apache.spark.sql.SparkSession
   * never publishes a half-landed epoch, exactly as in the sequential order.
   *
   * Pools may nest: a task may itself call [[run]]
-  * (CorpusPrep.buildPrepState → IncrementalDedup.buildIndex → writeEpoch).
+  * (CorpusPrep.buildPrepState → IncrementalDedup.buildIndex → EpochIndex.write).
   * Each call owns a fresh pool whose threads block only on their own
   * tasks, so nesting cannot deadlock; it only multiplies the driver
   * threads in flight.

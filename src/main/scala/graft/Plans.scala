@@ -1,15 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-dump tool for the optimization rounds: writes the
   * `.explain("formatted")` output of each named declared query (or every
   * benchable query when no names are given) to `<outDir>/<name>.txt`.
   *
   * Usage: runMain graft.Plans <outDir> [name ...]
   *
-  * The session config mirrors [[Bench]] exactly (same master, shuffle
-  * partitions, rewrite flags) so the dumped plan is the plan the bench
+  * The session is Bench's ([[LocalSession]]: same master, shuffle
+  * partitions, rewrite flags), so the dumped plan is the plan the bench
   * times. Composed lifecycle entries (index build + probe) explain the
   * FINAL returned frame only — their intermediate writes are side effects
   * the textual plan cannot carry; the bench numbers and OPTIMIZATION notes
@@ -18,21 +16,10 @@ import org.apache.spark.sql.SparkSession
 object Plans {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Plans <outDir> [queryName ...]")
-    System.setProperty("derby.stream.error.file", "target/derby.log")
     val outDir = java.nio.file.Paths.get(args.head)
     java.nio.file.Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.rewriteGlobalTrailingWindow", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = LocalSession()
 
     val excluded = (graft.streaming.StreamQueries.declared ++
       graft.etl.PipelineQueries.declared).map(_._1).toSet

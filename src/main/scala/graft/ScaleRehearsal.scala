@@ -286,20 +286,9 @@ object ScaleRehearsal {
   }
 
   def main(args: Array[String]): Unit = {
-    System.setProperty("derby.stream.error.file", "target/derby.log")
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/scale/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.rewriteGlobalTrailingWindow", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = LocalSession()
 
     // corpus reuse (r18, adjudication workflow): generation is a pure
     // seeded function of the fixtures, so an existing corpus is

@@ -1,11 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    System.setProperty("derby.stream.error.file", "target/derby.log")
     // args: <sfDir> <outDir> [queryName ...] — the optional tail is a
     // local-iteration filter only; the driver always passes exactly two.
     val Array(sfDir, outDir) = args.take(2)
@@ -15,19 +13,9 @@ object Verify {
     val unknown = only.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty,
       s"unknown query name(s) in filter: ${unknown.toSeq.sorted.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // exercise the scale-safe trailing-window rewrite through the oracle
-      // gate: q13 plans as the banded join yet must stay hash-identical
-      .config("spark.graft.rewriteGlobalTrailingWindow", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    // the trailing-window rewrite runs through the oracle gate: q13 plans
+    // as the banded join yet must stay hash-identical
+    val spark = LocalSession(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     // A crashed entry must never vanish from the round's record (VERDICT r9:
     // 36 entries silently dropped out of CORRECTNESS when loadEvents threw) —

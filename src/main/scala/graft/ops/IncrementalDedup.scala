@@ -81,22 +81,14 @@ object FsClaimStore extends ClaimStore {
   *     shingle hashes, for exact-Jaccard verification of candidates;
   *   - `members/epoch=E/` (__g, id): every corpus doc under its text-hash
   *     group, for re-expanding rep pairs to doc pairs;
-  *   - `params/epoch=E/`: an APPEND-ONLY one-row-per-commit manifest of the
-  *     build parameters (shingle_size, num_hashes, bands, pbuckets). Probe
-  *     and append REQUIRE agreement — a probe banded with different
+  *   - `params/`: the manifest, one row per commit, carrying the build
+  *     constants (shingle_size, num_hashes, bands, pbuckets). Probe and
+  *     append REQUIRE agreement — a probe banded with different
   *     parameters would silently find ~nothing, the worst possible failure
   *     mode for a dedup gate.
   *
-  * Commit protocol (ADVICE r8): every build/append writes its three data
-  * epoch directories FIRST and its `params/epoch=E` manifest row LAST, as
-  * a single file whose rename is atomic on a real filesystem. Readers
-  * consult the manifest's max committed epoch and filter every data read
-  * to `epoch <= committed` (a partition-pruned predicate), so a failure
-  * between the data writes and the manifest write leaves orphan epoch
-  * directories that probes provably IGNORE rather than a silently
-  * inconsistent index; a retried append overwrites its own epoch
-  * directories and then commits. The epoch filter also makes appends
-  * readable mid-write: concurrent probes keep seeing the previous commit.
+  * Claims, commits, tags, compaction and vacuum follow the one
+  * [[EpochIndex]] lifecycle all four index kinds share.
   *
   * The probe then does O(batch)-sized work: band the new reps, read ONLY
   * the touched `pb` partitions of the stored banding rows and semi-join
@@ -238,7 +230,7 @@ object IncrementalDedup {
       * `epoch-E.claim` created atomically-iff-absent BEFORE any data
       * lands, so each epoch directory has exactly one owner. A claim whose
       * owner dies before committing leaves an orphan epoch: readers filter
-      * to the exact COMMITTED epoch set (see [[IncrementalDedup.committed]]),
+      * to the exact COMMITTED epoch set (see [[EpochIndex.View.live]]),
       * the next claimer skips past it, and compaction+vacuum reclaims the
       * space.
       *
@@ -299,158 +291,67 @@ object IncrementalDedup {
         }
       }.sortBy(_._1)
     }
-
-    /** True iff any data file landed under `dir` (recursively) — the free
-      * replacement for an `isEmpty` Spark job after a dynamic-partitioned
-      * write, which emits zero files for an empty frame.
-      */
-    def hasDataFiles(spark: SparkSession, dir: String): Boolean = {
-      val f = fs(spark, dir)
-      val p = new Path(dir)
-      f.exists(p) && {
-        val it = f.listFiles(p, true)
-        var found = false
-        while (!found && it.hasNext)
-          found = it.next().getPath.getName.startsWith("part-")
-        found
-      }
-    }
   }
 
-  /** One committed manifest row: the build constants + the max committed
-    * epoch. Data written under a larger epoch is uncommitted (a failed or
-    * in-flight append) and must be ignored. `base` is the compaction
-    * floor: epochs below it were merged into a compacted epoch and their
-    * data directories are garbage (vacuumable) — readers see only
-    * `base <= epoch <= epoch`.
-    */
+  /** The build constants and the live epoch set of one manifest view. */
   final case class IndexMeta(
       shingleSize: Int, numHashes: Int, bands: Int, pbuckets: Int,
-      epoch: Int, base: Int = 0, epochs: Seq[Int] = Nil) {
-    /** The exact committed-and-live epoch set readers may touch. A RANGE
-      * filter (base..epoch) is not enough once concurrent appenders exist:
-      * a claimed epoch whose owner died sits INSIDE the range with data
-      * but no manifest row, and must stay invisible.
-      */
-    def live: Seq[Int] =
-      (if (epochs.isEmpty) (base to epoch) else epochs.filter(_ >= base))
+      epoch: Int, base: Int, epochs: Seq[Int]) {
+    /** See [[EpochIndex.View.live]]. */
+    def live: Seq[Int] = epochs.filter(_ >= base)
   }
 
-  private def deleteDir(spark: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    ()
-  }
+  private def index(dir: String): EpochIndex = EpochIndex(dir,
+    Seq("shingle_size", "num_hashes", "bands", "pbuckets"),
+    Seq("shingles", "banded", "members"), "pb")
 
-  /** Read the manifest: constants must agree across every committed row
-    * (they cannot drift — append validates before writing — but a
-    * hand-edited index should fail loudly, not probe disjointly).
-    */
-  private def readMeta(spark: SparkSession, p: IndexPaths): IndexMeta = {
-    val rows = Manifest.read(spark, p.params)
-    require(rows.nonEmpty, s"no committed manifest at ${p.params}")
-    val consts = rows.map { case (_, kv) =>
-      (kv("shingle_size").toInt, kv("num_hashes").toInt,
-        kv("bands").toInt, kv("pbuckets").toInt)
-    }.distinct
-    require(consts.length == 1,
-      s"manifest at ${p.params} carries conflicting build parameters: " +
-        consts.mkString(", "))
-    val (ss, nh, b, pb) = consts.head
-    IndexMeta(ss, nh, b, pb, rows.map(_._1).max,
-      rows.map(_._2.getOrElse("base", "0").toInt).max,
-      rows.map(_._1))
-  }
+  private def toMeta(v: EpochIndex.View): IndexMeta = IndexMeta(
+    v.consts("shingle_size").toInt, v.consts("num_hashes").toInt,
+    v.consts("bands").toInt, v.consts("pbuckets").toInt,
+    v.epoch, v.base, v.epochs)
 
   /** Fail loudly if the caller's parameters disagree with the build's. */
   private def requireParams(
-      spark: SparkSession, p: IndexPaths,
+      dir: String, v: EpochIndex.View,
       shingleSize: Int, numHashes: Int, bands: Int): IndexMeta = {
-    val meta = readMeta(spark, p)
+    val meta = toMeta(v)
     require((meta.shingleSize, meta.numHashes, meta.bands) ==
         ((shingleSize, numHashes, bands)),
-      s"index at ${p.dir} was built with (shingleSize, numHashes, bands) = " +
+      s"index at $dir was built with (shingleSize, numHashes, bands) = " +
         s"(${meta.shingleSize}, ${meta.numHashes}, ${meta.bands}), called " +
         s"with (${shingleSize}, ${numHashes}, ${bands}) — " +
         "mismatched banding would silently miss near-duplicates")
     meta
   }
 
-  /** Tags of every committed epoch (empty string = untagged build/append).
-    * A streaming caller tags each append with its micro-batch id, making
-    * redelivered batches provable no-ops (see [[appendToIndex]]).
+  /** Tags of every committed epoch. A streaming caller tags each append
+    * with its micro-batch id, making redelivered batches provable no-ops
+    * (see [[appendToIndex]]).
     */
   private[ops] def committedTags(spark: SparkSession, p: IndexPaths): Set[String] =
-    Manifest.read(spark, p.params)
-      .flatMap(_._2.get("tag")).filter(_.nonEmpty).toSet
+    index(p.dir).view(spark).tags
 
-  /** Epochs committed under `tag` (manifest-sized read). */
-  private def taggedEpochs(
-      spark: SparkSession, p: IndexPaths, tag: String): Seq[Int] =
-    Manifest.read(spark, p.params)
-      .collect { case (e, kv) if kv.get("tag").contains(tag) => e }
+  private def maxIdOf(obs: org.apache.spark.sql.Observation): String =
+    Option(obs.get("max_id")).map(_.toString).getOrElse("")
 
-  /** Write one epoch's worth of index data (shingles/banded/members) under
-    * `epoch=E` directories — mode=overwrite so a RETRIED epoch write cleans
-    * its own failed predecessor — and then commit it by appending the
-    * manifest row LAST.
+  /** Write one epoch of the three surfaces and commit it. The epoch's max
+    * member id rides the members write job as an observe() metric and
+    * lands in the manifest, so [[maxMemberId]] answers from manifest rows
+    * with zero jobs ("" = empty epoch).
     */
   private def writeEpoch(
-      p: IndexPaths,
+      spark: SparkSession, dir: String, epoch: Int,
       shingled: DataFrame,    // (__g, id, sh) reps to index
       members: DataFrame,     // (__g, id) docs to re-expand through
-      meta: IndexMeta,
-      tag: String = ""): Unit = {
-    val spark = shingled.sparkSession
-    // r20 (guide §2.6): the three surfaces are independent — `shingled` is
-    // already checkpointed by every caller, `banded` derives from that
-    // materialization, `members` shares nothing with either — so their
-    // write jobs overlap from a driver pool instead of serializing three
-    // scheduler round-trips per epoch. The manifest commit (the one
-    // ordering that matters) still lands strictly AFTER all of them.
-    val writeShingles = () => shingled.write.mode("overwrite")
-      .parquet(s"${p.shingles}/epoch=${meta.epoch}")
-    val writeBanded = () => {
-      val banded = bandRows(shingled, meta.numHashes, meta.bands)
-      val bandedEpoch = s"${p.banded}/epoch=${meta.epoch}"
-      banded
-        .withColumn("pb", pmod(col("bucket"), lit(meta.pbuckets)).cast("int"))
-        // co-locate each pb before the dynamic-partition write: without this
-        // every write task opens a file in every pb directory it touches (up
-        // to tasks × pbuckets tiny files per epoch), with it the write lands
-        // ~one file per pb. One small keyed shuffle of (bucket, id) buys it.
-        .repartition(col("pb"))
-        .write.partitionBy("pb").mode("overwrite").parquet(bandedEpoch)
-      // A dynamic-partitioned write of an EMPTY frame emits zero files (the
-      // plain-write empty-schema-file fallback doesn't apply to partitionBy),
-      // which would leave `banded/` schema-less and unreadable for an empty
-      // corpus or an all-known-texts append. The check is a free FS listing,
-      // not an extra Spark job; land an explicit empty, schema-bearing file
-      // under pb=0 when it trips.
-      if (!Manifest.hasDataFiles(spark, bandedEpoch))
-        banded.limit(0).write.mode("overwrite").parquet(s"$bandedEpoch/pb=0")
-    }
-    // r20 (§1 fewer jobs): the epoch's max member id rides the members
-    // write job as an observe() metric and lands in the manifest — so
-    // [[maxMemberId]] answers from manifest rows with ZERO jobs instead
-    // of a full members scan (max is retry-idempotent; "" = empty epoch)
+      consts: Map[String, String], tag: String = ""): Unit = {
     val idObs = org.apache.spark.sql.Observation()
-    val writeMembers = () => members
-      .observe(idObs, max(col("id")).as("max_id"))
-      .write.mode("overwrite")
-      .parquet(s"${p.members}/epoch=${meta.epoch}")
-    graft.Par.run(spark, Seq(writeShingles, writeBanded, writeMembers))
-    val maxId = Option(idObs.get("max_id")).map(_.toString).getOrElse("")
-    // the commit point: one flat manifest file, renamed into place only
-    // after every data directory above has fully landed
-    Manifest.write(spark, p.params, meta.epoch, Seq(
-      "shingle_size" -> meta.shingleSize.toString,
-      "num_hashes" -> meta.numHashes.toString,
-      "bands" -> meta.bands.toString,
-      "pbuckets" -> meta.pbuckets.toString,
-      "tag" -> tag,
-      "max_id" -> maxId))
+    index(dir).write(spark, epoch, Seq(
+      "shingles" -> (() => shingled),
+      "banded" -> (() =>
+        bandRows(shingled, consts("num_hashes").toInt, consts("bands").toInt)
+          .withColumn("pb", pmod(col("bucket"), lit(consts("pbuckets").toInt)).cast("int"))),
+      "members" -> (() => members.observe(idObs, max(col("id")).as("max_id")))))
+    index(dir).commit(spark, epoch, consts, "tag" -> tag, "max_id" -> maxIdOf(idObs))
   }
 
   /** Build the index from a corpus and persist it under `dir` (replacing
@@ -467,23 +368,24 @@ object IncrementalDedup {
       pbuckets: Int = 16): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     require(pbuckets > 0, "pbuckets must be positive")
-    val p = IndexPaths(dir)
     val spark = df.sparkSession
-    deleteDir(spark, dir)
+    index(dir).clear(spark)
     val shingled = Dedup.shingledReps(df, idCol, textCol, shingleSize)
       .localCheckpoint(true)
     val members = df.select(xxhash64(col(textCol)).as("__g"), col(idCol).as("id"))
-    writeEpoch(p, shingled, members,
-      IndexMeta(shingleSize, numHashes, bands, pbuckets, epoch = 0))
+    writeEpoch(spark, dir, 0, shingled, members, Map(
+      "shingle_size" -> shingleSize.toString,
+      "num_hashes" -> numHashes.toString,
+      "bands" -> bands.toString,
+      "pbuckets" -> pbuckets.toString))
   }
 
   /** Fold a deduped batch into the index (the `ivfAdd` analog): all batch
     * docs join `members/`; only reps whose text-hash group is NOT already
     * indexed add `shingles/` + `banded/` rows — an already-known text
     * gains members, never a second rep, so later probes can't double-emit
-    * through two reps of one group. Writes one new epoch and commits it
-    * via the manifest (see the commit protocol above); the corpus is never
-    * re-read or re-shingled.
+    * through two reps of one group. Writes one claimed epoch and commits it
+    * ([[EpochIndex]]); the corpus is never re-read or re-shingled.
     *
     * A non-empty `tag` makes the append IDEMPOTENT under redelivery: if a
     * committed epoch already carries this tag, the call is a no-op. This is
@@ -501,118 +403,53 @@ object IncrementalDedup {
       numHashes: Int = 64,
       bands: Int = 32,
       tag: String = ""): Unit = {
-    val p = IndexPaths(dir)
     val spark = newBatch.sparkSession
-    val meta = requireParams(spark, p, shingleSize, numHashes, bands)
-    if (tag.nonEmpty && committedTags(spark, p).contains(tag)) return
-    val known = committed(spark.read.parquet(p.shingles), meta).select(col("__g"))
+    val idx = index(dir)
+    val v = idx.view(spark)
+    requireParams(dir, v, shingleSize, numHashes, bands)
+    if (v.prior(tag).isDefined) return
+    val known = idx.committed(spark, "shingles", v.live).select(col("__g"))
     val fresh = Dedup.shingledReps(newBatch, idCol, textCol, shingleSize)
       .join(known, Seq("__g"), "left_anti")
       .localCheckpoint(true)
     val members = newBatch
       .select(xxhash64(col(textCol)).as("__g"), col(idCol).as("id"))
-    // claim BEFORE any data write: concurrent appenders get distinct
-    // epoch directories instead of interleaving files in one
-    val e = Manifest.claimEpoch(spark, p.params, meta.epoch + 1)
-    writeEpoch(p, fresh, members, meta.copy(epoch = e), tag)
+    writeEpoch(spark, dir, idx.claim(spark, v), fresh, members, v.consts, tag)
   }
 
-  /** Merge every live epoch into ONE new compacted epoch and commit it
-    * with `base` raised past everything it absorbed — the index-lifecycle
-    * closer: streaming appends (s14) add an epoch per micro-batch, and an
-    * unboundedly growing epoch list means unboundedly growing file
-    * listings and per-epoch read overhead at 100 TB. The merge is a plain
-    * union (band rows are copied as-is, never re-hashed — reps are unique
-    * across epochs by append's left_anti, so the union IS the index) and
-    * the commit is the same manifest-last protocol as build/append: a
-    * crash mid-compaction leaves an orphan epoch that probes ignore;
-    * until the manifest rename lands, readers keep the multi-epoch view.
-    * Old epoch DATA becomes garbage, removed lazily by [[vacuumIndex]];
-    * manifest files are never deleted, so append tags — and therefore
-    * redelivery no-ops — survive compaction. Compaction does break a
-    * redelivered probe's exclude-own-tag view for epochs it absorbed
-    * (the pre-append index state no longer exists); [[incrementalPairs]]
-    * fails loudly on that instead of silently self-matching, so compact
-    * at points where redelivery of absorbed batches is impossible (stream
-    * stopped, or the batch's checkpoint commit is durable).
+  /** Merge every live epoch into one compacted epoch ([[EpochIndex.compact]])
+    * — the lifecycle closer for streaming appends (s14), which add an
+    * epoch per micro-batch. The merge is a plain union: band rows are
+    * copied as-is, never re-hashed, and reps are unique across epochs by
+    * append's left_anti, so the union IS the index. The compacted epoch's
+    * max_id rides the members merge job. Compaction breaks a redelivered
+    * probe's exclude-own-tag view for the epochs it absorbed, and every
+    * probe refuses that loudly, so compact where redelivery of absorbed
+    * batches is impossible (stream stopped, or the batch's checkpoint
+    * commit is durable).
     */
   def compactIndex(spark: SparkSession, dir: String): Unit = {
-    val p = IndexPaths(dir)
-    val meta = readMeta(spark, p)
-    if (meta.epoch == meta.base) return // one live epoch: nothing to merge
-    // claimed, not read-max+1: compaction is a writer too. Compacting
-    // UNDER a concurrent appender remains out of contract (the appender's
-    // epoch would commit below the raised base and be ignored) — the claim
-    // only guarantees no two writers share an epoch directory.
-    val e = Manifest.claimEpoch(spark, p.params, meta.epoch + 1)
-    // r20 (guide §2.6): the three surface merges read and write disjoint
-    // directories — overlap them; the base-raising manifest commit below
-    // still happens strictly after all three land
-    val mergeShingles = () => committed(spark.read.parquet(p.shingles), meta)
-      .select(col("__g"), col("id"), col("sh"))
-      .write.mode("overwrite").parquet(s"${p.shingles}/epoch=$e")
-    val mergeBanded = () => {
-      val bandedEpoch = s"${p.banded}/epoch=$e"
-      committed(spark.read.parquet(p.banded), meta)
-        .select(col("bucket"), col("id"), col("pb"))
-        .repartition(col("pb"))
-        .write.partitionBy("pb").mode("overwrite").parquet(bandedEpoch)
-      if (!Manifest.hasDataFiles(spark, bandedEpoch))
-        committed(spark.read.parquet(p.banded), meta)
-          .select(col("bucket"), col("id")).limit(0)
-          .write.mode("overwrite").parquet(s"$bandedEpoch/pb=0")
-    }
-    // the compacted epoch's max_id rides the merge job too, so manifest
-    // answers stay available after compaction (r20)
     val idObs = org.apache.spark.sql.Observation()
-    val mergeMembers = () => committed(spark.read.parquet(p.members), meta)
-      .select(col("__g"), col("id"))
-      .observe(idObs, max(col("id")).as("max_id"))
-      .write.mode("overwrite").parquet(s"${p.members}/epoch=$e")
-    graft.Par.run(spark, Seq(mergeShingles, mergeBanded, mergeMembers))
-    Manifest.write(spark, p.params, e, Seq(
-      "shingle_size" -> meta.shingleSize.toString,
-      "num_hashes" -> meta.numHashes.toString,
-      "bands" -> meta.bands.toString,
-      "pbuckets" -> meta.pbuckets.toString,
-      "tag" -> "",
-      "base" -> e.toString,
-      "max_id" -> Option(idObs.get("max_id")).map(_.toString).getOrElse("")))
+    index(dir).compact(spark,
+      {
+        case ("members", rows) => rows.observe(idObs, max(col("id")).as("max_id"))
+        // compacted band files store (bucket, id), the layout of existing
+        // compacted indexes; build and append epochs store (id, bucket)
+        case ("banded", rows) => rows.select(col("bucket"), col("id"), col("pb"))
+        case (_, rows) => rows
+      },
+      () => Seq("max_id" -> maxIdOf(idObs)))
   }
 
-  /** Delete the data directories of epochs below the compaction base.
-    * Readers never consult them through the manifest, but a probe PLANNED
-    * before the compaction still scans them — so deletion is gated on
-    * `retainMs` ([[Manifest.vacuumEligible]]): absorbed data survives
-    * until the base-raising commit is at least that old, and a vacuum
-    * called earlier is a no-op. `retainMs = 0` (the default, used by the
-    * oracle lifecycle entries and tests) keeps the immediate-delete
-    * behavior; production maintenance passes a retention ≥ its longest
-    * probe runtime. A crash mid-vacuum just leaves garbage for the next
-    * pass. Manifest files are kept: they carry the append tags that make
-    * redelivery a no-op.
+  /** Delete absorbed epoch data once the compaction is `retainMs` old
+    * ([[EpochIndex.vacuum]]). `retainMs = 0` (the default, used by the
+    * oracle lifecycle entries and tests) deletes at once; production
+    * maintenance passes a retention ≥ its longest probe runtime.
     */
   def vacuumIndex(
-      spark: SparkSession, dir: String, retainMs: Long = 0L): Unit = {
-    val p = IndexPaths(dir)
-    val meta = readMeta(spark, p)
-    if (!Manifest.vacuumEligible(spark, p.params, meta.base, retainMs)) return
-    (0 until meta.base).foreach { e =>
-      deleteDir(spark, s"${p.shingles}/epoch=$e")
-      deleteDir(spark, s"${p.banded}/epoch=$e")
-      deleteDir(spark, s"${p.members}/epoch=$e")
-      // claim markers below base are spent (their data is gone either way);
-      // manifest .properties files stay — they carry redelivery tags
-      deleteDir(spark, s"${p.params}/epoch-$e.claim")
-    }
-  }
+      spark: SparkSession, dir: String, retainMs: Long = 0L): Unit =
+    index(dir).vacuum(spark, retainMs)
 
-  /** Restrict a data read to committed epochs — uncommitted (orphan)
-    * epoch directories from a failed append are pruned at the partition
-    * level and never reach a probe — minus any explicitly excluded epochs
-    * (a redelivered batch excluding its OWN earlier append, so the probe
-    * reproduces its first-delivery output bit-for-bit).
-    */
   /** Distinct committed text-hash groups (`__g = xxhash64(text)`) — the
     * EXACT-dedup membership surface a composed pipeline needs: a new doc
     * whose hash is already indexed has a smaller-id predecessor with the
@@ -623,10 +460,8 @@ object IncrementalDedup {
     */
   def knownTextHashes(
       spark: SparkSession, dir: String, excludeTag: String = ""): DataFrame = {
-    val p = IndexPaths(dir)
-    val meta = readMeta(spark, p)
-    val ex = if (excludeTag.isEmpty) Nil else taggedEpochs(spark, p, excludeTag)
-    committed(spark.read.parquet(p.members), meta, ex)
+    val v = index(dir).view(spark)
+    index(dir).committed(spark, "members", v.liveExcept(excludeTag))
       .select(col("__g")).distinct()
   }
 
@@ -637,36 +472,23 @@ object IncrementalDedup {
     * `require` that against this value and fail loudly instead of
     * silently flipping a keep/drop decision ([[CorpusPrep.prepareBatch]]).
     *
-    * r20 (§1 fewer jobs): answered from per-epoch `max_id` manifest
-    * values (recorded by the write/merge jobs' observe() metrics) — the
-    * exact same number the members scan computed, with ZERO jobs. The
-    * column-pruned scan remains as the fallback for any pre-r20 index
-    * whose manifest rows lack the key, so the value is identical either
-    * way — manifest values are a cache of the write-time max, never a
-    * correctness input of their own.
+    * Answered from the per-epoch `max_id` manifest values (recorded by the
+    * write/merge jobs' observe() metrics) with zero jobs. The
+    * column-pruned members scan remains for an index whose manifest rows
+    * lack the key, so the value is identical either way.
     */
   def maxMemberId(
       spark: SparkSession, dir: String, excludeTag: String = ""): Long = {
-    val p = IndexPaths(dir)
-    val meta = readMeta(spark, p)
-    val ex = if (excludeTag.isEmpty) Nil else taggedEpochs(spark, p, excludeTag)
-    val keep = meta.live.filterNot(ex.contains(_))
-    val byEpoch = Manifest.read(spark, p.params).toMap
-    val recorded = keep.map(e => byEpoch.get(e).flatMap(_.get("max_id")))
+    val v = index(dir).view(spark)
+    val keep = v.liveExcept(excludeTag)
+    val byEpoch = v.rows.toMap
+    val recorded = keep.map(e => byEpoch(e).get("max_id"))
     if (recorded.nonEmpty && recorded.forall(_.isDefined)) {
       val finite = recorded.flatten.filter(_.nonEmpty).map(_.toLong)
       if (finite.nonEmpty) return finite.max
     }
-    committed(spark.read.parquet(p.members), meta, ex)
+    index(dir).committed(spark, "members", keep)
       .agg(max(col("id"))).head().getLong(0)
-  }
-
-  private def committed(
-      df: DataFrame, meta: IndexMeta, exclude: Seq[Int] = Nil): DataFrame = {
-    // exact committed set, not base..epoch: a concurrent claimer that died
-    // mid-append leaves data inside the range with no manifest row
-    val keep = meta.live.filterNot(exclude.contains(_))
-    df.where(col("epoch").isin(keep: _*))
   }
 
   /** The probe-surface read: committed banding rows for ONLY the touched
@@ -678,12 +500,12 @@ object IncrementalDedup {
   private[ops] def prunedBanded(
       spark: SparkSession, p: IndexPaths, meta: IndexMeta,
       touchedPb: Seq[Int], exclude: Seq[Int] = Nil): DataFrame =
-    committed(spark.read.parquet(p.banded), meta, exclude)
+    index(p.dir).committed(spark, "banded", meta.live.filterNot(exclude.contains))
       .where(col("pb").isin(touchedPb: _*))
       .select(col("bucket"), col("id"))
 
   private[ops] def metaOf(spark: SparkSession, dir: String): IndexMeta =
-    readMeta(spark, IndexPaths(dir))
+    toMeta(index(dir).view(spark))
 
   private def bandRows(shingled: DataFrame, numHashes: Int, bands: Int): DataFrame =
     shingled
@@ -719,14 +541,10 @@ object IncrementalDedup {
       excludeTag: String = ""): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val p = IndexPaths(indexDir)
-    val meta = requireParams(spark, p, shingleSize, numHashes, bands)
-    val excluded =
-      if (excludeTag.isEmpty) Nil else taggedEpochs(spark, p, excludeTag)
-    require(excluded.forall(_ >= meta.base),
-      s"epochs tagged '$excludeTag' were absorbed by a compaction (base = " +
-        s"${meta.base}) — the pre-append index state no longer exists, so " +
-        "this redelivered probe cannot reproduce its first-delivery view; " +
-        "compact only when redelivery of absorbed batches is impossible")
+    val v = index(indexDir).view(spark)
+    val meta = requireParams(indexDir, v, shingleSize, numHashes, bands)
+    val excluded = v.exclude(excludeTag)
+    val keep = v.live.filterNot(excluded.contains)
 
     // Fresh (batch) side — same collapse-first pipeline as the batch op.
     // r20 (guide §2.6): the members and shingled-reps materializations are
@@ -781,7 +599,7 @@ object IncrementalDedup {
       Dedup.lshCandidates(banded, maxBucket, requireNewCol = Some("_new"))
 
     // Exact verify on stored + fresh shingle sets (shared kernel path).
-    val oldShingled = committed(spark.read.parquet(p.shingles), meta, excluded)
+    val oldShingled = index(indexDir).committed(spark, "shingles", keep)
     val sets = oldShingled.select(col("id"), col("sh"))
       .unionAll(newShingled.select(col("id"), col("sh")))
     val repPairs = Dedup.verifyJaccard(candidates, sets, threshold)
@@ -794,7 +612,7 @@ object IncrementalDedup {
       .select(col("id").as("rep"), col("__g"), lit(0).as("_s"))
       .unionAll(newShingled
         .select(col("id").as("rep"), col("__g"), lit(1).as("_s")))
-    val members = committed(spark.read.parquet(p.members), meta, excluded)
+    val members = index(indexDir).committed(spark, "members", keep)
       .select(col("__g"), col("id"), lit(0).as("_s"))
       .unionAll(newMembers.select(col("__g"), col("id"), lit(1).as("_s")))
     val cross = repPairs

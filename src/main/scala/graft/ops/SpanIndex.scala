@@ -3,14 +3,10 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
-import graft.ops.IncrementalDedup.Manifest
 
 /** Persisted SPAN-HASH index — k33's ExactSubstr-style duplicated-span
-  * detection made incremental, the fourth index kind next to the text
-  * MinHash (k19), sign-LSH cosine (k21), and IVF (k3d) indexes, riding the
-  * SAME epoch/claim/manifest protocol ([[IncrementalDedup.Manifest]]):
-  * data first, flat `epoch-E.properties` commit LAST, O_EXCL epoch claims
-  * for concurrent writers, tag-idempotent appends, retention-gated vacuum.
+  * detection made incremental, one of the [[EpochIndex]] kinds next to
+  * the text MinHash (k19), sign-LSH cosine (k21) and IVF (k3d) indexes.
   *
   * The index stores ONLY distinct 64-bit window hashes, physically
   * partitioned `spans/epoch=E/pb=P` with `pb = h mod pbuckets` — no text,
@@ -29,62 +25,17 @@ import graft.ops.IncrementalDedup.Manifest
   */
 object SpanIndex {
 
-  final case class Paths(dir: String) {
-    def spans: String = s"$dir/spans"
-    def params: String = s"$dir/params"
+  private def index(dir: String): EpochIndex =
+    EpochIndex(dir, Seq("span_n", "pbuckets"), Seq("spans"), "pb", distinct = true)
+
+  private def requireParams(
+      spark: SparkSession, dir: String, n: Int): EpochIndex.View = {
+    val v = index(dir).view(spark)
+    require(v.consts("span_n").toInt == n,
+      s"span index at $dir was built with n=${v.consts("span_n")}, called " +
+        s"with n=$n — mismatched window length would silently miss every span")
+    v
   }
-
-  final case class Meta(
-      n: Int, pbuckets: Int, epoch: Int, base: Int, epochs: Seq[Int]) {
-    def live: Seq[Int] = epochs.filter(_ >= base)
-  }
-
-  private def deleteDir(spark: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    ()
-  }
-
-  private def readMeta(spark: SparkSession, p: Paths): Meta =
-    readMetaAt(spark, p, Int.MaxValue)
-
-  /** The manifest folded AS OF `asOf` (inclusive) — what a
-    * transaction-pinned consumer reads ([[LakeTxn]] integration): the
-    * live-epoch set and compaction base exactly as they stood at that
-    * commit. Epochs are immutable, so the view reads exactly as it
-    * committed — unless vacuum reclaimed it, which the probe checks
-    * loudly.
-    */
-  private def readMetaAt(spark: SparkSession, p: Paths, asOf: Int): Meta = {
-    val rows = Manifest.read(spark, p.params).filter(_._1 <= asOf)
-    require(rows.nonEmpty, s"no committed manifest at ${p.params}" +
-      (if (asOf != Int.MaxValue) s" as of epoch $asOf" else ""))
-    val consts = rows.map { case (_, kv) =>
-      (kv("span_n").toInt, kv("pbuckets").toInt)
-    }.distinct
-    require(consts.length == 1,
-      s"manifest at ${p.params} carries conflicting build parameters: " +
-        consts.mkString(", "))
-    Meta(consts.head._1, consts.head._2, rows.map(_._1).max,
-      rows.map(_._2.getOrElse("base", "0").toInt).max, rows.map(_._1))
-  }
-
-  private def requireParams(spark: SparkSession, p: Paths, n: Int): Meta = {
-    val meta = readMeta(spark, p)
-    require(meta.n == n,
-      s"span index at ${p.dir} was built with n=${meta.n}, called with " +
-        s"n=$n — mismatched window length would silently miss every span")
-    meta
-  }
-
-  private def committed(
-      df: DataFrame, meta: Meta, exclude: Seq[Int] = Nil): DataFrame =
-    df.where(col("epoch").isin(meta.live.filterNot(exclude.contains(_)): _*))
-
-  private def taggedEpochs(
-      spark: SparkSession, p: Paths, tag: String): Seq[Int] =
-    Manifest.read(spark, p.params)
-      .collect { case (e, kv) if kv.get("tag").contains(tag) => e }
 
   /** (id, h): one row per window position of every doc (duplicates kept —
     * span semantics). Docs shorter than `n` tokens contribute nothing.
@@ -95,43 +46,19 @@ object SpanIndex {
       explode(GraftFunctions.word_shingle_hashes_pos(col(textCol), n))
         .as("h"))
 
-  /** Write one epoch of DISTINCT window hashes. `hashes` arrives
-    * NON-distinct (raw span rows / multi-epoch union): the dedup and the
-    * pb file-sizing layout share ONE Exchange (r20 — VERDICT r19 #9).
-    * The old shape paid two — `distinct()` shuffled on hash(h), then
-    * `repartition(pb)` reshuffled on hash(pb). But pb = pmod(h, pbuckets)
-    * is a pure function of h, so partitioning by pb ALREADY co-locates
-    * equal h; deduping on (pb, h) after `repartition(pb)` is then
-    * exchange-free — HashPartitioning(pb) satisfies
-    * ClusteredDistribution(pb, h) — and identical in rows to
-    * distinct-on-h (adding a determined column to the key changes
-    * nothing). Plan: 2 Exchanges → 1, locked in SpanIndexSpec.
-    */
-  /** The fused dedup+layout frame — package-visible so SpanIndexSpec can
-    * plan-lock the single Exchange.
+  /** One epoch's DISTINCT window hashes, laid out by `pb`. `hashes`
+    * arrives NON-distinct (raw span rows); the dedup and the pb file
+    * layout share ONE Exchange: pb = pmod(h, pbuckets) is a pure function
+    * of h, so partitioning by pb already co-locates equal h, and the
+    * (pb, h) dedup after it is exchange-free and identical in rows to a
+    * distinct on h. Package-visible so SpanIndexSpec can plan-lock the
+    * single Exchange.
     */
   private[ops] def epochRows(hashes: DataFrame, pbuckets: Int): DataFrame =
-    hashes
-      .withColumn("pb", pmod(col("h"), lit(pbuckets)).cast("int"))
-      .repartition(col("pb")) // ~one file per pb, not tasks × pbuckets
-      .dropDuplicates("pb", "h")
+    EpochIndex.layout(withPb(hashes, pbuckets), "pb", distinct = true)
 
-  private def writeEpoch(
-      spark: SparkSession, p: Paths, hashes: DataFrame, meta: Meta,
-      tag: String): Unit = {
-    val epochDir = s"${p.spans}/epoch=${meta.epoch}"
-    val rows = epochRows(hashes, meta.pbuckets)
-    rows.write.partitionBy("pb").mode("overwrite").parquet(epochDir)
-    // dynamic-partitioned write of an empty frame emits zero files; land a
-    // schema-bearing empty file so the epoch stays readable
-    if (!Manifest.hasDataFiles(spark, epochDir))
-      rows.drop("pb").limit(0)
-        .write.mode("overwrite").parquet(s"$epochDir/pb=0")
-    Manifest.write(spark, p.params, meta.epoch, Seq(
-      "span_n" -> meta.n.toString,
-      "pbuckets" -> meta.pbuckets.toString,
-      "tag" -> tag))
-  }
+  private def withPb(hashes: DataFrame, pbuckets: Int): DataFrame =
+    hashes.withColumn("pb", pmod(col("h"), lit(pbuckets)).cast("int"))
 
   /** Summarize a corpus into the index (committed epoch 0), replacing any
     * previous index under `dir`. The corpus text is never needed again.
@@ -141,41 +68,41 @@ object SpanIndex {
       n: Int = 8, pbuckets: Int = 64): Unit = {
     require(n >= 1 && pbuckets > 0, "bad span-index parameters")
     val spark = df.sparkSession
-    deleteDir(spark, dir)
-    val p = Paths(dir)
-    writeEpoch(spark, p,
-      spanRows(df, idCol, textCol, n).select("h"),
-      Meta(n, pbuckets, epoch = 0, base = 0, epochs = Nil), tag = "")
+    val idx = index(dir)
+    idx.clear(spark)
+    idx.write(spark, 0,
+      Seq("spans" -> (() => withPb(spanRows(df, idCol, textCol, n).select("h"), pbuckets))))
+    idx.commit(spark, 0,
+      Map("span_n" -> n.toString, "pbuckets" -> pbuckets.toString), "tag" -> "")
   }
 
   /** Fold a batch's window hashes in as one claimed, tag-idempotent epoch.
     * Pure O(batch) write — no index read (duplicate hashes across epochs
     * are harmless under existence semantics; compaction re-distincts).
+    * A tagged redelivery returns the ALREADY-committed epoch, so a caller
+    * pinning epochs into a LakeTxn gets the same pin twice.
     */
   def appendToSpanIndex(
       batch: DataFrame, idCol: String, textCol: String, dir: String,
       n: Int = 8, tag: String = ""): Int = {
     val spark = batch.sparkSession
-    val p = Paths(dir)
-    val meta = requireParams(spark, p, n)
-    if (tag.nonEmpty) {
-      // tagged redelivery: return the ALREADY-committed epoch, so a
-      // caller pinning epochs into a LakeTxn gets the same pin twice
-      val prior = taggedEpochs(spark, p, tag)
-      if (prior.nonEmpty) return prior.max
+    val idx = index(dir)
+    val v = requireParams(spark, dir, n)
+    v.prior(tag).getOrElse {
+      val e = idx.claim(spark, v)
+      idx.write(spark, e, Seq("spans" -> (() => withPb(
+        spanRows(batch, idCol, textCol, n).select("h"), v.consts("pbuckets").toInt))))
+      idx.commit(spark, e, v.consts, "tag" -> tag)
+      e
     }
-    val e = Manifest.claimEpoch(spark, p.params, meta.epoch + 1)
-    writeEpoch(spark, p,
-      spanRows(batch, idCol, textCol, n).select("h"),
-      meta.copy(epoch = e), tag)
-    e
   }
 
   /** Per-doc span accounting for a probe batch against the index:
     * (id, n_spans, n_dup) — a position is duplicated iff its hash exists
     * in the committed index (minus `excludeTag`'s epochs — the redelivery
     * first-delivery view) or occurs ≥2 times within the batch itself.
-    * Docs with < n tokens produce no row (they have no spans).
+    * Docs with < n tokens produce no row (they have no spans). `asOf`
+    * pins the index at a committed epoch ([[EpochIndex.view]]).
     *
     * Reads ONLY the touched `pb` partitions: the touched list is bounded
     * by `pbuckets` (a build constant) — driver-resident metadata, not
@@ -186,42 +113,18 @@ object SpanIndex {
       spark: SparkSession, dir: String, batch: DataFrame,
       idCol: String, textCol: String, excludeTag: String = "",
       asOf: Int = Int.MaxValue): DataFrame = {
-    val p = Paths(dir)
-    val meta = readMetaAt(spark, p, asOf)
-    if (asOf != Int.MaxValue) {
-      // a pinned view is only as durable as vacuum retention — fail
-      // loudly if any pinned-live epoch was reclaimed, never read a
-      // silently-thinner index
-      val f = new org.apache.hadoop.fs.Path(p.spans)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      meta.live.foreach { e =>
-        require(f.exists(new org.apache.hadoop.fs.Path(
-          s"${p.spans}/epoch=$e")),
-          s"pinned epoch $e at ${p.dir} was vacuumed — the as-of view " +
-            "no longer exists (raise the retention for pinned readers)")
-      }
-    }
-    val ex =
-      if (excludeTag.isEmpty) Nil
-      else {
-        val es = taggedEpochs(spark, p, excludeTag)
-        require(es.forall(_ >= meta.base),
-          s"probe excludeTag=$excludeTag names epochs ${es.mkString(",")} " +
-            s"absorbed by compaction (base=${meta.base}) — the " +
-            "first-delivery view no longer exists; re-run from a fresh probe")
-        es
-      }
-    // r20 (§1 fewer jobs): the touched-pb set rides the checkpoint job as
-    // an observe() metric instead of a separate distinct().collect() job —
-    // same values (collect_set dedups)
+    val v = index(dir).view(spark, asOf)
+    val keep = v.liveExcept(excludeTag)
+    // the touched-pb set rides the checkpoint job as an observe() metric
+    // instead of a separate distinct().collect() job (collect_set dedups)
     val pbObs = org.apache.spark.sql.Observation()
-    val spans = spanRows(batch, idCol, textCol, meta.n)
+    val spans = spanRows(batch, idCol, textCol, v.consts("span_n").toInt)
       .observe(pbObs, collect_set(
-        pmod(col("h"), lit(meta.pbuckets)).cast("int")).as("pbs"))
+        pmod(col("h"), lit(v.consts("pbuckets").toInt)).cast("int")).as("pbs"))
       .localCheckpoint(true) // one kernel pass; reused by both arms below
     val touched = pbObs.get("pbs").asInstanceOf[Seq[Any]]
       .map(_.asInstanceOf[Number].intValue).toSeq
-    val idx = committed(spark.read.parquet(p.spans), meta, ex)
+    val idx = index(dir).committed(spark, "spans", keep)
       .where(col("pb").isin(touched: _*))
       .select(col("h"), lit(1L).as("__in_idx"))
     val withinDup = spans.groupBy("h").agg(count(lit(1)).as("__bc"))
@@ -235,48 +138,16 @@ object SpanIndex {
         sum(when(col("__dup"), 1L).otherwise(0L)).as("n_dup"))
   }
 
-  /** Merge every live epoch into one distinct compacted epoch; commit with
-    * `base` raised. Same contract as the other three indexes: crash
-    * mid-compaction leaves an orphan epoch readers ignore; manifest files
-    * (and with them append tags) survive.
+  /** Merge every live epoch into one compacted epoch ([[EpochIndex.compact]]).
+    * The stored pb is pmod(h, pbuckets) for every epoch, so the write's
+    * (pb, h) dedup re-distincts across epochs behind the one layout
+    * shuffle.
     */
-  def compactSpanIndex(spark: SparkSession, dir: String): Unit = {
-    val p = Paths(dir)
-    val meta = readMeta(spark, p)
-    if (meta.epoch == meta.base) return
-    val e = Manifest.claimEpoch(spark, p.params, meta.epoch + 1)
-    // same 1-Exchange dedup+layout fusion as writeEpoch (r20): the stored
-    // pb IS pmod(h, pbuckets) for every committed epoch (pbuckets is a
-    // build constant), so re-partitioning by it and deduping on (pb, h)
-    // re-distincts across epochs without a second shuffle — and without
-    // recomputing pmod
-    val merged = committed(spark.read.parquet(p.spans), meta)
-      .select(col("h"), col("pb").cast("int").as("pb"))
-      .repartition(col("pb"))
-      .dropDuplicates("pb", "h")
-    val epochDir = s"${p.spans}/epoch=$e"
-    merged.write.partitionBy("pb").mode("overwrite").parquet(epochDir)
-    if (!Manifest.hasDataFiles(spark, epochDir))
-      merged.drop("pb").limit(0)
-        .write.mode("overwrite").parquet(s"$epochDir/pb=0")
-    Manifest.write(spark, p.params, e, Seq(
-      "span_n" -> meta.n.toString,
-      "pbuckets" -> meta.pbuckets.toString,
-      "tag" -> "",
-      "base" -> e.toString))
-  }
+  def compactSpanIndex(spark: SparkSession, dir: String): Unit =
+    index(dir).compact(spark)
 
-  /** Delete absorbed epoch data (retention-gated like the other indexes);
-    * manifests and tags survive.
-    */
+  /** Delete absorbed epoch data ([[EpochIndex.vacuum]]). */
   def vacuumSpanIndex(
-      spark: SparkSession, dir: String, retainMs: Long = 0L): Unit = {
-    val p = Paths(dir)
-    val meta = readMeta(spark, p)
-    if (!Manifest.vacuumEligible(spark, p.params, meta.base, retainMs)) return
-    (0 until meta.base).foreach { e =>
-      deleteDir(spark, s"${p.spans}/epoch=$e")
-      deleteDir(spark, s"${p.params}/epoch-$e.claim")
-    }
-  }
+      spark: SparkSession, dir: String, retainMs: Long = 0L): Unit =
+    index(dir).vacuum(spark, retainMs)
 }
