@@ -799,8 +799,9 @@ object LakeSnapshot {
       s.deltas.map(g => s"${p.delta}/gen=$g/day=$d") }
     val groups = Seq(fastPlain, fastDv, foldPlain, foldDv).map(baseLeaves) :+
       deltaLeaves
-    // the scan's partition columns own `gen` and `day`: a data column of
-    // either name never surfaces (the partition value shadows it)
+    // the scan's partition columns own `gen` and `day`: a data column
+    // stored under either name never surfaces (the partition value
+    // shadows it), so writes store a logical `gen` under a fresh name
     val fields = genSchema(spark, groups, view.widened)
       .filterNot { case (_, f) => f.name == "gen" || f.name == "day" }
     val first = groups.indexWhere(_.nonEmpty)
@@ -908,14 +909,14 @@ object LakeSnapshot {
 
   /** Fresh physical names for batch logical columns whose natural names
     * are TAKEN by the mapping (a name re-added after a drop, or shadowed
-    * by a rename): `name__2`, `name__3`, ... Returns the view extended
-    * with the allocations (so [[toPhysical]] binds) plus the
-    * physical→logical pairs the commit row must record.
+    * by a rename) or shadowed on read (`gen`): `name__2`, `name__3`, ...
+    * Returns the view extended with the allocations (so [[toPhysical]]
+    * binds) plus the physical→logical pairs the commit row must record.
     */
   private def allocatePhysicals(
       b: DataFrame, view: LakeState): (LakeState, Seq[(String, String)]) = {
     val needs = b.columns.toSeq.filter(c =>
-      c != "day" && !c.startsWith("__") && view.physicalFor(c).isEmpty)
+      c != "day" && !c.startsWith("__") && view.physicalFor(c).forall(shadowed))
     if (needs.isEmpty) return (view, Nil)
     val taken = scala.collection.mutable.Set.empty[String]
     taken ++= view.colmap.keys
@@ -973,6 +974,23 @@ object LakeSnapshot {
     }
     -1 // unreachable
   }
+
+  /** Whether a physical column name is shadowed on read: `gen` names the
+    * generation directories (`data/gen=G/`), and the partition value wins
+    * over a stored column of that name on every read and compaction.
+    */
+  private def shadowed(physical: String): Boolean = physical.equalsIgnoreCase("gen")
+
+  /** Refuse, before anything is staged, a write whose stored columns
+    * include a shadowed name. Merges and [[addColumnBinding]] never need
+    * this: they store a logical `gen` under a fresh physical name.
+    */
+  private[graft] def requireNoGenColumn(physical: Seq[String], dir: String): Unit =
+    require(!physical.exists(shadowed),
+      s"a data column stored as 'gen' at $dir would be shadowed by the " +
+        "gen=G generation directories and read back as the generation " +
+        "number — merge it or bind it with addColumnBinding first, which " +
+        "store it under a fresh physical name")
 
   /** Stage a MERGE: write the post-merge generation for every touched day
     * (one partitioned append; nothing visible until [[commit]]). Touched
@@ -1855,12 +1873,13 @@ object LakeSnapshot {
         s"found ${badFiles.sorted.take(6).mkString(", ")} at $srcDir")
     // readers take a generation's schema from ONE of its footers
     // (genSchema), so every adopted file must carry the same columns
-    val schemas = files.filter(_.getLen > 0).map(st => rel(st) ->
-      GraftBridge.parquetFileSchema(
-        spark, st, spark.sparkContext.hadoopConfiguration).simpleString)
+    val fileSchemas = files.filter(_.getLen > 0).map(st => st ->
+      GraftBridge.parquetFileSchema(spark, st, spark.sparkContext.hadoopConfiguration))
+    val schemas = fileSchemas.map { case (st, sc) => rel(st) -> sc.simpleString }
     val mixed = schemas.find(_._2 != schemas.head._2)
     require(mixed.isEmpty, s"conversion source $srcDir mixes file " +
       s"schemas: ${schemas.head} vs ${mixed.get} — rewrite it under one first")
+    fileSchemas.headOption.foreach(f => requireNoGenColumn(f._2.fieldNames.toSeq, dir))
     val days = dayDirs.map(_.getPath.getName.stripPrefix("day="))
       .sorted
     if (validate) {
@@ -2075,7 +2094,7 @@ object LakeSnapshot {
         else Set.empty[String]
       require(!cols.contains(name), s"a live column named '$name' " +
         "already exists")
-      val phys = live.physicalFor(name).getOrElse {
+      val phys = live.physicalFor(name).filterNot(shadowed).getOrElse {
         val taken = live.colmap.keySet + name
         Iterator.from(2).map(k => s"${name}__$k").find(!taken(_)).get
       }

@@ -62,31 +62,25 @@ object CorpusPrep {
     * is eval-suite-sized at any corpus scale and broadcast.
     */
   private[ops] def deconRepetition(
-      near: DataFrame, benchHashes: DataFrame): DataFrame = {
-    // 5. decontamination (k17 ratio against the broadcast benchmark set)
-    val withSh = near
+      near: DataFrame, benchHashes: DataFrame): DataFrame =
+    // 5. decontamination (k17 ratio against the broadcast benchmark set):
+    //    one aggregate per doc that carries the doc through, so the doc is
+    //    not joined back to its hit count. A doc without shingles explodes
+    //    to no row and drops.
+    near
       .withColumn("s", Dedup.shingleHashes(col("txt"), 3))
-      .withColumn("n_sh", size(col("s")))
-    val hits = withSh
-      .select(col("doc_id"), col("n_sh"), explode(col("s")).as("h"))
+      .select(col("doc_id"), col("lang"), col("txt"), size(col("s")).as("n_sh"),
+        explode(col("s")).as("h"))
       .join(broadcast(benchHashes.withColumn("hit", lit(1L))), Seq("h"), "left")
-      .groupBy("doc_id", "n_sh")
+      .groupBy("doc_id", "lang", "txt", "n_sh")
       .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-    val decon = withSh
-      .join(hits
-        .filter(col("n_hit").cast("double") / col("n_sh") < ContaminationMax)
-        .select("doc_id"),
-        Seq("doc_id"))
-      .select(col("doc_id"), col("lang"), col("txt"))
-
-    // 6. repetition filter (k18 duplicate-bigram rule)
-    decon
+      .filter(col("n_hit").cast("double") / col("n_sh") < ContaminationMax)
+      // 6. repetition filter (k18 duplicate-bigram rule)
       .withColumn("n_tok", size(Text.tokens(col("txt"))))
       .withColumn("n_bi", size(Dedup.shingleHashes(col("txt"), 2)))
       .filter(lit(1.0) - col("n_bi").cast("double") / (col("n_tok") - 1)
         < DupBigramMax)
       .select(col("doc_id"), col("lang"), col("txt"))
-  }
 
   /** Cleaned corpus `(doc_id, lang, txt)` ready for tokenization. */
   def prepare(docs: DataFrame): DataFrame = {
@@ -106,8 +100,10 @@ object CorpusPrep {
     // 4. near dedup: drop the greater id of every >= threshold pair
     val dropNear = Dedup
       .minhashPairs(exact, "doc_id", "txt", threshold = NearDupThreshold)
-      .select(col("id_b").as("doc_id")).distinct()
+      .select(col("id_b").as("doc_id"))
+    // materialized: the frame returned below plans none of the pair search
     val near = exact.join(dropNear, Seq("doc_id"), "left_anti")
+      .localCheckpoint(true)
 
     deconRepetition(near, benchHashes)
   }
@@ -204,28 +200,40 @@ object CorpusPrep {
         "batch-by-batch in arrival order (see the k26 contract above)")
 
     val batchBench = benchShingleHashes(base.filter(col("doc_id") % 50 === 0))
-    val red = qualityRedact(base.filter(col("doc_id") % 50 =!= 0))
-
-    // 3. exact: first-per-text within the batch, then drop every text
-    //    history already carries (any indexed doc has a smaller id)
-    val exact = Dedup.exactDedup(red, Seq("txt"), Seq("doc_id"))
-      .join(IncrementalDedup.knownTextHashes(spark, idxDir, excludeTag)
-          .select(col("__g").as("__gk")),
-        xxhash64(col("txt")) === col("__gk"), "left_anti")
-      .localCheckpoint(true) // probe + anti-join below reference it
+    val exact = batchExact(spark, idxDir, base, excludeTag)
 
     // 4. near dedup through the index probe: every pair has >= 1 batch
     //    endpoint and id_a < id_b, so id_b is always the batch doc to drop
     val dropNear = IncrementalDedup
       .incrementalPairs(spark, idxDir, exact, "doc_id", "txt",
         threshold = NearDupThreshold, excludeTag = excludeTag)
-      .select(col("id_b").as("doc_id")).distinct()
+      .select(col("id_b").as("doc_id"))
+    // materialized: the frame returned below plans none of the probe
     val near = exact.join(dropNear, Seq("doc_id"), "left_anti")
+      .localCheckpoint(true)
 
-    val benchAll = spark.read.parquet(s"$stateDir/bench")
+    // the bench surface's fixed schema: reading it launches no
+    // schema-inference job
+    val benchAll = spark.read.schema("h BIGINT").parquet(s"$stateDir/bench")
       .unionAll(batchBench).distinct()
     deconRepetition(near, benchAll)
   }
+
+  /** Stages 1–3 of one batch, materialized: quality and redaction, the
+    * first doc per text within the batch, then every text history already
+    * carries dropped (any indexed doc has a smaller id). [[prepareBatch]]
+    * probes and anti-joins it; [[appendBatchToState]] indexes it. Both run
+    * this one plan, so they share its generated classes while Spark's
+    * codegen cache still holds them.
+    */
+  private def batchExact(spark: SparkSession, idxDir: String,
+      base: DataFrame, excludeTag: String): DataFrame =
+    Dedup.exactDedup(qualityRedact(base.filter(col("doc_id") % 50 =!= 0)),
+        Seq("txt"), Seq("doc_id"))
+      .join(IncrementalDedup.knownTextHashes(spark, idxDir, excludeTag)
+          .select(col("__g").as("__gk")),
+        xxhash64(col("txt")) === col("__gk"), "left_anti")
+      .localCheckpoint(true)
 
   /** Fold a processed batch into the state so the NEXT batch sees it:
     * append the batch's POST-EXACT frame to the index (the pair
@@ -247,13 +255,8 @@ object CorpusPrep {
         .contains(tag)) return
     val base = batch.select(col("doc_id"), col("lang"), col("text"))
       .localCheckpoint(true)
-    val exact = Dedup.exactDedup(
-        qualityRedact(base.filter(col("doc_id") % 50 =!= 0)),
-        Seq("txt"), Seq("doc_id"))
-      .join(IncrementalDedup.knownTextHashes(spark, idxDir)
-          .select(col("__g").as("__gk")),
-        xxhash64(col("txt")) === col("__gk"), "left_anti")
-    IncrementalDedup.appendToIndex(exact, "doc_id", "txt", idxDir, tag = tag)
+    IncrementalDedup.appendToIndex(batchExact(spark, idxDir, base, ""),
+      "doc_id", "txt", idxDir, tag = tag)
     benchShingleHashes(base.filter(col("doc_id") % 50 === 0))
       .write.mode("append").parquet(s"$stateDir/bench")
   }

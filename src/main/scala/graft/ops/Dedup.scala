@@ -169,23 +169,52 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** Exact-Jaccard verification shared by the batch and incremental LSH
-    * paths: one sorted-merge intersect kernel per candidate pair over the
-    * `(id, sh)` sets frame (|A∪B| = |A|+|B|−|A∩B| — no union array is
-    * materialized), filtered at `threshold`, jaccard rounded to 4.
+  /** Verification and re-expansion shared by the batch and incremental LSH
+    * paths → doc pairs `(id_a, id_b, jaccard)`, `id_a < id_b`.
+    *
+    *   - Verify: one sorted-merge intersect kernel per candidate rep pair
+    *     over the reps' shingle sets (|A∪B| = |A|+|B|−|A∩B| — no union
+    *     array is materialized), filtered at `threshold`, jaccard rounded
+    *     to 4.
+    *   - Re-expand: a rep expands ONLY through its own side's members
+    *     (join on `(__g, _s)`), so a text present on two sides — two reps,
+    *     identical sets, candidate J = 1.0 — expands across sides once.
+    *     Group members share one text, so they inherit their rep's Jaccard.
+    *   - Within-group pairs: every `(__g, _s)` of `selfGroups` pairs with
+    *     itself at Jaccard 1 and rides the same member expansion, keeping
+    *     only `ma < mb` (identical texts, provided the text shingles).
+    *
+    * `reps` is `(id, __g, sh, _s)`, one row per rep; `members` is
+    * `(__g, id, _s)`. Both ends of a pair join the SAME `reps` and
+    * `members` plans, so each is exchanged once and reused, and no second
+    * copy of the members is joined for the within-group pairs.
     */
-  private[graft] def verifyJaccard(
-      candidates: DataFrame, sets: DataFrame, threshold: Double): DataFrame = {
+  private[graft] def expandPairs(
+      candidates: DataFrame, reps: DataFrame, members: DataFrame,
+      selfGroups: DataFrame, threshold: Double): DataFrame = {
     val nInt = graft.functions.GraftFunctions
-      .sorted_intersect_size(col("sh_a"), col("sh_b"))
-    candidates
-      .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .withColumn("jaccard",
-        nInt.cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - nInt))
+      .sorted_intersect_size(col("a.sh"), col("b.sh"))
+    val verified = candidates
+      .join(reps.as("a"), col("id_a") === col("a.id"))
+      .join(reps.as("b"), col("id_b") === col("b.id"))
+      .select(col("a.__g").as("__ga"), col("a._s").as("_sa"),
+        col("b.__g").as("__gb"), col("b._s").as("_sb"),
+        (nInt.cast("double") / (size(col("a.sh")) + size(col("b.sh")) - nInt))
+          .as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
+      .select(col("__ga"), col("_sa"), col("__gb"), col("_sb"),
+        round(col("jaccard"), 4).as("jaccard"), lit(false).as("_self"))
+    val self = selfGroups.select(col("__g").as("__ga"), col("_s").as("_sa"),
+      col("__g").as("__gb"), col("_s").as("_sb"), lit(1.0).as("jaccard"),
+      lit(true).as("_self"))
+    verified.unionAll(self)
+      .join(members.as("ma"), col("__ga") === col("ma.__g") && col("_sa") === col("ma._s"))
+      .join(members.as("mb"), col("__gb") === col("mb.__g") && col("_sb") === col("mb._s"))
+      .filter(!col("_self") || col("ma.id") < col("mb.id"))
+      .select(
+        least(col("ma.id"), col("mb.id")).as("id_a"),
+        greatest(col("ma.id"), col("mb.id")).as("id_b"),
+        col("jaccard"))
   }
 
   /** Near-duplicate pairs by MinHash banding + exact-Jaccard verification.
@@ -244,31 +273,13 @@ object Dedup {
           .as("bucket"))
       .localCheckpoint(true)
     val candidates = lshCandidates(banded, maxBucket)
-    val repPairs =
-      verifyJaccard(candidates, shingled.select(col("id"), col("sh")), threshold)
-
-    // Re-expansion through the exact-hash groups. All joins are slim and
-    // keyed; output order of an expanded pair is re-normalized to
-    // id_a < id_b (group members need not straddle their reps' order).
-    val repOf = shingled.select(col("id").as("rep"), col("__g"))
-    val cross = repPairs
-      .join(repOf.select(col("rep").as("id_a"), col("__g").as("__ga")), Seq("id_a"))
-      .join(repOf.select(col("rep").as("id_b"), col("__g").as("__gb")), Seq("id_b"))
-      .join(members.select(col("__g").as("__ga"), col("id").as("ma")), Seq("__ga"))
-      .join(members.select(col("__g").as("__gb"), col("id").as("mb")), Seq("__gb"))
-      .select(
-        least(col("ma"), col("mb")).as("id_a"),
-        greatest(col("ma"), col("mb")).as("id_b"),
-        col("jaccard"))
-    // within-group pairs: identical texts are Jaccard exactly 1, provided
-    // the text shingles at all (same rule as the un-collapsed pipeline)
-    val shMembers = members.join(shingled.select(col("__g")), Seq("__g"))
-    val within = shMembers.as("x")
-      .join(shMembers.as("y"),
-        col("x.__g") === col("y.__g") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-        lit(1.0).as("jaccard"))
-    cross.unionAll(within)
+    // one side (_s = 0): every rep re-expands through the exact-hash
+    // groups, and every shingled group also yields its within-group pairs
+    expandPairs(candidates,
+      shingled.select(col("id"), col("__g"), col("sh"), lit(0).as("_s")),
+      members.withColumn("_s", lit(0)),
+      shingled.select(col("__g"), lit(0).as("_s")),
+      threshold)
   }
 
   // --- Exact similarity join (prefix filtering) ----------------------------

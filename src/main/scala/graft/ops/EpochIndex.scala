@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.GraftBridge
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import graft.ops.IncrementalDedup.Manifest
 
@@ -94,10 +96,35 @@ private[ops] final case class EpochIndex(
     Manifest.claimEpoch(spark, params, v.epoch + 1)
 
   /** A surface's rows restricted to `epochs` — a partition filter, so the
-    * scan never lists an uncommitted or absorbed epoch.
+    * scan never reads an uncommitted or absorbed epoch. The frame is
+    * planned without a Spark job: the schema is one footer's, read on the
+    * driver (every epoch of a surface is written from one schema, an empty
+    * epoch included), plus the int `epoch` and, on a partitioned surface,
+    * the int partition column — the types schema inference gives them.
     */
   def committed(spark: SparkSession, surface: String, epochs: Seq[Int]): DataFrame =
-    spark.read.parquet(path(surface)).where(col("epoch").isin(epochs: _*))
+    spark.read.schema(schemaOf(spark, surface, epochs)).parquet(path(surface))
+      .where(col("epoch").isin(epochs: _*))
+
+  /** The schema of the first data file found in `epochs` (ascending), else
+    * anywhere in the surface.
+    */
+  private def schemaOf(spark: SparkSession, surface: String,
+      epochs: Seq[Int]): StructType = {
+    val f = fs(spark)
+    val file = (epochs.sorted.map(e => s"${path(surface)}/epoch=$e") :+ path(surface))
+      .iterator.map(new Path(_)).filter(f.exists).flatMap { d =>
+        val it = f.listFiles(d, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      }.find(st => st.getPath.getName.startsWith("part-") && st.getLen > 0)
+      .getOrElse(throw new IllegalArgumentException(
+        s"no data file under ${path(surface)}"))
+    val partitioned = file.getPath.getParent.getName.startsWith(s"$part=")
+    val data = GraftBridge.parquetFileSchema(
+      spark, file, spark.sparkContext.hadoopConfiguration)
+    StructType(data.fields ++ ("epoch" +: (if (partitioned) Seq(part) else Nil))
+      .map(StructField(_, IntegerType)))
+  }
 
   /** Delete the whole index (a build replaces any index under `dir`). */
   def clear(spark: SparkSession): Unit = { fs(spark).delete(new Path(dir), true); () }

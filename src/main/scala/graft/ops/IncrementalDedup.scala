@@ -93,10 +93,11 @@ object FsClaimStore extends ClaimStore {
   * The probe then does O(batch)-sized work: band the new reps, read ONLY
   * the touched `pb` partitions of the stored banding rows and semi-join
   * the exact buckets, pair within capped buckets requiring ≥ 1 new
-  * endpoint (shared [[Dedup.lshCandidates]]), verify on the stored + fresh
-  * shingle sets (shared [[Dedup.verifyJaccard]]), and re-expand
-  * side-locally (a rep expands only through its own batch's members, so a
-  * text present in both corpus and batch can never double-emit a pair).
+  * endpoint (shared [[Dedup.lshCandidates]]), then verify on the stored +
+  * fresh shingle sets and re-expand side-locally (shared
+  * [[Dedup.expandPairs]]: a rep expands only through its own batch's
+  * members, so a text present in both corpus and batch can never
+  * double-emit a pair).
   * Output is identical to what a full corpus+batch [[Dedup.minhashPairs]]
   * run emits for pairs involving ≥ 1 batch doc — that equivalence is k19's
   * DuckDB brute-force oracle and IncrementalDedupSpec's property.
@@ -585,12 +586,9 @@ object IncrementalDedup {
     // exists to avoid.
     val touchedPb = pbObs.get("pbs").asInstanceOf[Seq[Any]]
       .map(_.asInstanceOf[Number].intValue).toSeq.sorted
-    val touched = newBanded.select("bucket").distinct()
-    // unionAll is positional — pin (bucket, id) on both sides (the using-
-    // column join moves `bucket` first on the probe side).
+    // unionAll is positional: both sides are (bucket, id)
     val oldBanded = prunedBanded(spark, p, meta, touchedPb, excluded)
-      .join(touched, Seq("bucket"))
-      .select(col("bucket"), col("id"))
+      .join(newBanded.select("bucket"), Seq("bucket"), "left_semi")
     val banded = oldBanded.withColumn("_new", lit(false))
       .unionAll(newBanded.select(col("bucket"), col("id"))
         .withColumn("_new", lit(true)))
@@ -598,44 +596,19 @@ object IncrementalDedup {
     val candidates =
       Dedup.lshCandidates(banded, maxBucket, requireNewCol = Some("_new"))
 
-    // Exact verify on stored + fresh shingle sets (shared kernel path).
-    val oldShingled = index(indexDir).committed(spark, "shingles", keep)
-    val sets = oldShingled.select(col("id"), col("sh"))
-      .unionAll(newShingled.select(col("id"), col("sh")))
-    val repPairs = Dedup.verifyJaccard(candidates, sets, threshold)
-
-    // Side-local re-expansion: a rep expands ONLY through its own side's
-    // members (join on (__g, side)), so a text that exists in both corpus
-    // and batch — two reps, identical sets, candidate J = 1.0 — expands to
-    // corpus×batch pairs exactly once.
-    val repOf = oldShingled
-      .select(col("id").as("rep"), col("__g"), lit(0).as("_s"))
+    // Verify on the stored + fresh shingle sets and re-expand side-locally
+    // (shared kernel path): one side-tagged rep frame and one member frame,
+    // each read once. Within-batch identical texts are the only
+    // within-group pairs with a new endpoint (corpus-internal ones have
+    // none), so only the batch's groups pair with themselves.
+    val reps = index(indexDir).committed(spark, "shingles", keep)
+      .select(col("id"), col("__g"), col("sh"), lit(0).as("_s"))
       .unionAll(newShingled
-        .select(col("id").as("rep"), col("__g"), lit(1).as("_s")))
+        .select(col("id"), col("__g"), col("sh"), lit(1).as("_s")))
     val members = index(indexDir).committed(spark, "members", keep)
       .select(col("__g"), col("id"), lit(0).as("_s"))
       .unionAll(newMembers.select(col("__g"), col("id"), lit(1).as("_s")))
-    val cross = repPairs
-      .join(repOf.select(col("rep").as("id_a"), col("__g").as("__ga"),
-        col("_s").as("_sa")), Seq("id_a"))
-      .join(repOf.select(col("rep").as("id_b"), col("__g").as("__gb"),
-        col("_s").as("_sb")), Seq("id_b"))
-      .join(members.select(col("__g").as("__ga"), col("_s").as("_sa"),
-        col("id").as("ma")), Seq("__ga", "_sa"))
-      .join(members.select(col("__g").as("__gb"), col("_s").as("_sb"),
-        col("id").as("mb")), Seq("__gb", "_sb"))
-      .select(
-        least(col("ma"), col("mb")).as("id_a"),
-        greatest(col("ma"), col("mb")).as("id_b"),
-        col("jaccard"))
-    // Within-batch identical texts (the only within-GROUP pairs with a new
-    // endpoint not covered above; corpus-internal ones have none).
-    val shNewMembers = newMembers.join(newShingled.select(col("__g")), Seq("__g"))
-    val within = shNewMembers.as("x")
-      .join(shNewMembers.as("y"),
-        col("x.__g") === col("y.__g") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-        lit(1.0).as("jaccard"))
-    cross.unionAll(within)
+    Dedup.expandPairs(candidates, reps, members,
+      newShingled.select(col("__g"), lit(1).as("_s")), threshold)
   }
 }

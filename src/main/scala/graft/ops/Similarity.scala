@@ -210,7 +210,28 @@ object Similarity {
     */
   private def booksLiteral(
       spark: org.apache.spark.sql.SparkSession,
-      entries: Seq[(Int, Int, Seq[Any])], elemType: org.apache.spark.sql.types.DataType): Column = {
+      entries: Seq[(Int, Int, Seq[Any])],
+      elemType: org.apache.spark.sql.types.DataType): Column =
+    booksBroadcast(spark, entries, elemType)._2
+
+  /** One training iteration against `entries` as a [[booksLiteral]]; the
+    * iteration collects its update, after which nothing references the
+    * model, so its broadcast is destroyed on the way out.
+    */
+  private def withBooks[T](
+      spark: org.apache.spark.sql.SparkSession,
+      entries: Seq[(Int, Int, Seq[Any])],
+      elemType: org.apache.spark.sql.types.DataType)(iteration: Column => T): T = {
+    val (bc, books) = booksBroadcast(spark, entries, elemType)
+    try iteration(books) finally bc.destroy()
+  }
+
+  private def booksBroadcast(
+      spark: org.apache.spark.sql.SparkSession,
+      entries: Seq[(Int, Int, Seq[Any])],
+      elemType: org.apache.spark.sql.types.DataType)
+      : (org.apache.spark.broadcast.Broadcast[
+          org.apache.spark.sql.catalyst.util.ArrayData], Column) = {
     import org.apache.spark.sql.types._
     val booksType = ArrayType(StructType(Seq(
       StructField("m", IntegerType, nullable = false),
@@ -223,9 +244,9 @@ object Similarity {
       .createToCatalystConverter(booksType)
     val data = conv(entries.sortBy(e => (e._1, e._2)))
       .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    org.apache.spark.sql.graftbridge.GraftBridge.column(
-      graft.functions.BroadcastArrayLiteral(
-        spark.sparkContext.broadcast(data), booksType))
+    val bc = spark.sparkContext.broadcast(data)
+    (bc, org.apache.spark.sql.graftbridge.GraftBridge.column(
+      graft.functions.BroadcastArrayLiteral(bc, booksType)))
   }
 
   /** Collected (list_id, centroid) rows, sorted by list id. */
@@ -360,10 +381,9 @@ object Similarity {
     val base = trainDf.getOrElse(df).select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
       .withColumn("qv", expr(s"transform(v, x -> floor(x * $QuantScale))"))
-    for (_ <- 1 to iters) {
-      val books = booksLiteral(spark,
+    for (_ <- 1 to iters) withBooks(spark,
         cents.map { case (lid, c) => (0, lid, c) },
-        org.apache.spark.sql.types.DoubleType)
+        org.apache.spark.sql.types.DoubleType) { books =>
       // map-only nearest-centroid assignment (same arithmetic and
       // tie-break as assignToNearest), carrying the quantized vector
       // through so the update step never re-joins the corpus
@@ -610,7 +630,8 @@ object Similarity {
         (0 until nSub).map(mi => (mi, code, c.slice(mi * sub, (mi + 1) * sub)))
       }.toSeq.sortBy(e => (e._1, e._2))
     val nCodes = cents.map(_._2).distinct.length
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to iters) withBooks(spark, cents,
+        org.apache.spark.sql.types.DoubleType) { books =>
       // r19 (guide §2.4): the per-(row, subspace) assignment previously
       // rode an explode → broadcast join → groupBy(id, m) argmin, whose
       // Exchange re-shuffled the exploded corpus (sub-vectors included)
@@ -619,8 +640,6 @@ object Similarity {
       // subspace_argmin kernel; the one surviving Exchange per iteration
       // carries (m, code, pos, sum) cells. Plan diff per iteration:
       // 2 Exchanges → 1.
-      val books = booksLiteral(spark, cents,
-        org.apache.spark.sql.types.DoubleType)
       val assigned = base.select(
         GraftFunctions.subspace_argmin(col("v"), books).as("codes"),
         col("qv"))

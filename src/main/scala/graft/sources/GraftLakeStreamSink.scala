@@ -83,6 +83,7 @@ private[sources] class LakeStreamingWrite(
           s"physical allocation at $dir (name retired by a rename/drop) " +
           "— evolve the schema through the Scala API first"))
     }
+    LakeSnapshot.requireNoGenColumn(physical.toSeq.filter(_ != null), dir)
     // CHECK constraints ride the stream too: bound once at query start,
     // evaluated per row in the shared delta writer (r17 wave 3)
     val checks = graft.etl.LakeChecks.checksOf(spark, dir).map {

@@ -24,7 +24,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *    over a delta-carrying lake plans no BroadcastExchange;
   *  - footers that disagree on a column's type without a widen binding
   *    still fail loudly, and `adoptParquet` refuses a source whose files
-  *    carry different schemas, leaving it in place.
+  *    carry different schemas, leaving it in place;
+  *  - a data column named `gen` keeps its values through `read`,
+  *    `readAt`, deltas and compaction (merges and `addColumnBinding`
+  *    store it under a fresh physical name), and the writes that would
+  *    store it as `gen`, `adoptParquet` and the streaming sink, refuse it.
   */
 class LakeReadSchemaSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -242,5 +246,53 @@ class LakeReadSchemaSpec extends AnyFunSuite {
     assert(Files.exists(Paths.get(src, s"day=${day(2)}")),
       "a refused source must stay where it was")
     assert(LakeSnapshot.currentEpoch(spark, dir) < 0)
+  }
+
+  test("a data column named gen survives every read; stores that would " +
+    "shadow it refuse") {
+    val dir = freshDir("gen_column")
+    def gens(df: DataFrame): Map[Long, Long] =
+      df.select("event_id", "gen").as[(Long, Long)].collect().toMap
+    merge(dir, Seq((1L, ts(1), 50L), (2L, ts(2), 60L)).toDF("event_id", "ts", "gen"))
+    val first = epoch(dir)
+    LakeSnapshot.mergeDelta(spark, dir,
+      Seq((3L, ts(2), 70L)).toDF("event_id", "ts", "gen"), "event_id", "ts")
+    val all = Map(1L -> 50L, 2L -> 60L, 3L -> 70L)
+    assert(gens(LakeSnapshot.read(spark, dir)) === all)
+    assert(gens(LakeSnapshot.readAt(spark, dir, first)) === Map(1L -> 50L, 2L -> 60L))
+    LakeSnapshot.compactDays(spark, dir)
+    assert(gens(LakeSnapshot.read(spark, dir)) === all)
+    assert(LakeSnapshot.read(spark, dir).schema("gen").dataType === LongType)
+    val bound = freshDir("gen_bound")
+    merge(bound, Seq((1L, ts(1))).toDF("event_id", "ts"))
+    assert(LakeSnapshot.addColumnBinding(spark, bound, "gen")._2 === "gen__2")
+    merge(bound, Seq((2L, ts(1), 70L)).toDF("event_id", "ts", "gen"))
+    assert(gens(LakeSnapshot.read(spark, bound).where(col("event_id") === 2L)) ===
+      Map(2L -> 70L))
+
+    val src = freshDir("gen_adopt_src")
+    Seq((1L, ts(1), 50L)).toDF("event_id", "ts", "gen").coalesce(1)
+      .write.parquet(s"$src/day=${day(1)}")
+    val adopt = intercept[IllegalArgumentException] {
+      LakeSnapshot.adoptParquet(spark, freshDir("gen_adopt_lake"), src,
+        "event_id", "ts", validate = false)
+    }
+    assert(adopt.getMessage.contains("'gen'"), adopt.getMessage)
+    assert(Files.exists(Paths.get(src, s"day=${day(1)}")))
+
+    val root = freshDir("gen_stream")
+    Seq((1L, ts(1), 50L)).toDF("event_id", "ts", "gen").coalesce(1)
+      .write.parquet(s"$root/in/b1")
+    val sink = intercept[Exception] {
+      spark.readStream.schema("event_id BIGINT, ts TIMESTAMP, gen BIGINT")
+        .parquet(s"$root/in/*")
+        .writeStream.format("graft-lake")
+        .option("path", s"$root/lake").option("key", "event_id")
+        .option("checkpointLocation", s"$root/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+    }
+    assert(Iterator.iterate[Throwable](sink)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("'gen'")), sink)
   }
 }

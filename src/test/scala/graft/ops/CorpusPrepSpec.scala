@@ -1,7 +1,11 @@
 package graft.ops
 
 import graft.TestSpark
+import graft.functions.SortedIntersectSize
+import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.TestJobs
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Stage-behavior gates for the composed corpus-prep pipeline (k20's
@@ -53,4 +57,27 @@ class CorpusPrepSpec extends AnyFunSuite {
       s"expected zero file scans after the checkpointed base:\n$plan")
     assert(out.count() > 0)
   }
+
+  test("the cleaned frame replays the checkpointed near-dedup stage") {
+    val cleaned = CorpusPrep.prepare(fixture)
+    val plans = TestJobs.launched(spark)(cleaned.collect()).plans
+    assert(CorpusPrepSpec.wholeStages(plans) <= 10)
+    assert(!CorpusPrepSpec.verifiesPairs(plans),
+      "the near-dedup pairs must sit behind a checkpoint")
+  }
+}
+
+object CorpusPrepSpec {
+  private val aqe = new AdaptiveSparkPlanHelper {}
+
+  /** Whole-stage codegen stages of executed plans, through adaptive query
+    * stages; a reused exchange's stage is not counted again.
+    */
+  def wholeStages(plans: Seq[SparkPlan]): Int =
+    plans.map(p => aqe.collect(p) { case w: WholeStageCodegenExec => w }.size).sum
+
+  /** Whether any operator of the plans computes a Jaccard intersection. */
+  def verifiesPairs(plans: Seq[SparkPlan]): Boolean =
+    plans.exists(p => aqe.find(p)(_.expressions.exists(
+      _.exists(_.isInstanceOf[SortedIntersectSize]))).isDefined)
 }

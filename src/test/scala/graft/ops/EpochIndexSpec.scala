@@ -16,7 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * kind is one row of [[kinds]]; every test runs over all rows.
   *
   *   - Spark jobs per lifecycle step are locked per kind (build, tagged
-  *     append, redelivered append, compact, vacuum, one probe).
+  *     append, redelivered append, compact, vacuum, one probe), and a
+  *     committed surface reads with no job, in the schema and rows that
+  *     schema inference gives.
   *   - A claimed epoch whose data landed but whose manifest row did not
   *     is invisible to probes.
   *   - Compaction raises `base` and leaves probe output unchanged.
@@ -83,7 +85,7 @@ class EpochIndexSpec extends AnyFunSuite {
       (dir, r) => IncrementalDedup.vacuumIndex(spark, dir, r),
       dir => rows(IncrementalDedup.incrementalPairs(
         spark, dir, textProbe, "doc_id", "text", threshold = 0.5)),
-      Seq(6, 8, 0, 7, 0, 21)),
+      Seq(6, 7, 0, 4, 0, 14)),
     Kind("span", Seq("spans"),
       dir => SpanIndex.buildSpanIndex(corpusText, "doc_id", "text", dir),
       (dir, n) => { SpanIndex.appendToSpanIndex(
@@ -92,7 +94,7 @@ class EpochIndexSpec extends AnyFunSuite {
       (dir, r) => SpanIndex.vacuumSpanIndex(spark, dir, r),
       dir => rows(SpanIndex.probeSpanStats(
         spark, dir, textProbe, "doc_id", "text")),
-      Seq(2, 2, 0, 3, 0, 8)),
+      Seq(2, 2, 0, 2, 0, 7)),
     Kind("cosine", Seq("vectors"),
       dir => Similarity.buildCosineIndex(corpusVec, "id", "v", dir),
       (dir, n) => Similarity.appendToCosineIndex(
@@ -101,7 +103,7 @@ class EpochIndexSpec extends AnyFunSuite {
       (dir, r) => Similarity.vacuumCosineIndex(spark, dir, r),
       dir => rows(Similarity.incrementalCosinePairs(
         spark, dir, vecProbe, "id", "v", threshold = 0.9)),
-      Seq(2, 2, 0, 3, 0, 8)),
+      Seq(2, 2, 0, 2, 0, 7)),
     Kind("ivf", Seq("assigned", "centroids"),
       dir => Similarity.saveIvfIndex(
         Similarity.ivfBuildFixed(corpusVec, "id", "v", centroids), dir),
@@ -111,7 +113,7 @@ class EpochIndexSpec extends AnyFunSuite {
       (dir, r) => Similarity.vacuumIvfIndex(spark, dir, r),
       dir => rows(Similarity.ivfProbePersisted(
         spark, dir, query, k = 20, nProbe = 2)),
-      Seq(2, 4, 0, 3, 0, 6)),
+      Seq(2, 4, 0, 2, 0, 5)),
     Kind("ivfpq", Seq("assigned", "centroids", "codes", "codebooks"),
       dir => Similarity.saveIvfPqIndex(
         Similarity.ivfBuildFixed(corpusVec, "id", "v", centroids),
@@ -125,7 +127,10 @@ class EpochIndexSpec extends AnyFunSuite {
       (dir, r) => Similarity.vacuumIvfIndex(spark, dir, r),
       dir => rows(Similarity.ivfPqTopKPersisted(
         spark, dir, query, k = 20, nProbe = 2, rerank = 50)),
-      Seq(4, 8, 0, 6, 0, 14)))
+      Seq(4, 8, 0, 4, 0, 12)))
+
+  private val partOf = Map("text" -> "pb", "span" -> "pb", "cosine" -> "pb",
+    "ivf" -> "list_id", "ivfpq" -> "list_id")
 
   private def params(dir: String): Seq[String] =
     Option(new java.io.File(s"$dir/params").list()).toSeq.flatten.sorted
@@ -197,6 +202,20 @@ class EpochIndexSpec extends AnyFunSuite {
       assert(claims.nonEmpty && claims.forall(_ >= base), s"claims $claims")
       assert(params(dir).filter(_.endsWith(".properties")) === props)
       assert(k.probe(dir) === probed)
+    }
+
+    test(s"${k.name}: a committed surface reads with no Spark job, as inferred") {
+      val dir = freshDir(s"committed_${k.name}")
+      k.build(dir)
+      k.append(dir, 1)
+      val idx = EpochIndex(dir, Nil, k.surfaces, partOf(k.name))
+      for (s <- k.surfaces.filterNot(Set("centroids", "codebooks"))) {
+        val read = TestJobs.launched(spark)(idx.committed(spark, s, Seq(0, 1)))
+        assert(read.jobs === 0, s)
+        val inferred = spark.read.parquet(s"$dir/$s")
+        assert(read.result.schema === inferred.schema, s)
+        assert(rows(read.result) === rows(inferred), s)
+      }
     }
 
     test(s"${k.name}: vacuum without a committed manifest fails loudly") {

@@ -6,6 +6,7 @@ import java.util.Comparator
 import graft.TestSpark
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.TestJobs
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Gates for incremental corpus prep (k26): (1) one batch through
@@ -15,7 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * contract fails loudly; (3) a two-batch sequence through
   * [[CorpusPrep.appendBatchToState]] still equals the one-shot chain,
   * locking the cross-micro-batch exact AND near drops that only exist
-  * because the first batch was folded into the state.
+  * because the first batch was folded into the state; (4) the batch
+  * frame replays a materialized probe instead of re-planning it, and the
+  * jobs of one batch are locked.
   */
 class IncCorpusPrepSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -169,5 +172,24 @@ class IncCorpusPrepSpec extends AnyFunSuite {
     val twice = CorpusPrep.prepareBatch(spark, state, b2Df)
     // duplicate bench-hash rows are also harmless (read-side distinct)
     assert(rows(once) == rows(twice))
+  }
+
+  test("the batch frame replays the checkpointed probe; one batch's jobs are locked") {
+    val state = freshDir("plan_lock")
+    CorpusPrep.buildPrepState(histDf, state)
+    CorpusPrep.appendBatchToState(spark, state, b1Df, tag = "b1")
+    val frame = CorpusPrep.prepareBatch(spark, state, b2Df, excludeTag = "b2")
+    val plans = TestJobs.launched(spark)(
+      frame.write.mode("overwrite").parquet(freshDir("plan_lock_out"))).plans
+    assert(CorpusPrepSpec.wholeStages(plans) <= 10)
+    assert(!CorpusPrepSpec.verifiesPairs(plans),
+      "the near-dedup probe must sit behind a checkpoint")
+
+    val jobs = TestJobs.launched(spark) {
+      CorpusPrep.prepareBatch(spark, state, b2Df, excludeTag = "b2")
+        .write.mode("overwrite").parquet(freshDir("plan_lock_out"))
+      CorpusPrep.appendBatchToState(spark, state, b2Df, tag = "b2")
+    }.jobs
+    assert(jobs == 41, "prepareBatch write + appendBatchToState")
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.{Tables, TestSpark}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.TestBroadcasts
 import org.scalatest.funsuite.AnyFunSuite
 
 /** K3 scale path: ANN multi-probe recall measured against brute force. */
@@ -498,5 +499,26 @@ class SimilaritySpec extends AnyFunSuite {
     assert(dt < df0, s"training must strictly reduce distortion: $dt vs $df0")
     // and the trained index still encodes every row
     assert(trained.encoded.count() === 16L)
+  }
+
+  test("IVF and PQ training destroy each Lloyd iteration's model broadcast") {
+    import spark.implicits._
+    val data = (0 until 16).map(i => (i.toLong, padded(0.5, 0.02 * i)))
+      .toDF("vec_id", "embedding")
+    val seeds = Seq((0, padded(1.0)), (1, padded(0.0, 1.0)))
+    // model broadcasts a training run leaves alive once removals settle:
+    // only the returned index's own kernel literal may remain
+    def leftOver(train: => Unit): Int = {
+      val before = TestBroadcasts.liveArrays()
+      train
+      val deadline = System.nanoTime() + 10000000000L
+      def alive = (TestBroadcasts.liveArrays() -- before).size
+      while (alive > 1 && System.nanoTime() < deadline) Thread.sleep(50)
+      alive
+    }
+    assert(leftOver(Similarity.ivfBuildTrained(data, "vec_id", "embedding",
+      seeds.toDF("list_id", "centroid"), iters = 3)) === 1)
+    assert(leftOver(Similarity.pqBuildTrained(data, "vec_id", "embedding",
+      seeds.toDF("code", "centroid"), iters = 2)) === 1)
   }
 }
