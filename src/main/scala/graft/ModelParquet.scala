@@ -2,7 +2,7 @@ package graft
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetOutputFormat, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -68,16 +68,26 @@ object ModelParquet {
     val file = new Path(dirPath,
       s"part-00000-${java.util.UUID.randomUUID()}.parquet")
     val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
-    val writer = new RowsBuilder(file, new ParquetWriteSupport)
+    val writer = rowWriter(file, conf)
+    try rows.foreach(r => writer.write(toInternal(r).asInstanceOf[InternalRow]))
+    finally writer.close()
+  }
+
+  /** A writer of `InternalRow`s into one parquet file through Spark's own
+    * `ParquetWriteSupport`, under a write conf from
+    * `GraftBridge.parquetWriteConf` (its schema is the rows' schema). An
+    * existing file at `file` is replaced. Also the lake's delta writer.
+    */
+  private[graft] def rowWriter(
+      file: Path, conf: Configuration): ParquetWriter[InternalRow] =
+    new RowsBuilder(file, new ParquetWriteSupport)
       .withConf(conf)
       // the codec Spark's ParquetOptions mapped the session's codec name to
       // (`none` → UNCOMPRESSED, `lz4_raw` → LZ4_RAW, ...), as a write job does
       .withCompressionCodec(
         CompressionCodecName.valueOf(conf.get(ParquetOutputFormat.COMPRESSION)))
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
       .build()
-    try rows.foreach(r => writer.write(toInternal(r).asInstanceOf[InternalRow]))
-    finally writer.close()
-  }
 
   /** [[overwrite]] of a DataFrame's rows: job-free for driver-local frames
     * (LocalTableScan collects without a job), one small collect job for

@@ -853,14 +853,20 @@ object LakeSnapshot {
         }.toMap)
         val deltas = scan(p.delta, deltaLeaves).select(out ++ Seq(
           element_at(seq, concat_ws("/", col("day").cast("string"),
-            col("gen").cast("string"))).as("__seq"), col("__op")): _*)
+            col("gen").cast("string"))).as("__seq"),
+          col("_metadata.file_name").as("__dfile"),
+          col("_metadata.row_index").as("__drow"), col("__op")): _*)
         // DVs fold below the key fold
         val all = (baseSide(foldPlain, foldDv,
-          Seq(lit(0L).as("__seq"), lit("u").as("__op"))) ++ Some(deltas))
+          Seq(lit(0L).as("__seq"), lit("").as("__dfile"), lit(0L).as("__drow"),
+            lit("u").as("__op"))) ++ Some(deltas))
           .reduce(_ union _)
+        // youngest generation wins; within one, the row written last
+        // (files in name order — one directory per (gen, day) — rows in
+        // file order), as the DSv2 fold
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("day") +: keyParts(keyCol).map(col): _*)
-          .orderBy(col("__seq").desc)
+          .orderBy(col("__seq").desc, col("__dfile").desc, col("__drow").desc)
         Some(all.select(col("*"), row_number().over(w).as("__rn"))
           .filter(col("__rn") === 1 && col("__op") =!= "d")
           .select(outCols.map(col): _*))

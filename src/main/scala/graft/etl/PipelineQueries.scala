@@ -1834,7 +1834,7 @@ object PipelineQueries {
   // VERDICT r14 #1: money lives in DECIMAL(18,2) (SURVEY §1.2) and must be
   // a first-class column of a catalog table — CREATE with a decimal
   // column, INSERT through the V1 path (Spark-written base parquet),
-  // MERGE all three verbs through the Group-API delta writer
+  // MERGE all three verbs through the row-level delta writer
   // (int64-physical decimal), and read the fold back exactly. Amounts are
   // built from INTEGER parts via string concat, so both engines construct
   // the identical exact decimal (no float rounding anywhere); the %7
@@ -2728,7 +2728,7 @@ object PipelineQueries {
           "' 08:00:00')) AS ts",
         "embedding")
       .createOrReplaceTempView("ann_emb_src")
-    // half through the V1 base, half through the Group-API delta — the
+    // half through the V1 base, half through the MERGE delta — the
     // serving read must fold BOTH without touching a float
     spark.sql("INSERT INTO graft.ann_emb (vec_id, ts, embedding) " +
       "SELECT vec_id, ts, embedding FROM ann_emb_src WHERE vec_id % 2 = 0")
@@ -2758,7 +2758,7 @@ object PipelineQueries {
   // first-class catalog-table column, so the "vector/multimodal tiers
   // can't live in the SQL lake" boundary (VERDICT r14) is now only about
   // maps and nested arrays. CREATE/INSERT through the V1 path, MERGE
-  // through the Group-API writer (nested parquet groups), fold read
+  // through the row-level delta writer (nested parquet groups), fold read
   // back; the oracle re-derives the flattened metadata and a payload
   // hex digest from `documents` without ever materializing a struct.
   def p46(spark: SparkSession, sfDir: String): DataFrame = {
@@ -2896,7 +2896,7 @@ object PipelineQueries {
   // --- P43: ARRAY columns in the SQL lake (embeddings join the lake) -------
   // VERDICT r14 #2: an embeddings column (array<float>) as a first-class
   // catalog-table column — CREATE/INSERT (V1 base), MERGE through the
-  // Group-API delta writer (standard 3-level LIST groups), fold read
+  // row-level delta writer (standard 3-level LIST groups), fold read
   // back. The update scales vectors by exactly 2 (float-exact in any
   // engine), so element values — not just shapes — are oracle-checked
   // via the first element's min/max (no accumulation, no float-sum

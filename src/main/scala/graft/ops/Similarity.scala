@@ -890,6 +890,13 @@ object Similarity {
   private def ivf(dir: String): EpochIndex = EpochIndex(dir, Seq("n_lists"),
     Seq("assigned", "codes"), "list_id", models = Seq("centroids", "codebooks"))
 
+  /** The stored model `m` (`centroids` or `codebooks`) of `epoch`, planned
+    * from its footer schema without a Spark job.
+    */
+  private def ivfModel(spark: SparkSession, dir: String, m: String,
+      epoch: Int): DataFrame =
+    ivf(dir).committed(spark, m, Seq(epoch)).drop("epoch")
+
   /** Persist a built IVF index: `assigned/epoch=E/list_id=L/` is PHYSICALLY
     * partitioned by inverted list, so a probe's `list_id IN (...)` prunes
     * storage partitions and reads only the probed fraction of the corpus —
@@ -932,7 +939,7 @@ object Similarity {
     val idx = ivf(dir)
     val v = idx.view(spark)
     v.prior(tag).getOrElse {
-      val data = surfaces(m => spark.read.parquet(s"${idx.path(m)}/epoch=${v.epoch}"))
+      val data = surfaces(m => ivfModel(spark, dir, m, v.epoch))
       val e = idx.claim(spark, v)
       idx.write(spark, e, data)
       idx.copyModels(spark, v.epoch, e)
@@ -994,9 +1001,8 @@ object Similarity {
       query: DataFrame, // single row, column "qvec"
       nProbe: Int = 4,
       asOf: Int = Int.MaxValue): DataFrame = {
-    val p = IvfIndexPaths(dir)
     val v = ivf(dir).view(spark, asOf)
-    val centroids = spark.read.parquet(s"${p.centroids}/epoch=${v.epoch}")
+    val centroids = ivfModel(spark, dir, "centroids", v.epoch)
     val probeIds = query
       .crossJoin(broadcast(centroids))
       .select(col("list_id"),
@@ -1212,10 +1218,9 @@ object Similarity {
       nProbe: Int = 4,
       rerank: Int = 50,
       asOf: Int = Int.MaxValue): DataFrame = {
-    val p = IvfIndexPaths(dir)
     val v = ivf(dir).view(spark, asOf)
-    val centroids = spark.read.parquet(s"${p.centroids}/epoch=${v.epoch}")
-    val codebooks = spark.read.parquet(s"${p.codebooks}/epoch=${v.epoch}")
+    val centroids = ivfModel(spark, dir, "centroids", v.epoch)
+    val codebooks = ivfModel(spark, dir, "codebooks", v.epoch)
     val (nSub, subDim, nCodes) = pqMetaOf(codebooks)
     val probeIds = query.crossJoin(broadcast(centroids))
       .select(col("list_id"),
@@ -1275,10 +1280,9 @@ object Similarity {
       rerank: Int = 50,
       asOf: Int = Int.MaxValue): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val p = IvfIndexPaths(dir)
     val v = ivf(dir).view(spark, asOf)
-    val centroids = spark.read.parquet(s"${p.centroids}/epoch=${v.epoch}")
-    val codebooks = spark.read.parquet(s"${p.codebooks}/epoch=${v.epoch}")
+    val centroids = ivfModel(spark, dir, "centroids", v.epoch)
+    val codebooks = ivfModel(spark, dir, "codebooks", v.epoch)
     val (nSub, subDim, nCodes) = pqMetaOf(codebooks)
     val lsObs = org.apache.spark.sql.Observation()
     val probePairs = queries.crossJoin(broadcast(centroids))
@@ -1764,9 +1768,8 @@ object Similarity {
       vecCol: String,
       threshold: Double,
       excludeTag: String = ""): DataFrame = {
-    val p = IvfIndexPaths(dir)
     val v = ivf(dir).view(spark)
-    val centroids = spark.read.parquet(s"${p.centroids}/epoch=${v.epoch}")
+    val centroids = ivfModel(spark, dir, "centroids", v.epoch)
     // r20 (§1): the touched-list set rides the checkpoint job as an
     // observe() metric instead of a separate distinct().collect() job
     val lsObs = org.apache.spark.sql.Observation()

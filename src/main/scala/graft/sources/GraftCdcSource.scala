@@ -4,7 +4,6 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
@@ -22,7 +21,6 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.etl.LakeSnapshot
 
@@ -258,21 +256,17 @@ private[sources] class CdcReaderFactory(
 }
 
 /** Executor-side standalone parquet reader: parquet-example Group
-  * records converted straight to InternalRow for the supported scalar
-  * types (the sidecar writer controls the footer — TIMESTAMP_MICROS
-  * pinned, no INT96, no nesting). Missing columns (schema evolution
-  * across generations) read as NULL; unsupported types fail loudly.
+  * records decoded by [[LakeGroupRead.internalValue]], the lake reader's
+  * one decoder (the sidecar writer controls the footer — TIMESTAMP_MICROS
+  * pinned, no INT96). Missing columns (schema evolution across
+  * generations) read as NULL; unsupported types fail loudly.
   */
 private[sources] class CdcPartitionReader(
     part: CdcFilePartition, schema: StructType,
     hadoopConf: Map[String, String])
   extends PartitionReader[InternalRow] {
 
-  private val conf = {
-    val c = new Configuration(false)
-    hadoopConf.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
+  private val conf = LakeGroupRead.confOf(hadoopConf)
   private val reader =
     ParquetFileReader.open(HadoopInputFile.fromPath(new Path(part.path), conf))
   private val fileSchema = reader.getFooter.getFileMetaData.getSchema
@@ -281,7 +275,7 @@ private[sources] class CdcPartitionReader(
   // file was written outside LakeSnapshot's cdf path
   require(!fileSchema.getColumns.asScala.exists(
     _.getPrimitiveType.getPrimitiveTypeName ==
-      org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96),
+      PrimitiveType.PrimitiveTypeName.INT96),
     s"graft-cdc reader: ${part.path} carries INT96 timestamps — change " +
       "sidecars must be written through LakeSnapshot (TIMESTAMP_MICROS)")
   // LOUD on mid-stream schema evolution (r15): a sidecar column the
@@ -300,13 +294,6 @@ private[sources] class CdcPartitionReader(
         "pick up the new columns")
   }
   private val io = new ColumnIOFactory().getColumnIO(fileSchema)
-  // per-field physical primitive names, computed once per file (the
-  // widening upcast below checks them per value)
-  private val physNames: Map[String, PrimitiveType.PrimitiveTypeName] =
-    fileSchema.getFields.asScala.filter(_.isPrimitive)
-      .map(f => f.getName -> f.asPrimitiveType().getPrimitiveTypeName).toMap
-  private def phys(name: String): PrimitiveType.PrimitiveTypeName =
-    physNames.getOrElse(name, null)
   private var recordReader: org.apache.parquet.io.RecordReader[Group] = _
   private var remaining = 0L
   private var current: InternalRow = _
@@ -328,56 +315,10 @@ private[sources] class CdcPartitionReader(
 
   override def close(): Unit = reader.close()
 
-  private def convert(g: Group): InternalRow = {
-    val vals = new Array[Any](schema.length)
-    var i = 0
-    while (i < schema.length) {
-      val f = schema.fields(i)
-      vals(i) =
-        if (f.name == "_commit_epoch") part.epoch
-        else if (!fileSchema.containsField(f.name)) null
-        else if (g.getFieldRepetitionCount(f.name) == 0) null
-        else f.dataType match {
-          // TYPE WIDENING (r17): sidecars written before a widen commit
-          // carry the narrow physical type — upcast; the narrowing
-          // direction means the table widened after the stream bound its
-          // schema: fail with the real story (restart picks up the type)
-          case LongType =>
-            if (phys(f.name) == PrimitiveType.PrimitiveTypeName.INT32)
-              g.getInteger(f.name, 0).toLong
-            else g.getLong(f.name, 0)
-          case TimestampType => g.getLong(f.name, 0)
-          case IntegerType | DateType =>
-            require(phys(f.name) != PrimitiveType.PrimitiveTypeName.INT64,
-              s"graft-cdc reader: column '${f.name}' in ${part.path} was " +
-                "WIDENED to BIGINT after the stream started — restart " +
-                "the stream to pick up the widened type")
-            g.getInteger(f.name, 0)
-          case DoubleType =>
-            if (phys(f.name) == PrimitiveType.PrimitiveTypeName.FLOAT)
-              g.getFloat(f.name, 0).toDouble
-            else g.getDouble(f.name, 0)
-          case FloatType =>
-            require(phys(f.name) != PrimitiveType.PrimitiveTypeName.DOUBLE,
-              s"graft-cdc reader: column '${f.name}' in ${part.path} was " +
-                "WIDENED to DOUBLE after the stream started — restart " +
-                "the stream to pick up the widened type")
-            g.getFloat(f.name, 0)
-          case BooleanType => g.getBoolean(f.name, 0)
-          case StringType => UTF8String.fromString(g.getString(f.name, 0))
-          // COMPLEX columns (r17 wave 6): decimal/binary/array/map/
-          // struct change images decode through the SAME Group bridge
-          // the batch reader uses — a table with typed columns streams
-          // its change feed instead of refusing
-          case _: DecimalType | BinaryType | _: ArrayType | _: MapType |
-               _: StructType =>
-            LakeGroupRead.internalValue(g, fileSchema, f.name, f.dataType)
-          case other => throw new UnsupportedOperationException(
-            s"graft-cdc reader: unsupported column type $other for " +
-              s"'${f.name}' in ${part.path}")
-        }
-      i += 1
-    }
-    new GenericInternalRow(vals)
-  }
+  // every change image decodes through the batch reader's Group bridge,
+  // widening (r17) and the loud narrowing refusal included
+  private def convert(g: Group): InternalRow =
+    new GenericInternalRow(schema.fields.map(f =>
+      if (f.name == "_commit_epoch") part.epoch
+      else LakeGroupRead.internalValue(g, fileSchema, f.name, f.dataType)))
 }

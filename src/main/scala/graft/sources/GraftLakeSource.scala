@@ -63,10 +63,13 @@ import graft.etl.LakeSnapshot.LakeState
   *     applied at conversion: files keep physical names forever, the
   *     reader surfaces the logical names of the pinned epoch.
   *
-  * Readers are the same standalone parquet-example shape as
-  * [[CdcPartitionReader]], extended with INT96 (legacy Spark timestamp)
-  * and MILLIS/NANOS unit normalization so any generation a Spark writer
-  * ever produced stays readable.
+  * Every lake file is written by Spark's own parquet writer: bases by
+  * write jobs, delta files of SQL MERGE and the streaming sink by
+  * [[LakeDeltaTaskWriter]] through `ParquetWriteSupport`. Readers decode
+  * parquet-example records ([[LakeGroupRead]], shared with
+  * [[CdcPartitionReader]]), with INT96 (legacy Spark timestamp) and
+  * MILLIS/NANOS unit normalization so any generation a Spark writer ever
+  * produced stays readable.
   */
 class GraftLakeSource extends TableProvider with DataSourceRegister {
 
@@ -1661,12 +1664,10 @@ private[sources] object LakeGroupRead {
 
   /** The Catalyst-internal value of `name` under the declared Spark type
     * — null when the column is absent from this file (schema evolution)
-    * or null in this row. Round-15 widening mirrors [[LakeGroupWrite]]:
-    * DECIMAL reads whatever physical width the writing engine chose
-    * (int32/int64/binary/fixed — Spark's V1 bases and the Group-API
-    * deltas agree on the standard encodings, and the FILE's annotation
-    * scale is authoritative, rescaled into the declared type), BINARY,
-    * and ARRAY as the standard 3-level LIST group.
+    * or null in this row. Round-15 widening: DECIMAL reads whatever
+    * physical width the writing engine chose (int32/int64/binary/fixed —
+    * the FILE's annotation scale is authoritative, rescaled into the
+    * declared type), BINARY, and ARRAY as the standard 3-level LIST group.
     */
   def internalValue(
       g: Group, fs: GroupType, name: String, dt: DataType): Any =
@@ -1784,8 +1785,8 @@ private[sources] object LakeGroupRead {
 
   /** One decimal under any of the writer's physical widths, at a field
     * repetition index — shared by top-level columns (index 0) and
-    * array/map elements, mirroring [[LakeGroupWrite.addDecimal]]
-    * (ADVICE r15: elements and columns must read symmetrically).
+    * array/map elements (ADVICE r15: elements and columns must read
+    * symmetrically).
     */
   private def decimalAt(
       g: Group, name: String, j: Int,
@@ -1909,27 +1910,35 @@ private[sources] object LakeGroupRead {
     */
   val deltaFileOpens = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Fold a day's delta files into key → (youngest seq, youngest op).
-    * O(delta rows) time, O(distinct delta keys) memory — the deltas are
-    * O(batch) by design (OPTIMIZE absorbs them into bases).
+  /** Fold a day's delta files into key → the winning [[LakeDeltaWin]]:
+    * the youngest seq wins, and within one seq (one generation) the row
+    * written last — files in path order, rows in file order. O(delta
+    * rows) time, O(distinct delta keys) memory — the deltas are O(batch)
+    * by design (OPTIMIZE absorbs them into bases).
     */
   def deltaState(
       deltas: Seq[LakeDeltaFileRef], key: String,
-      conf: Configuration): java.util.HashMap[Any, (Int, String)] = {
-    val m = new java.util.HashMap[Any, (Int, String)]()
-    deltas.foreach { ref =>
+      conf: Configuration): java.util.HashMap[Any, LakeDeltaWin] = {
+    val m = new java.util.HashMap[Any, LakeDeltaWin]()
+    deltas.sortBy(r => (r.seq, r.path)).foreach { ref =>
       deltaFileOpens.incrementAndGet()
       val it = new GroupIterator(ref.path, conf)
+      var pos = -1L
       try it.foreach { g =>
-        val k = keyValue(g, it.fileSchema, key)
-        val prev = m.get(k)
-        if (prev == null || ref.seq >= prev._1)
-          m.put(k, (ref.seq, g.getString("__op", 0)))
+        pos += 1
+        m.put(keyValue(g, it.fileSchema, key),
+          LakeDeltaWin(ref.seq, g.getString("__op", 0), ref.path, pos))
       } finally it.close()
     }
     m
   }
 }
+
+/** The delta row that decides a key: its generation's fold position,
+  * op, file and row position.
+  */
+private[sources] final case class LakeDeltaWin(
+    seq: Int, op: String, path: String, pos: Long)
 
 /** PER-EXECUTOR delta key-state cache (VERDICT r13 missing #4): every
   * base-file partition of a day needs the day's folded delta state, and
@@ -1947,10 +1956,10 @@ private[sources] object LakeGroupRead {
 private[sources] object LakeDeltaStateCache {
   private val MaxEntries = 64
 
-  private final class Memo(load: () => java.util.HashMap[Any, (Int, String)]) {
+  private final class Memo(load: () => java.util.HashMap[Any, LakeDeltaWin]) {
     // lazy val: per-entry lock — concurrent tasks of the SAME day wait
     // for one fold; different days fold in parallel
-    lazy val value: java.util.HashMap[Any, (Int, String)] = load()
+    lazy val value: java.util.HashMap[Any, LakeDeltaWin] = load()
   }
 
   private val cache =
@@ -1961,7 +1970,7 @@ private[sources] object LakeDeltaStateCache {
     }
 
   def get(deltas: Seq[LakeDeltaFileRef], key: String, conf: Configuration)
-      : java.util.HashMap[Any, (Int, String)] = {
+      : java.util.HashMap[Any, LakeDeltaWin] = {
     val k = deltas.iterator.map(r => s"${r.path}#${r.seq}")
       .mkString("", "|", s"@$key")
     val memo = cache.synchronized {
@@ -2079,11 +2088,10 @@ private[sources] class LakeBaseReader(
   override def close(): Unit = it.close()
 }
 
-/** Emits the day's youngest-wins delta image: one pass builds the winner
-  * map, a second emits exactly the rows whose (key, seq) won with op `u`
-  * — delete markers and superseded upserts vanish. Per-(gen, day) keys
-  * are unique (the stager collapses its batch), so (key, seq) identifies
-  * one row.
+/** Emits the day's delta image: one pass builds the winner map, a second
+  * emits exactly the rows that won with op `u` — delete markers,
+  * superseded upserts and a key's earlier rows within one generation
+  * vanish.
   */
 private[sources] class LakeDeltaFoldReader(
     part: LakeDeltaFoldPartition, schema: StructType,
@@ -2095,7 +2103,8 @@ private[sources] class LakeDeltaFoldReader(
     LakeDeltaStateCache.get(part.deltas, part.key, conf)
   private val files = part.deltas.iterator
   private var it: LakeGroupRead.GroupIterator = _
-  private var seq = 0
+  private var path: String = _
+  private var pos = -1L
   private var current: InternalRow = _
 
   override def next(): Boolean = {
@@ -2103,14 +2112,15 @@ private[sources] class LakeDeltaFoldReader(
       if (it == null || !it.hasNext) {
         if (it != null) { it.close(); it = null }
         if (!files.hasNext) return false
-        val ref = files.next()
-        it = new LakeGroupRead.GroupIterator(ref.path, conf)
-        seq = ref.seq
+        path = files.next().path
+        it = new LakeGroupRead.GroupIterator(path, conf)
+        pos = -1L
       }
       while (it.hasNext) {
         val g = it.next()
+        pos += 1
         val w = winners.get(LakeGroupRead.keyValue(g, it.fileSchema, part.key))
-        if (w != null && w._1 == seq && w._2 == "u") {
+        if (w.pos == pos && w.path == path && w.op == "u") {
           current = convert(g, it.fileSchema)
           return true
         }

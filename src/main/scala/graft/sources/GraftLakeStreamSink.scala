@@ -1,11 +1,8 @@
 package graft.sources
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write.{DataWriter, LogicalWriteInfo, PhysicalWriteInfo, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 
 import graft.etl.LakeSnapshot
@@ -13,11 +10,14 @@ import graft.etl.LakeSnapshot
 /** `df.writeStream.format("graft-lake")` — the lake as a FIRST-CLASS
   * Structured Streaming sink (VERDICT r13 #3), replacing the documented
   * `foreachBatch` + `mergeDelta` idiom with a native DSv2
-  * [[StreamingWrite]]. Semantics per micro-batch are exactly
-  * [[LakeSnapshot.mergeDelta]]: upsert-by-key, landing as ONE
+  * [[StreamingWrite]]. Each micro-batch upserts by key, landing as ONE
   * merge-on-read delta commit — O(batch) write cost, no conflict abort,
   * concurrent writers (other streams, batch jobs, the Scala API) all
-  * compose through the one manifest.
+  * compose through the one manifest. Unlike [[LakeSnapshot.mergeDelta]],
+  * which collapses a batch's repeated key to its greatest row before
+  * writing, the sink writes every row; a key written twice in one batch
+  * folds at read to the row written last (files in path order, rows in
+  * file order).
   *
   * Exactly-once across restarts: every batch commit carries an
   * idempotence TAG (`sw-<queryId>-<epochId>` — queryId is stable in the
@@ -26,8 +26,9 @@ import graft.etl.LakeSnapshot
   * committed — the s14-style tagged-redelivery contract, now on the
   * lake itself.
   *
-  * The distributed shape (100 TB): executors stream rows straight into
-  * per-day parquet files under a per-(query, epoch) STAGING area
+  * The distributed shape (100 TB): executors stream rows through the
+  * [[LakeDeltaTaskWriter]] SQL MERGE uses straight into per-day parquet
+  * files under a per-(query, epoch) STAGING area
   * (`delta/.sw/<queryId>/<epochId>/day=D/` — dot-prefixed, invisible to
   * every reader), dot-temp → rename at task commit; the DRIVER then
   * claims a generation, moves exactly the files the commit messages
@@ -66,35 +67,18 @@ private[sources] class LakeStreamingWrite(
       pi: PhysicalWriteInfo): StreamingDataWriterFactory = {
     val spark = SparkSession.active
     val schema = info.schema()
-    val parts = LakeSnapshot.keyParts(key)
-    require(parts.forall(schema.fieldNames.contains) &&
+    require(LakeSnapshot.keyParts(key).forall(schema.fieldNames.contains) &&
       schema.fieldNames.contains(ts),
       s"graft-lake streaming sink: the batch schema " +
         s"${schema.fieldNames.toSeq} must carry the merge key '$key' " +
         s"and event-time '$ts'")
-    // physical names bind at query start; renames mid-stream are safe
+    // physical names bind per batch; renames mid-stream are safe
     // (physical names never change — only their logical mapping does),
-    // brand-new columns bind identity like a first write
-    val state = LakeSnapshot.tableState(spark, dir)
-    val physical = schema.fields.map { f =>
-      if (f.name == "day") null // derived from ts, never stored
-      else state.physicalFor(f.name).getOrElse(sys.error(
-        s"graft-lake streaming sink: column '${f.name}' needs a fresh " +
-          s"physical allocation at $dir (name retired by a rename/drop) " +
-          "— evolve the schema through the Scala API first"))
-    }
-    LakeSnapshot.requireNoGenColumn(physical.toSeq.filter(_ != null), dir)
-    // CHECK constraints ride the stream too: bound once at query start,
-    // evaluated per row in the shared delta writer (r17 wave 3)
-    val checks = graft.etl.LakeChecks.checksOf(spark, dir).map {
-      case (n, c) =>
-        (n, c, graft.etl.LakeChecks.boundCheck(spark, schema, n, c))
-    }
-    new LakeStreamingWriterFactory(
-      dir, stagingPrefix = s"${LakeSnapshot.LakePaths(dir).delta}/.sw/$queryId",
-      schema, physical, schema.fieldIndex(ts), key,
-      spark.sparkContext.hadoopConfiguration.asScala
-        .map(e => e.getKey -> e.getValue).toMap, checks)
+    // brand-new columns bind identity like a first write. Every row is an
+    // upsert here, so the batch schema is also the row-ID schema.
+    LakeDeltaWriterFactory(spark, dir,
+      s"${LakeSnapshot.LakePaths(dir).delta}/.sw/$queryId",
+      LakeSnapshot.tableState(spark, dir), key, ts, schema, schema)
   }
 
   override def commit(
@@ -153,32 +137,4 @@ private[sources] class LakeStreamingWrite(
       fs.delete(parent, true)
     ()
   }
-}
-
-/** Per-epoch writer factory: each task writes under the epoch's staging
-  * area via the same [[LakeDeltaTaskWriter]] the MERGE path uses (all
-  * rows are upserts here — `write(row)`).
-  */
-private[sources] class LakeStreamingWriterFactory(
-    dir: String, stagingPrefix: String,
-    schema: org.apache.spark.sql.types.StructType,
-    physical: Array[String], tsIdx: Int, key: String,
-    hadoopConf: Map[String, String],
-    checks: Seq[(String, String,
-      org.apache.spark.sql.catalyst.expressions.Expression)] = Nil)
-  extends StreamingDataWriterFactory {
-
-  override def createWriter(
-      partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new LakeDeltaTaskWriter(
-      dir, s"$stagingPrefix/$epochId", schema, physical, tsIdx,
-      // rowId projection is unused on the streaming path (no deletes
-      // arrive through a sink); the key binds identity for the marker
-      // schema anyway
-      schema, LakeSnapshot.keyParts(key).map(schema.fieldIndex).toArray,
-      tsIdx,
-      LakeSnapshot.keyParts(key)
-        .map(k => physical(schema.fieldIndex(k))).toArray,
-      hadoopConf, partitionId, taskId, checks)
 }
