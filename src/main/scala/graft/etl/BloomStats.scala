@@ -81,8 +81,8 @@ object BloomStats {
   /** DataFrameWriter options enabling parquet NATIVE bloom filters on
     * the declared bloom columns (physical names) — the ROW-GROUP
     * granularity twin of the file-level sidecar: within files the
-    * planner could not skip, the Group reader probes each block's
-    * parquet bloom ([[graft.sources]]' GroupIterator) and skips row
+    * planner could not skip, the lake reader probes each block's
+    * parquet bloom ([[graft.sources]]' RowIterator) and skips row
     * groups the filter proves value-free. Empty for undeclared tables.
     */
   def writeOptions(spark: SparkSession, dir: String): Map[String, String] = {

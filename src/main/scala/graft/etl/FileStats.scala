@@ -5,8 +5,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
 import org.apache.spark.sql.SparkSession
 
 /** MANIFEST-CARRIED FILE STATS (round-14 ring c): per-file column
@@ -41,7 +42,9 @@ import org.apache.spark.sql.SparkSession
   * match → always skippable), `x` present but stats-unusable (INT96,
   * missing stats → never skippable). A column ABSENT from a line is
   * absent from the file itself (schema evolution gap) — all-null, so
-  * skippable, mirroring [[graft.sources]]' row-group rule.
+  * skippable. The executor's row-group tier ([[graft.sources]]) asks
+  * the same question of one block: [[blockStat]] folds its chunks the
+  * way [[footerStat]] folds a file's, and [[provablyEmpty]] judges both.
   */
 object FileStats {
 
@@ -256,122 +259,129 @@ object FileStats {
       case (n, c) if c.family == "d" => s"$n:d:${c.dmn}:${c.dmx}${nl(c)}"
       case (n, c) if c.family == "c" =>
         s"$n:c:${c.scale}:${c.lmn}:${c.lmx}${nl(c)}"
-      case (n, c) if c.family == "s" =>
+      // string bounds persist only while both fit 64 bytes — long text
+      // columns stay unusable at the file tier (a truncated bound needs
+      // increment logic to stay an upper bound; not worth it for the
+      // low-cardinality dimension columns this tier targets)
+      case (n, c) if c.family == "s" && c.smn.length <= 64 &&
+          c.smx.length <= 64 =>
         s"$n:s:${enc.encodeToString(c.smn)}:${enc.encodeToString(c.smx)}${nl(c)}"
+      case (n, c) if c.family == "s" => s"$n:x${nl(c)}"
       case (n, c) => s"$n:${c.family}${nl(c)}"
     }
     (Seq(rel, st.rows.toString) ++ cols).mkString("\t")
   }
 
-  /** One footer read → the file's stat row: every primitive column's
-    * row-group stats folded to file-level min/max in the reader's
-    * comparison families (timestamps normalized to micros, INT96 marked
-    * unusable).
+  /** One footer read → the file's stat row: [[blockStat]] over all of
+    * its row groups.
     */
   private[graft] def footerStat(path: String, conf: Configuration): FileStat = {
     val reader =
       ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
     try {
       val footer = reader.getFooter
-      val schema = footer.getFileMetaData.getSchema
-      val blocks = footer.getBlocks.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
-      import PrimitiveType.PrimitiveTypeName._
-      val cols = schema.getFields.asScala.filter(_.isPrimitive).map { f =>
-        val name = f.getName
-        val pt = f.asPrimitiveType()
-        // the int64 timestamp unit multiplier into micros (1 = already
-        // micros or a plain long); NANOS divides instead
-        val (mul, nanos) = pt.getLogicalTypeAnnotation match {
-          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            t.getUnit match {
-              case LogicalTypeAnnotation.TimeUnit.MILLIS => (1000L, false)
-              case LogicalTypeAnnotation.TimeUnit.NANOS => (1L, true)
-              case _ => (1L, false)
-            }
-          case _ => (1L, false)
-        }
-        val chunks = blocks.flatMap(
-          _.getColumns.asScala.find(_.getPath.toDotString == name))
-        val stats = chunks.map(_.getStatistics)
-        val usable = stats.nonEmpty && stats.forall(s => s != null && !s.isEmpty)
-        // exact null count when every chunk recorded one (r17 —
-        // count(col) = rows - nulls becomes metadata-answerable)
-        val nulls: Long =
-          if (usable && stats.forall(_.isNumNullsSet))
-            stats.map(_.getNumNulls).sum
-          else -1L
-        def withNulls(kv: (String, ColStat)): (String, ColStat) =
-          kv._1 -> kv._2.copy(nulls = nulls)
-        withNulls {
-        // decimal-annotated stats are UNSCALED integers — within ONE
-        // scale they are order-preserving, so they get their own ordered
-        // family `c:<scale>` (r17, VERDICT r16 #4): a same-scale decimal
-        // predicate skips; any scale mismatch stays residual-only
-        val decScale = pt.getLogicalTypeAnnotation match {
-          case a: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-            a.getScale
-          case _ => -1
-        }
-        if (!usable) name -> ColStat("x")
-        else if (stats.forall(!_.hasNonNullValue)) name -> ColStat("n")
-        else {
-          val nn = stats.filter(_.hasNonNullValue)
-          // a decimal's unscaled value as a Long — int32/int64 directly;
-          // BINARY/FIXED as big-endian two's complement when it fits
-          def unscaled(v: Any): Option[Long] = v match {
-            case n: Number => Some(n.longValue())
-            case b: org.apache.parquet.io.api.Binary =>
-              val bi = new java.math.BigInteger(b.getBytes)
-              if (bi.bitLength < 64) Some(bi.longValue) else None
-            case _ => None
-          }
-          if (decScale >= 0) {
-            val mins = nn.map(s => unscaled(s.genericGetMin))
-            val maxs = nn.map(s => unscaled(s.genericGetMax))
-            if (mins.forall(_.isDefined) && maxs.forall(_.isDefined))
-              name -> ColStat("c", lmn = mins.flatten.min,
-                lmx = maxs.flatten.max, scale = decScale)
-            else name -> ColStat("x") // >63-bit unscaled: no claim
-          } else pt.getPrimitiveTypeName match {
-            case INT64 | INT32 =>
-              def norm(v: Long): Long =
-                if (nanos) Math.floorDiv(v, 1000L) else v * mul
-              name -> ColStat("l",
-                lmn = nn.map(s =>
-                  norm(s.genericGetMin.asInstanceOf[Number].longValue())).min,
-                lmx = nn.map(s =>
-                  norm(s.genericGetMax.asInstanceOf[Number].longValue())).max)
-            case DOUBLE | FLOAT =>
-              name -> ColStat("d",
-                dmn = nn.map(
-                  _.genericGetMin.asInstanceOf[Number].doubleValue()).min,
-                dmx = nn.map(
-                  _.genericGetMax.asInstanceOf[Number].doubleValue()).max)
-            case BINARY if pt.getLogicalTypeAnnotation
-                .isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
-              // STRING stats (r17): unsigned-byte-order min/max, recorded
-              // only while both fit 64 bytes — long text columns stay
-              // unusable (a truncated bound needs increment logic to stay
-              // an upper bound; not worth it for the low-cardinality
-              // dimension columns this tier targets)
-              val mins = nn.map(s =>
-                s.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary]
-                  .getBytes)
-              val maxs = nn.map(s =>
-                s.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary]
-                  .getBytes)
-              if (mins.forall(_.length <= 64) && maxs.forall(_.length <= 64))
-                name -> ColStat("s",
-                  smn = mins.reduce((a, b) => if (cmpUtf8(a, b) <= 0) a else b),
-                  smx = maxs.reduce((a, b) => if (cmpUtf8(a, b) >= 0) a else b))
-              else name -> ColStat("x")
-            case _ => name -> ColStat("x") // INT96, binary, boolean
-          }
-        }
-        }
-      }.toMap
-      FileStat(rows, cols)
+      blockStat(footer.getFileMetaData.getSchema,
+        footer.getBlocks.asScala.toSeq)
     } finally reader.close()
+  }
+
+  /** `blocks`' column chunk stats folded to one min/max per primitive
+    * column of `schema`, in the reader's comparison families
+    * (timestamps normalized to micros, INT96 marked unusable).
+    */
+  private[graft] def blockStat(
+      schema: MessageType, blocks: Seq[BlockMetaData]): FileStat = {
+    val rows = blocks.map(_.getRowCount).sum
+    import PrimitiveType.PrimitiveTypeName._
+    val cols = schema.getFields.asScala.filter(_.isPrimitive).map { f =>
+      val name = f.getName
+      val pt = f.asPrimitiveType()
+      // the int64 timestamp unit multiplier into micros (1 = already
+      // micros or a plain long); NANOS divides instead
+      val (mul, nanos) = pt.getLogicalTypeAnnotation match {
+        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+          t.getUnit match {
+            case LogicalTypeAnnotation.TimeUnit.MILLIS => (1000L, false)
+            case LogicalTypeAnnotation.TimeUnit.NANOS => (1L, true)
+            case _ => (1L, false)
+          }
+        case _ => (1L, false)
+      }
+      val chunks = blocks.flatMap(
+        _.getColumns.asScala.find(_.getPath.toDotString == name))
+      val stats = chunks.map(_.getStatistics)
+      val usable = stats.nonEmpty && stats.forall(s => s != null && !s.isEmpty)
+      // exact null count when every chunk recorded one (r17 —
+      // count(col) = rows - nulls becomes metadata-answerable)
+      val nulls: Long =
+        if (usable && stats.forall(_.isNumNullsSet))
+          stats.map(_.getNumNulls).sum
+        else -1L
+      def withNulls(kv: (String, ColStat)): (String, ColStat) =
+        kv._1 -> kv._2.copy(nulls = nulls)
+      withNulls {
+      // decimal-annotated stats are UNSCALED integers — within ONE
+      // scale they are order-preserving, so they get their own ordered
+      // family `c:<scale>` (r17, VERDICT r16 #4): a same-scale decimal
+      // predicate skips; any scale mismatch stays residual-only
+      val decScale = pt.getLogicalTypeAnnotation match {
+        case a: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
+          a.getScale
+        case _ => -1
+      }
+      if (!usable) name -> ColStat("x")
+      else if (stats.forall(!_.hasNonNullValue)) name -> ColStat("n")
+      else {
+        val nn = stats.filter(_.hasNonNullValue)
+        // a decimal's unscaled value as a Long — int32/int64 directly;
+        // BINARY/FIXED as big-endian two's complement when it fits
+        def unscaled(v: Any): Option[Long] = v match {
+          case n: Number => Some(n.longValue())
+          case b: org.apache.parquet.io.api.Binary =>
+            val bi = new java.math.BigInteger(b.getBytes)
+            if (bi.bitLength < 64) Some(bi.longValue) else None
+          case _ => None
+        }
+        if (decScale >= 0) {
+          val mins = nn.map(s => unscaled(s.genericGetMin))
+          val maxs = nn.map(s => unscaled(s.genericGetMax))
+          if (mins.forall(_.isDefined) && maxs.forall(_.isDefined))
+            name -> ColStat("c", lmn = mins.flatten.min,
+              lmx = maxs.flatten.max, scale = decScale)
+          else name -> ColStat("x") // >63-bit unscaled: no claim
+        } else pt.getPrimitiveTypeName match {
+          case INT64 | INT32 =>
+            def norm(v: Long): Long =
+              if (nanos) Math.floorDiv(v, 1000L) else v * mul
+            name -> ColStat("l",
+              lmn = nn.map(s =>
+                norm(s.genericGetMin.asInstanceOf[Number].longValue())).min,
+              lmx = nn.map(s =>
+                norm(s.genericGetMax.asInstanceOf[Number].longValue())).max)
+          case DOUBLE | FLOAT =>
+            name -> ColStat("d",
+              dmn = nn.map(
+                _.genericGetMin.asInstanceOf[Number].doubleValue()).min,
+              dmx = nn.map(
+                _.genericGetMax.asInstanceOf[Number].doubleValue()).max)
+          case BINARY if pt.getLogicalTypeAnnotation
+              .isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
+            // STRING stats (r17): unsigned-byte-order min/max (the
+            // sidecar persists them only while both fit 64 bytes)
+            val mins = nn.map(s =>
+              s.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary]
+                .getBytes)
+            val maxs = nn.map(s =>
+              s.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary]
+                .getBytes)
+            name -> ColStat("s",
+              smn = mins.reduce((a, b) => if (cmpUtf8(a, b) <= 0) a else b),
+              smx = maxs.reduce((a, b) => if (cmpUtf8(a, b) >= 0) a else b))
+          case _ => name -> ColStat("x") // INT96, binary, boolean
+        }
+      }
+      }
+    }.toMap
+    FileStat(rows, cols)
   }
 }

@@ -2712,7 +2712,7 @@ object PipelineQueries {
   // r15: p43 proved embeddings ROUND-TRIP the catalog table; this entry
   // proves the round-trip FEEDS the vector tier bit-exactly — the q20
   // brute-force cosine top-k runs over vectors read back through the
-  // DSv2 Group reader (CREATE + INSERT + MoR delta from a MERGE), and
+  // DSv2 reader (CREATE + INSERT + MoR delta from a MERGE), and
   // shares q20's oracle VERBATIM. Any float mangling anywhere in the
   // write/fold/read path would shuffle the top-10 ranking.
   def p48(spark: SparkSession, sfDir: String): DataFrame = {

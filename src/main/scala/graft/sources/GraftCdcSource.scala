@@ -5,15 +5,9 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.PrimitiveType
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
@@ -38,10 +32,9 @@ import graft.etl.LakeSnapshot
   *     CHANGE-SIDECAR FILE ([[LakeSnapshot.readChangesCdf]]'s write-time
   *     files — no snapshot diffing on the consume path), so read
   *     parallelism scales with the data, not the commit count;
-  *   - each partition is read ON THE EXECUTOR by a standalone
-  *     parquet-example reader ([[CdcPartitionReader]]) — no driver
-  *     collect anywhere; `_commit_epoch` is stamped from partition
-  *     metadata;
+  *   - each partition is read ON THE EXECUTOR by the lake's parquet
+  *     reader ([[CdcPartitionReader]]) — no driver collect anywhere;
+  *     `_commit_epoch` is stamped from partition metadata;
   *   - [[SupportsAdmissionControl]] honors `maxEpochsPerBatch`, and
   *     [[SupportsTriggerAvailableNow]] pins the end target so
   *     AvailableNow drains in bounded batches and a checkpoint restart
@@ -54,7 +47,7 @@ import graft.etl.LakeSnapshot
   *
   * The schema is inferred from the existing sidecars (one footer per
   * generation, merged) + `_commit_epoch INT`; the sidecar writer pins
-  * TIMESTAMP_MICROS so the standalone reader never meets INT96.
+  * TIMESTAMP_MICROS, so the reader refuses INT96 sidecars.
   */
 class GraftCdcSource extends TableProvider with DataSourceRegister {
 
@@ -255,70 +248,53 @@ private[sources] class CdcReaderFactory(
     new CdcPartitionReader(p.asInstanceOf[CdcFilePartition], schema, hadoopConf)
 }
 
-/** Executor-side standalone parquet reader: parquet-example Group
-  * records decoded by [[LakeGroupRead.internalValue]], the lake reader's
-  * one decoder (the sidecar writer controls the footer — TIMESTAMP_MICROS
-  * pinned, no INT96). Missing columns (schema evolution across
-  * generations) read as NULL; unsupported types fail loudly.
+/** Executor-side change-sidecar reader: the lake's one parquet reader
+  * ([[LakeParquetRead]], Spark's row converter — widening and the loud
+  * narrowing refusal included) over the feed schema; `_commit_epoch`
+  * (never stored) is stamped from the partition. Missing columns
+  * (schema evolution across generations) read as NULL.
   */
 private[sources] class CdcPartitionReader(
     part: CdcFilePartition, schema: StructType,
     hadoopConf: Map[String, String])
   extends PartitionReader[InternalRow] {
 
-  private val conf = LakeGroupRead.confOf(hadoopConf)
-  private val reader =
-    ParquetFileReader.open(HadoopInputFile.fromPath(new Path(part.path), conf))
-  private val fileSchema = reader.getFooter.getFileMetaData.getSchema
-  // fail with the real story instead of a ClassCastException mid-record:
-  // the sidecar writer pins TIMESTAMP_MICROS, so INT96 here means the
-  // file was written outside LakeSnapshot's cdf path
-  require(!fileSchema.getColumns.asScala.exists(
-    _.getPrimitiveType.getPrimitiveTypeName ==
-      PrimitiveType.PrimitiveTypeName.INT96),
-    s"graft-cdc reader: ${part.path} carries INT96 timestamps — change " +
-      "sidecars must be written through LakeSnapshot (TIMESTAMP_MICROS)")
-  // LOUD on mid-stream schema evolution (r15): a sidecar column the
-  // stream's (start-time) schema doesn't know would otherwise be
-  // SILENTLY DROPPED from every change image — a consumer folding the
-  // feed would hold a wrong table. `day` rides sidecars but is derived,
-  // not part of the feed schema on every surface.
-  locally {
-    val known = schema.fieldNames.toSet + "day"
-    val unknown = fileSchema.getFields.asScala.map(_.getName)
-      .filterNot(known)
-    require(unknown.isEmpty,
-      s"graft-cdc reader: ${part.path} carries column(s) " +
-        s"${unknown.mkString(", ")} the stream's schema does not — the " +
-        "table evolved after the stream started; restart the stream to " +
-        "pick up the new columns")
-  }
-  private val io = new ColumnIOFactory().getColumnIO(fileSchema)
-  private var recordReader: org.apache.parquet.io.RecordReader[Group] = _
-  private var remaining = 0L
+  private val epochAt = schema.fieldNames.indexOf("_commit_epoch")
+  private val it = new LakeParquetRead.RowIterator(part.path,
+    LakeParquetRead.confOf(hadoopConf), { fileSchema =>
+      // fail with the real story: the sidecar writer pins
+      // TIMESTAMP_MICROS, so INT96 here means the file was written
+      // outside LakeSnapshot's cdf path
+      require(!fileSchema.getColumns.asScala.exists(
+        _.getPrimitiveType.getPrimitiveTypeName ==
+          PrimitiveType.PrimitiveTypeName.INT96),
+        s"graft-cdc reader: ${part.path} carries INT96 timestamps — " +
+          "change sidecars must be written through LakeSnapshot " +
+          "(TIMESTAMP_MICROS)")
+      // LOUD on mid-stream schema evolution (r15): a sidecar column the
+      // stream's (start-time) schema doesn't know would otherwise be
+      // SILENTLY DROPPED from every change image — a consumer folding
+      // the feed would hold a wrong table. `day` rides sidecars but is
+      // derived, not part of the feed schema on every surface.
+      val known = schema.fieldNames.toSet + "day"
+      val unknown = fileSchema.getFields.asScala.map(_.getName)
+        .filterNot(known)
+      require(unknown.isEmpty,
+        s"graft-cdc reader: ${part.path} carries column(s) " +
+          s"${unknown.mkString(", ")} the stream's schema does not — the " +
+          "table evolved after the stream started; restart the stream " +
+          "to pick up the new columns")
+      schema
+    })
   private var current: InternalRow = _
 
-  override def next(): Boolean = {
-    while (remaining == 0L) {
-      val pages = reader.readNextRowGroup()
-      if (pages == null) return false
-      recordReader = io.getRecordReader(pages, new GroupRecordConverter(fileSchema))
-      remaining = pages.getRowCount
-    }
-    val g = recordReader.read()
-    remaining -= 1
-    current = convert(g)
+  override def next(): Boolean = it.hasNext && {
+    current = it.next()
+    if (epochAt >= 0) current.setInt(epochAt, part.epoch)
     true
   }
 
   override def get(): InternalRow = current
 
-  override def close(): Unit = reader.close()
-
-  // every change image decodes through the batch reader's Group bridge,
-  // widening (r17) and the loud narrowing refusal included
-  private def convert(g: Group): InternalRow =
-    new GenericInternalRow(schema.fields.map(f =>
-      if (f.name == "_commit_epoch") part.epoch
-      else LakeGroupRead.internalValue(g, fileSchema, f.name, f.dataType)))
+  override def close(): Unit = it.close()
 }

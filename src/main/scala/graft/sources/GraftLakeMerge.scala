@@ -261,7 +261,7 @@ private[sources] class LakeDeltaTaskWriter(
   extends DeltaWriter[InternalRow] {
   import factory._
 
-  private val conf = LakeGroupRead.confOf(writeConf)
+  private val conf = LakeParquetRead.confOf(writeConf)
 
   private lazy val checkPreds = checks.map { case (name, cond, e) =>
     val p = Predicate.create(e)

@@ -6,12 +6,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
-import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType, PrimitiveType}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -20,6 +18,8 @@ import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, 
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsReportStatistics, SupportsRuntimeFiltering}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, Write, WriteBuilder}
+import org.apache.spark.sql.execution.datasources.parquet.{GraftParquetRead, ParquetReadSupport, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, InsertableRelation}
 import org.apache.spark.sql.types._
@@ -60,16 +60,18 @@ import graft.etl.LakeSnapshot.LakeState
   *     rows. Delta-free days (the steady state after OPTIMIZE) pay zero
   *     fold cost;
   *   - the column MAPPING (rename/drop as manifest-only commits) is
-  *     applied at conversion: files keep physical names forever, the
+  *     applied at the request: each projected logical column is read
+  *     under its physical name (files keep physical names forever), the
   *     reader surfaces the logical names of the pinned epoch.
   *
   * Every lake file is written by Spark's own parquet writer: bases by
   * write jobs, delta files of SQL MERGE and the streaming sink by
-  * [[LakeDeltaTaskWriter]] through `ParquetWriteSupport`. Readers decode
-  * parquet-example records ([[LakeGroupRead]], shared with
-  * [[CdcPartitionReader]]), with INT96 (legacy Spark timestamp) and
-  * MILLIS/NANOS unit normalization so any generation a Spark writer ever
-  * produced stays readable.
+  * [[LakeDeltaTaskWriter]] through `ParquetWriteSupport`. And every lake
+  * file is read by Spark's own row converter: the executor readers
+  * ([[LakeParquetRead]], shared with [[CdcPartitionReader]]) decode
+  * through the `ParquetRecordMaterializer` [[LakeSnapshot.read]]'s
+  * parquet scan runs, so any generation a Spark writer ever produced
+  * (INT96, MILLIS, widened, legacy lists) reads the same on both.
   */
 class GraftLakeSource extends TableProvider with DataSourceRegister {
 
@@ -658,8 +660,15 @@ private[sources] class LakeScanBuilder(
     // the reader checks footer min/max stats per row group (parquet's
     // native skipping granularity, executor-side, zero driver cost) —
     // they stay RESIDUAL too, so Spark re-evaluates them row-by-row and
-    // a stats miss can never change results
-    statFilters = rest.filter(f => RowGroupFilter.of(f).isDefined)
+    // a stats miss can never change results. A STRUCT/ARRAY/MAP column
+    // stores no chunk under its own name, so the stats tiers would take
+    // it for an absent (all-null) column and skip its files under
+    // IS NOT NULL: hints cover atomic columns only
+    statFilters = rest.filter(f => RowGroupFilter.of(f).exists(h =>
+      fullSchema.find(_.name == h.col).forall(_.dataType match {
+        case _: StructType | _: ArrayType | _: MapType => false
+        case _ => true
+      })))
     rest // residual: Spark evaluates everything else above the scan
   }
 
@@ -951,15 +960,7 @@ private[sources] class LakeScan(
         stats.flatMap(_.get(s"day=$day/$name")) match {
           case None => false // no sidecar / unknown file: never skip blind
           case Some(st) =>
-            // an IN conjunct proves the file empty only when EVERY member
-            // does (members compare under the remapped physical name)
-            def empty(f: RowGroupFilter): Boolean =
-              if (f.op == "in") f.inSet.nonEmpty && f.inSet.forall(m =>
-                graft.etl.FileStats.provablyEmpty(st, f.col, "eq",
-                  m.isFloat, m.lv, m.dv, m.decScale, m.sv))
-              else graft.etl.FileStats.provablyEmpty(st, f.col, f.op,
-                f.isFloat, f.lv, f.dv, f.decScale, f.sv)
-            val dead = skipPhys.exists(empty)
+            val dead = skipPhys.exists(_.provablyEmpty(st))
             if (dead) {
               graft.etl.FileStats.skippedFiles.incrementAndGet()
               mFilesSkippedStats += 1
@@ -1174,7 +1175,18 @@ final case class RowGroupFilter(
     sv: Array[Byte] = null,
     // op == "in": the member equality hints — the IN conjunct proves a
     // file/group empty only when EVERY member does
-    inSet: Seq[RowGroupFilter] = Nil)
+    inSet: Seq[RowGroupFilter] = Nil) {
+
+  /** True when the stats of a file or row group PROVE no row satisfies
+    * this hint; IN members compare under this hint's (physical) column.
+    */
+  def provablyEmpty(st: graft.etl.FileStats.FileStat): Boolean =
+    if (op == "in") inSet.nonEmpty && inSet.forall(m =>
+      graft.etl.FileStats.provablyEmpty(st, col, "eq",
+        m.isFloat, m.lv, m.dv, m.decScale, m.sv))
+    else graft.etl.FileStats.provablyEmpty(st, col, op,
+      isFloat, lv, dv, decScale, sv)
+}
 
 object RowGroupFilter {
   private def decNorm(
@@ -1310,12 +1322,16 @@ private[sources] class LakeReaderFactory(
     }
 }
 
-/** Standalone parquet-example record access shared by the lake readers:
-  * Group → typed value with the full timestamp story (INT96 legacy,
-  * MILLIS/MICROS/NANOS int64 annotations → micros) so every generation
-  * a Spark writer ever produced reads identically.
+/** The lake's one parquet record reader, shared by the DSv2 scan, the
+  * full-table stream and the CDC stream. Each file's footer schema is
+  * clipped to the requested types by Spark's `ParquetReadSupport`, and
+  * every record decodes through Spark's own row converter — the one a
+  * Spark parquet scan, and so [[LakeSnapshot.read]], runs. INT96 and
+  * MILLIS timestamps, the int→long / float→double / decimal widenings,
+  * nested, legacy-list and map shapes therefore read identically on
+  * every lake surface.
   */
-private[sources] object LakeGroupRead {
+private[sources] object LakeParquetRead {
 
   def confOf(hadoopConf: Map[String, String]): Configuration = {
     val c = new Configuration(false)
@@ -1334,113 +1350,86 @@ private[sources] object LakeGroupRead {
     */
   val leafColumnsRead = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** The footer schema narrowed to what the scan actually needs (r18):
-    * the PHYSICAL column behind each projected logical column, plus the
-    * key columns the winner-map lookup reads on delta-carrying days.
-    * Plain STRUCT columns narrow recursively to the requested subfields
-    * — on a multimodal table, `SELECT media.mime` stops fetching the
-    * sibling binary payload's pages (VERDICT r17 missing #4). LIST/MAP
-    * annotated groups pass whole (their repeated-group shapes don't
-    * narrow safely by name); a requested field missing from the file is
-    * simply omitted (the converter already yields null for evolution
-    * gaps). An empty projection (count(*)) keeps the narrowest single
-    * leaf so row iteration still works.
+  /** The requested-schema slot of the `day` partition value: no lake
+    * file stores a column under this name, so the converter leaves it
+    * null and the reader fills it per row.
     */
-  def projectionOf(
-      file: MessageType, schema: StructType,
-      physical: Array[String], keyCols: Seq[String]): MessageType = {
-    def pruneType(
-        ft: org.apache.parquet.schema.Type,
-        dt: DataType): org.apache.parquet.schema.Type = dt match {
-      case st: StructType if !ft.isPrimitive &&
-          ft.getLogicalTypeAnnotation == null =>
-        val g = ft.asGroupType
-        val kids = st.fields.toSeq
-          .filter(f => g.containsField(f.name))
-          .map(f => pruneType(g.getType(f.name), f.dataType))
-        // parquet groups cannot be empty — an all-missing struct keeps
-        // the whole group (its rows convert to all-null subfields)
-        if (kids.isEmpty) ft else g.withNewFields(kids.asJava)
-      // LIST-annotated groups narrow through the element (r18): Spark's
-      // nested pruning hands array<struct<mime>> for a
-      // `SELECT frames.mime` over array<struct<mime,…,payload>> — the
-      // element group narrows exactly like a plain struct, so frame
-      // arrays on multimodal tables stop fetching sibling payload
-      // chunks. 2-level legacy lists (repeated primitive) pass whole.
-      case at: ArrayType if !ft.isPrimitive &&
-          ft.getLogicalTypeAnnotation
-            .isInstanceOf[LogicalTypeAnnotation.ListLogicalTypeAnnotation] =>
-        val g = ft.asGroupType
-        val inner = g.getType(0)
-        if (inner.isPrimitive) ft
-        else {
-          val innerG = inner.asGroupType
-          val elemT = innerG.getType(0)
-          val narrowed = pruneType(elemT, at.elementType)
-          if (narrowed eq elemT) ft
-          else g.withNewFields(innerG.withNewFields(narrowed))
-        }
-      case _ => ft
-    }
-    def fieldOf(name: String): org.apache.parquet.schema.Type =
-      file.getType(file.getFieldIndex(name))
-    val projected = schema.fields.toSeq.zip(physical.toSeq).flatMap {
-      case (f, phys) =>
-        if (phys == null || !file.containsField(phys)) None
-        else Some(pruneType(fieldOf(phys), f.dataType))
-    }
-    val have = projected.map(_.getName).toSet
-    val keys = keyCols
-      .filter(k => !have(k) && file.containsField(k))
-      .map(fieldOf)
-    val all = projected ++ keys
-    val fields =
-      if (all.nonEmpty) all
-      else {
-        // count(*): one narrowest leaf keeps the record reader alive
-        val leaf = file.getFields.asScala
-          .find(_.isPrimitive).getOrElse(file.getFields.get(0))
-        Seq(leaf)
-      }
-    new MessageType(file.getName, fields.asJava)
+  val DaySlot = "__graft_day"
+
+  /** `names` under the types Spark reads them as from `file`; names the
+    * file lacks are omitted.
+    */
+  def storedFields(file: MessageType, names: Seq[String]): Seq[StructField] = {
+    val stored = new ParquetToSparkSchemaConverter(SQLConf.get).convert(file)
+    names.flatMap(n => stored.find(_.name == n))
   }
 
-  /** Streaming iterator over one parquet file's Groups. With `skip`
-    * filters, row groups whose footer min/max stats prove no row can
-    * match are skipped WITHOUT reading their pages — parquet's native
-    * skipping granularity, executor-side. NOTE: callers that skip must
-    * not also track running row positions (deletion vectors); the base
-    * reader separates the two (positions only advance on read groups it
-    * accounts for).
+  /** LOUD on a column widened after the reader bound its schema: the
+    * clipped file stores a wider type than the bound one (BIGINT under
+    * INT, DOUBLE under FLOAT, a grown decimal). Checked once per file.
     */
-  final class GroupIterator(
+  private def refuseWidened(requested: MessageType, bound: StructType): Unit = {
+    def check(name: String, want: DataType, stored: DataType): Unit =
+      (want, stored) match {
+        case (w: StructType, s: StructType) => w.fields.foreach(f =>
+          s.find(_.name.equalsIgnoreCase(f.name))
+            .foreach(g => check(s"$name.${f.name}", f.dataType, g.dataType)))
+        case (ArrayType(w, _), ArrayType(s, _)) => check(name, w, s)
+        case (MapType(wk, wv, _), MapType(sk, sv, _)) =>
+          check(name, wk, sk); check(name, wv, sv)
+        case _ => require(!LakeSnapshot.isWidening(want, stored),
+          s"graft-lake reader: column '$name' was WIDENED to ${stored.sql} " +
+            "after this reader bound its schema — restart the stream/" +
+            "query to pick up the widened type")
+      }
+    val stored = new ParquetToSparkSchemaConverter(SQLConf.get)
+      .convert(requested)
+    bound.fields.foreach(f => stored.find(_.name.equalsIgnoreCase(f.name))
+      .foreach(g => check(f.name, f.dataType, g.dataType)))
+  }
+
+  /** Streaming iterator over one parquet file's rows, shaped as
+    * `want(footer schema)` — a struct under PHYSICAL column names, where
+    * a field the file lacks reads null. Only the requested columns'
+    * chunks are fetched. With `skip` hints, a row group whose stats (the
+    * [[graft.etl.FileStats.blockStat]] fold, judged like a file) or native
+    * blooms prove no row can match is skipped WITHOUT reading its pages;
+    * `onSkip` gets its row count so callers keep row positions aligned.
+    * The converter REUSES its row: copy whatever outlives a `next()`.
+    */
+  final class RowIterator(
       path: String, conf: Configuration,
+      want: MessageType => StructType,
       skip: Seq[RowGroupFilter] = Nil,
-      onSkip: Long => Unit = _ => (),
-      project: MessageType => MessageType = identity)
-    extends Iterator[Group] with AutoCloseable {
+      onSkip: Long => Unit = _ => ())
+    extends Iterator[InternalRow] with AutoCloseable {
     private val reader =
       ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
+    private val meta = reader.getFooter.getFileMetaData
     /** the file's FULL footer schema — stats/bloom claims resolve here
       * (a filter column outside the projection must read "present",
       * never "evolution gap")
       */
-    val fullSchema: MessageType = reader.getFooter.getFileMetaData.getSchema
-    /** the schema the emitted Groups CARRY: the caller's projection of
-      * the footer schema (r18 — before this, every read materialized
-      * EVERY column's pages: a 2-column projection over a wide
-      * multimodal table still decoded the sibling binary payloads;
-      * `setRequestedSchema` makes parquet fetch only the projected
-      * column chunks, which is the entire point of columnar storage)
-      */
-    val fileSchema: MessageType = project(fullSchema)
-    if (!(fileSchema eq fullSchema)) reader.setRequestedSchema(fileSchema)
-    LakeGroupRead.leafColumnsRead.addAndGet(fileSchema.getPaths.size.toLong)
+    val fileSchema: MessageType = meta.getSchema
+    /** the schema of the emitted rows */
+    val schema: StructType = want(fileSchema)
+    private val requested =
+      ParquetReadSupport.getRequestedSchema(fileSchema, schema, conf, false)
+    refuseWidened(requested, schema)
+    reader.setRequestedSchema(requested)
+    leafColumnsRead.addAndGet(requested.getPaths.size.toLong)
+    private val materializer = GraftParquetRead.materializer(
+      requested, schema, meta.getKeyValueMetaData)
+    private val io = new ColumnIOFactory().getColumnIO(requested)
     private val blocks = reader.getFooter.getBlocks
     private var blockIdx = 0
-    private val io = new ColumnIOFactory().getColumnIO(fileSchema)
-    private var rr: org.apache.parquet.io.RecordReader[Group] = _
+    private var rr: org.apache.parquet.io.RecordReader[InternalRow] = _
     private var remaining = 0L
+    private def statsEmpty(
+        block: org.apache.parquet.hadoop.metadata.BlockMetaData): Boolean = {
+      val st = graft.etl.FileStats.blockStat(fileSchema, Seq(block))
+      skip.exists(_.provablyEmpty(st))
+    }
     // parquet-NATIVE bloom probes (r17 wave 5): within a file the
     // planner could not skip, an equality/IN hint probes each block's
     // own bloom ([[graft.etl.BloomStats.writeOptions]] wrote them) —
@@ -1494,7 +1483,7 @@ private[sources] object LakeGroupRead {
     override def hasNext: Boolean = {
       while (remaining == 0L) {
         while (skip.nonEmpty && blockIdx < blocks.size() &&
-            (groupProvablyEmpty(blocks.get(blockIdx), skip, fullSchema) ||
+            (statsEmpty(blocks.get(blockIdx)) ||
               bloomEmpty(blocks.get(blockIdx)))) {
           onSkip(blocks.get(blockIdx).getRowCount)
           skippedGroups.incrementAndGet()
@@ -1504,403 +1493,37 @@ private[sources] object LakeGroupRead {
         val pages = reader.readNextRowGroup()
         if (pages == null) return false
         blockIdx += 1
-        rr = io.getRecordReader(pages, new GroupRecordConverter(fileSchema))
+        rr = io.getRecordReader(pages, materializer)
         remaining = pages.getRowCount
       }
       true
     }
-    override def next(): Group = { remaining -= 1; rr.read() }
+    override def next(): InternalRow = { remaining -= 1; rr.read() }
     override def close(): Unit = reader.close()
-  }
 
-  /** True when `block`'s footer stats PROVE no row can satisfy some
-    * filter (comparison semantics: null rows never match, so an all-null
-    * or absent column chunk is skippable; missing/unknown stats are
-    * never skippable; INT96 stats are unusable).
-    */
-  def groupProvablyEmpty(
-      block: org.apache.parquet.hadoop.metadata.BlockMetaData,
-      filters: Seq[RowGroupFilter], fileSchema: MessageType): Boolean =
-    filters.exists(f => filterProvablyEmpty(block, f, fileSchema))
-
-  private def filterProvablyEmpty(
-      block: org.apache.parquet.hadoop.metadata.BlockMetaData,
-      f: RowGroupFilter, fileSchema: MessageType): Boolean = {
-      // an IN conjunct: empty only when every member equality is
-      if (f.op == "in")
-        return f.inSet.nonEmpty && f.inSet.forall(m =>
-          filterProvablyEmpty(block, m.copy(col = f.col), fileSchema))
-      // `isnull` inverts the null rule every comparison shares: an
-      // absent or all-null column MATCHES `IS NULL` (never skip), and
-      // the skip claim is "exact null count recorded as zero"
-      if (!fileSchema.containsField(f.col))
-        return f.op != "isnull" // all-null evolution gap
-      block.getColumns.asScala
-        .find(_.getPath.toDotString == f.col) match {
-        case None => f.op != "isnull" // chunk absent: all null in this group
-        case Some(cc) =>
-          val st = cc.getStatistics
-          if (st == null || st.isEmpty) false
-          else if (!st.hasNonNullValue) f.op != "isnull" // every value null
-          else if (f.op == "isnull") st.isNumNullsSet && st.getNumNulls == 0L
-          else if (f.op == "notnull") false // non-nulls exist: no claim
-          else {
-            val fileScale =
-              cc.getPrimitiveType.getLogicalTypeAnnotation match {
-                case a: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-                  a.getScale
-                case _ => -1
-              }
-            val pt = cc.getPrimitiveType.getPrimitiveTypeName
-            import PrimitiveType.PrimitiveTypeName._
-            if (fileScale >= 0) {
-              // DECIMAL chunk (r17): unscaled stats compare against a
-              // same-scale decimal predicate's unscaled value; any
-              // mismatch (scale, non-decimal filter, >63-bit) = no claim
-              def unscaled(v: Any): Option[Long] = v match {
-                case n: Number => Some(n.longValue())
-                case b: org.apache.parquet.io.api.Binary =>
-                  val bi = new java.math.BigInteger(b.getBytes)
-                  if (bi.bitLength < 64) Some(bi.longValue) else None
-                case _ => None
-              }
-              if (f.decScale != fileScale) false
-              else (unscaled(st.genericGetMin), unscaled(st.genericGetMax)) match {
-                case (Some(mn), Some(mx)) => provablyEmptyLong(f.op, f.lv, mn, mx)
-                case _ => false
-              }
-            } else (pt, f.isFloat) match {
-              case _ if f.decScale >= 0 => false // decimal filter, plain col
-              // STRING chunk vs string predicate (r17): unsigned byte
-              // order, parquet's own string comparator
-              case (BINARY, false) if f.sv != null &&
-                  cc.getPrimitiveType.getLogicalTypeAnnotation
-                    .isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
-                val mn = st.genericGetMin
-                  .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes
-                val mx = st.genericGetMax
-                  .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes
-                provablyEmptyBytes(f.op, f.sv, mn, mx)
-              case _ if f.sv != null => false // string filter, other family
-              case (INT64, false) | (INT32, false) =>
-                val (mn, mx) = (
-                  st.genericGetMin.asInstanceOf[Number].longValue(),
-                  st.genericGetMax.asInstanceOf[Number].longValue())
-                provablyEmptyLong(f.op, f.lv, mn, mx)
-              case (DOUBLE, true) | (FLOAT, true) =>
-                val (mn, mx) = (
-                  st.genericGetMin.asInstanceOf[Number].doubleValue(),
-                  st.genericGetMax.asInstanceOf[Number].doubleValue())
-                provablyEmptyDouble(f.op, f.dv, mn, mx)
-              case _ => false // family mismatch or INT96: no claim
-            }
-          }
-      }
-    }
-
-  private def provablyEmptyLong(
-      op: String, v: Long, mn: Long, mx: Long): Boolean = op match {
-    case "eq" => v < mn || v > mx
-    case "gt" => mx <= v
-    case "ge" => mx < v
-    case "lt" => mn >= v
-    case "le" => mn > v
-    case _ => false
-  }
-
-  private def provablyEmptyDouble(
-      op: String, v: Double, mn: Double, mx: Double): Boolean = op match {
-    case "eq" => v < mn || v > mx
-    case "gt" => mx <= v
-    case "ge" => mx < v
-    case "lt" => mn >= v
-    case "le" => mn > v
-    case _ => false
-  }
-
-  private def provablyEmptyBytes(
-      op: String, v: Array[Byte], mn: Array[Byte], mx: Array[Byte]): Boolean = {
-    import graft.etl.FileStats.{cmpUtf8, prefixSuccessor}
-    op match {
-      case "eq" => cmpUtf8(v, mn) < 0 || cmpUtf8(v, mx) > 0
-      case "gt" => cmpUtf8(mx, v) <= 0
-      case "ge" => cmpUtf8(mx, v) < 0
-      case "lt" => cmpUtf8(mn, v) >= 0
-      case "le" => cmpUtf8(mn, v) > 0
-      case "sw" =>
-        cmpUtf8(mx, v) < 0 ||
-          prefixSuccessor(v).exists(up => cmpUtf8(mn, up) >= 0)
-      case _ => false
-    }
-  }
-
-  private val JulianEpochDay = 2440588L // 1970-01-01 as a julian day
-
-  private def int96Micros(b: org.apache.parquet.io.api.Binary): Long = {
-    val bytes = b.getBytes // little-endian: 8B nanos-of-day, 4B julian day
-    val buf = java.nio.ByteBuffer.wrap(bytes)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nanos = buf.getLong
-    val julian = buf.getInt
-    (julian - JulianEpochDay) * 86400L * 1000000L + nanos / 1000L
-  }
-
-  private def timestampMicros(
-      g: Group, fs: GroupType, name: String): Long = {
-    val pt = fs.getType(fs.getFieldIndex(name)).asPrimitiveType()
-    if (pt.getPrimitiveTypeName == PrimitiveType.PrimitiveTypeName.INT96)
-      return int96Micros(g.getInt96(name, 0))
-    val raw = g.getLong(name, 0)
-    pt.getLogicalTypeAnnotation match {
-      case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-        t.getUnit match {
-          case LogicalTypeAnnotation.TimeUnit.MILLIS => raw * 1000L
-          case LogicalTypeAnnotation.TimeUnit.NANOS => Math.floorDiv(raw, 1000L)
-          case _ => raw
+    /** The fold-map key of a row over the key columns `parts`:
+      * numerics normalize (int → long, float → double) so a key column
+      * whose physical width differs across generations still collides;
+      * values are copied out of the reused row. A COMPOSITE key
+      * (`'a,b'`, r15) folds as the List of its parts — List equality
+      * makes tuple keys collide exactly. A part the file lacks is null.
+      */
+    def keyOf(parts: Seq[String]): InternalRow => Any = {
+      val at = parts.map(schema.fieldNames.indexOf(_)).toArray
+      def part(row: InternalRow, i: Int): Any = {
+        val o = at(i)
+        if (o < 0 || row.isNullAt(o)) null
+        else row.get(o, schema(o).dataType) match {
+          case v: Int => v.toLong
+          case v: Float => v.toDouble
+          case v: UTF8String => v.toString
+          case v: Decimal => v.toJavaBigDecimal
+          case v: Array[Byte] => v.toSeq
+          case v => v
         }
-      case _ => raw
-    }
-  }
-
-  /** The Catalyst-internal value of `name` under the declared Spark type
-    * — null when the column is absent from this file (schema evolution)
-    * or null in this row. Round-15 widening: DECIMAL reads whatever
-    * physical width the writing engine chose (int32/int64/binary/fixed —
-    * the FILE's annotation scale is authoritative, rescaled into the
-    * declared type), BINARY, and ARRAY as the standard 3-level LIST group.
-    */
-  def internalValue(
-      g: Group, fs: GroupType, name: String, dt: DataType): Any =
-    if (!fs.containsField(name)) null
-    else if (g.getFieldRepetitionCount(name) == 0) null
-    else dt match {
-      case TimestampType => timestampMicros(g, fs, name)
-      // TYPE WIDENING (r17): a LONG/DOUBLE-declared column may sit in a
-      // file written before the widen commit with the narrow physical
-      // type — upcast. The NARROWING direction (int-declared reading an
-      // int64 file) means the column widened after this consumer bound
-      // its schema: fail with the real story, not a ClassCastException.
-      case LongType =>
-        primName(fs, name) match {
-          case PrimitiveType.PrimitiveTypeName.INT32 =>
-            g.getInteger(name, 0).toLong
-          case _ => g.getLong(name, 0)
-        }
-      case IntegerType =>
-        require(primName(fs, name) != PrimitiveType.PrimitiveTypeName.INT64,
-          s"graft-lake reader: column '$name' was WIDENED to BIGINT " +
-            "after this reader bound its schema — restart the stream/" +
-            "query to pick up the widened type")
-        g.getInteger(name, 0)
-      case DateType => g.getInteger(name, 0)
-      case DoubleType =>
-        primName(fs, name) match {
-          case PrimitiveType.PrimitiveTypeName.FLOAT =>
-            g.getFloat(name, 0).toDouble
-          case _ => g.getDouble(name, 0)
-        }
-      case FloatType =>
-        require(primName(fs, name) != PrimitiveType.PrimitiveTypeName.DOUBLE,
-          s"graft-lake reader: column '$name' was WIDENED to DOUBLE " +
-            "after this reader bound its schema — restart the stream/" +
-            "query to pick up the widened type")
-        g.getFloat(name, 0)
-      case BooleanType => g.getBoolean(name, 0)
-      case StringType => UTF8String.fromString(g.getString(name, 0))
-      case BinaryType => g.getBinary(name, 0).getBytes
-      case d: DecimalType => decimalValue(g, fs, name, d)
-      case ArrayType(elem, _) => arrayValue(g, fs, name, elem)
-      case st: StructType =>
-        structValue(g.getGroup(name, 0),
-          fs.getType(fs.getFieldIndex(name)).asGroupType(), st)
-      case MapType(kt, vt, _) => mapValue(g, fs, name, kt, vt)
-      case other => throw new UnsupportedOperationException(
-        s"graft-lake reader: unsupported column type $other for '$name'")
-    }
-
-  /** A MAP column under the declared key/value types — the standard
-    * `repeated group key_value { key; value }` shape (Spark's `key_value
-    * /key/value` and the legacy `map/key/value` naming both read: access
-    * is positional on the entry group). Null values are entries with no
-    * `value`; map keys are required by the format.
-    */
-  private def mapValue(
-      g: Group, fs: GroupType, name: String,
-      kt: DataType, vt: DataType): Any = {
-    val mapGroup = g.getGroup(name, 0)
-    val entryType = fs.getType(fs.getFieldIndex(name)).asGroupType()
-      .getType(0).asGroupType()
-    val n = mapGroup.getFieldRepetitionCount(0)
-    val keys = new Array[Any](n)
-    val values = new Array[Any](n)
-    val keyName = entryType.getType(0).getName
-    val valName = entryType.getType(1).getName
-    var j = 0
-    while (j < n) {
-      val entry = mapGroup.getGroup(0, j)
-      keys(j) = elementValue(entry, keyName, 0, kt)
-      values(j) =
-        if (entry.getFieldRepetitionCount(1) == 0) null
-        else vt match {
-          case st: StructType =>
-            structValue(entry.getGroup(1, 0),
-              entryType.getType(1).asGroupType(), st)
-          case dd: DecimalType =>
-            decimalAt(entry, valName, 0,
-              entryType.getType(1).asPrimitiveType(), dd)
-          // arrays-in-maps / maps-in-maps (r17 wave 3): the value is
-          // itself a LIST / MAP group — recurse against the entry group
-          case at: ArrayType =>
-            arrayValue(entry, entryType, valName, at.elementType)
-          case mt: MapType =>
-            mapValue(entry, entryType, valName, mt.keyType, mt.valueType)
-          case _ => elementValue(entry, valName, 0, vt)
-        }
-      j += 1
-    }
-    new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(keys),
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(values))
-  }
-
-  /** A struct group under the declared struct type — fields recurse
-    * through [[internalValue]] (nested structs/arrays/decimals), absent
-    * fields null-fill like any evolved column.
-    */
-  private def structValue(
-      sub: Group, gt: GroupType, st: StructType): Any =
-    new GenericInternalRow(st.fields.map(f =>
-      internalValue(sub, gt, f.name, f.dataType)))
-
-  private def primName(
-      fs: GroupType, name: String): PrimitiveType.PrimitiveTypeName = {
-    val t = fs.getType(fs.getFieldIndex(name))
-    if (t.isPrimitive) t.asPrimitiveType().getPrimitiveTypeName else null
-  }
-
-  private def decimalValue(
-      g: Group, fs: GroupType, name: String, d: DecimalType): Any =
-    decimalAt(g, name, 0,
-      fs.getType(fs.getFieldIndex(name)).asPrimitiveType(), d)
-
-  /** One decimal under any of the writer's physical widths, at a field
-    * repetition index — shared by top-level columns (index 0) and
-    * array/map elements (ADVICE r15: elements and columns must read
-    * symmetrically).
-    */
-  private def decimalAt(
-      g: Group, name: String, j: Int,
-      pt: PrimitiveType, d: DecimalType): Any = {
-    val fileScale = pt.getLogicalTypeAnnotation match {
-      case a: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation => a.getScale
-      case _ => d.scale // unannotated physical: trust the declared type
-    }
-    val unscaled: java.math.BigInteger =
-      pt.getPrimitiveTypeName match {
-        case PrimitiveType.PrimitiveTypeName.INT32 =>
-          java.math.BigInteger.valueOf(g.getInteger(name, j).toLong)
-        case PrimitiveType.PrimitiveTypeName.INT64 =>
-          java.math.BigInteger.valueOf(g.getLong(name, j))
-        case _ => // BINARY / FIXED_LEN_BYTE_ARRAY: big-endian two's complement
-          new java.math.BigInteger(g.getBinary(name, j).getBytes)
       }
-    val dec = org.apache.spark.sql.types.Decimal(
-      new java.math.BigDecimal(unscaled, fileScale))
-    require(dec.changePrecision(d.precision, d.scale),
-      s"graft-lake reader: decimal value of '$name' (scale $fileScale) " +
-        s"does not fit the declared ${d.simpleString}")
-    dec
-  }
-
-  /** A LIST column under the declared element type. Handles the
-    * standard 3-level layout (`repeated group list { element }` — any
-    * repeated-group/field naming, so Spark-written `list/element` and
-    * legacy `bag/array` files both read) and the 2-level legacy
-    * `repeated <primitive>` form.
-    */
-  private def arrayValue(
-      g: Group, fs: GroupType, name: String, elem: DataType): Any = {
-    val field = fs.getType(fs.getFieldIndex(name))
-    if (field.isPrimitive) // 2-level legacy: repeated primitive
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        (0 until g.getFieldRepetitionCount(name))
-          .map(j => elementValue(g, name, j, elem)).toArray)
-    val listGroup = g.getGroup(name, 0)
-    val inner = field.asGroupType().getType(0)
-    val n = listGroup.getFieldRepetitionCount(0)
-    val vals = new Array[Any](n)
-    var j = 0
-    if (inner.isPrimitive) {
-      // 2-level inside an annotated group: repeated primitive elements
-      while (j < n) {
-        vals(j) = elementValue(listGroup, inner.getName, j, elem)
-        j += 1
-      }
-    } else {
-      // standard 3-level: one entry group per element, null = no value
-      val elemType = inner.asGroupType().getType(0)
-      val elemName = elemType.getName
-      while (j < n) {
-        val entry = listGroup.getGroup(0, j)
-        vals(j) =
-          if (entry.getFieldRepetitionCount(0) == 0) null
-          else elem match {
-            case st: StructType =>
-              structValue(entry.getGroup(0, 0), elemType.asGroupType(), st)
-            // arrays-of-arrays: the element is itself a LIST group (r16)
-            case at: ArrayType =>
-              arrayValue(entry, inner.asGroupType(), elemName, at.elementType)
-            // maps-in-arrays (r17 wave 3): the element is a MAP group
-            case mt: MapType =>
-              mapValue(entry, inner.asGroupType(), elemName,
-                mt.keyType, mt.valueType)
-            case dd: DecimalType =>
-              decimalAt(entry, elemName, 0, elemType.asPrimitiveType(), dd)
-            case _ => elementValue(entry, elemName, 0, elem)
-          }
-        j += 1
-      }
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(vals)
-  }
-
-  private def elementValue(
-      g: Group, name: String, j: Int, elem: DataType): Any = elem match {
-    case LongType | TimestampType => g.getLong(name, j)
-    case IntegerType | DateType => g.getInteger(name, j)
-    case DoubleType => g.getDouble(name, j)
-    case FloatType => g.getFloat(name, j)
-    case BooleanType => g.getBoolean(name, j)
-    case StringType => UTF8String.fromString(g.getString(name, j))
-    case BinaryType => g.getBinary(name, j).getBytes
-    case other => throw new UnsupportedOperationException(
-      s"graft-lake reader: unsupported array element type $other")
-  }
-
-  /** The fold-map key of this record: numerics normalize (int → long,
-    * float → double) so a key column whose physical width differs across
-    * generations still collides correctly; strings compare as String.
-    * A COMPOSITE key (`'a,b'`, r15) folds as the List of its parts'
-    * normalized values — List equality makes tuple keys collide exactly.
-    */
-  def keyValue(g: Group, fs: GroupType, name: String): Any = {
-    if (name.indexOf(',') >= 0)
-      return LakeSnapshot.keyParts(name).map(partValue(g, fs, _)).toList
-    partValue(g, fs, name)
-  }
-
-  private def partValue(g: Group, fs: GroupType, name: String): Any = {
-    if (!fs.containsField(name) || g.getFieldRepetitionCount(name) == 0)
-      return null
-    val pt =
-      fs.getType(fs.getFieldIndex(name)).asPrimitiveType().getPrimitiveTypeName
-    pt match {
-      case PrimitiveType.PrimitiveTypeName.INT64 => g.getLong(name, 0)
-      case PrimitiveType.PrimitiveTypeName.INT32 => g.getInteger(name, 0).toLong
-      case PrimitiveType.PrimitiveTypeName.DOUBLE => g.getDouble(name, 0)
-      case PrimitiveType.PrimitiveTypeName.FLOAT => g.getFloat(name, 0).toDouble
-      case PrimitiveType.PrimitiveTypeName.BOOLEAN => g.getBoolean(name, 0)
-      case _ => g.getString(name, 0)
+      if (at.length == 1) row => part(row, 0)
+      else row => at.indices.map(part(row, _)).toList
     }
   }
 
@@ -1920,14 +1543,18 @@ private[sources] object LakeGroupRead {
       deltas: Seq[LakeDeltaFileRef], key: String,
       conf: Configuration): java.util.HashMap[Any, LakeDeltaWin] = {
     val m = new java.util.HashMap[Any, LakeDeltaWin]()
+    val parts = LakeSnapshot.keyParts(key)
     deltas.sortBy(r => (r.seq, r.path)).foreach { ref =>
       deltaFileOpens.incrementAndGet()
-      val it = new GroupIterator(ref.path, conf)
+      val it = new RowIterator(ref.path, conf,
+        f => StructType(storedFields(f, parts :+ "__op")))
+      val keyOf = it.keyOf(parts)
+      val op = it.schema.fieldIndex("__op")
       var pos = -1L
-      try it.foreach { g =>
+      try it.foreach { row =>
         pos += 1
-        m.put(keyValue(g, it.fileSchema, key),
-          LakeDeltaWin(ref.seq, g.getString("__op", 0), ref.path, pos))
+        m.put(keyOf(row),
+          LakeDeltaWin(ref.seq, row.getUTF8String(op).toString, ref.path, pos))
       } finally it.close()
     }
     m
@@ -1976,7 +1603,7 @@ private[sources] object LakeDeltaStateCache {
     val memo = cache.synchronized {
       var m = cache.get(k)
       if (m == null) {
-        m = new Memo(() => LakeGroupRead.deltaState(deltas, key, conf))
+        m = new Memo(() => LakeParquetRead.deltaState(deltas, key, conf))
         cache.put(k, m)
       }
       m
@@ -1989,24 +1616,39 @@ private[sources] object LakeDeltaStateCache {
     cache.synchronized { cache.clear() }
 }
 
+/** A lake file reader of one day: the projected columns are requested
+  * under their physical names, the `day` partition value fills its slot
+  * per row, and the winner-map lookup reads the key columns — added to
+  * the request at their stored types when the projection lacks them.
+  */
 private[sources] abstract class LakeRowReader(
-    day: String, schema: StructType, physical: Array[String])
+    day: String, schema: StructType, physical: Array[String], key: String)
   extends PartitionReader[InternalRow] {
 
   private val epochDay: Int =
     java.time.LocalDate.parse(day).toEpochDay.toInt
+  private val dayAt = physical.indexOf(null)
+  private val projected = StructType(schema.fields.zip(physical).map {
+    case (f, null) => StructField(LakeParquetRead.DaySlot, f.dataType)
+    case (f, p) => StructField(p, f.dataType)
+  })
+  protected val keyParts: Seq[String] =
+    if (key == null) Nil else LakeSnapshot.keyParts(key)
 
-  protected def convert(g: Group, fs: MessageType): InternalRow = {
-    val vals = new Array[Any](schema.length)
-    var i = 0
-    while (i < schema.length) {
-      vals(i) =
-        if (physical(i) == null) epochDay // the day partition value
-        else LakeGroupRead.internalValue(
-          g, fs, physical(i), schema.fields(i).dataType)
-      i += 1
-    }
-    new GenericInternalRow(vals)
+  protected def open(
+      path: String, conf: Configuration, keyed: Boolean,
+      skip: Seq[RowGroupFilter] = Nil,
+      onSkip: Long => Unit = _ => ()): LakeParquetRead.RowIterator =
+    new LakeParquetRead.RowIterator(path, conf, file =>
+      if (!keyed) projected
+      else StructType(projected ++ LakeParquetRead.storedFields(
+        file, keyParts.filterNot(projected.fieldNames.contains))),
+      skip, onSkip)
+
+  /** `row` with the day partition value in its slot. */
+  protected def withDay(row: InternalRow): InternalRow = {
+    if (dayAt >= 0) row.setInt(dayAt, epochDay)
+    row
   }
 }
 
@@ -2020,9 +1662,9 @@ private[sources] class LakeBaseReader(
     part: LakeBaseFilePartition, schema: StructType,
     physical: Array[String], skip: Seq[RowGroupFilter],
     hadoopConf: Map[String, String])
-  extends LakeRowReader(part.day, schema, physical) {
+  extends LakeRowReader(part.day, schema, physical, part.key) {
 
-  private val conf = LakeGroupRead.confOf(hadoopConf)
+  private val conf = LakeParquetRead.confOf(hadoopConf)
   private val superseded =
     if (part.deltas.isEmpty) null
     else LakeDeltaStateCache.get(part.deltas, part.key, conf)
@@ -2035,11 +1677,12 @@ private[sources] class LakeBaseReader(
       val mine = norm(part.file)
       val s = new java.util.HashSet[Long]()
       part.dvFiles.foreach { f =>
-        val dvIt = new LakeGroupRead.GroupIterator(f, conf)
-        try dvIt.foreach { g =>
+        val dvIt = new LakeParquetRead.RowIterator(f, conf,
+          _ => new StructType().add("file", StringType).add("pos", LongType))
+        try dvIt.foreach { row =>
           // flat positional tombstones: only OUR file's rows apply
-          if (norm(g.getString("file", 0)) == mine)
-            s.add(g.getLong("pos", 0))
+          if (norm(row.getUTF8String(0).toString) == mine)
+            s.add(row.getLong(1))
         } finally dvIt.close()
       }
       s
@@ -2049,15 +1692,9 @@ private[sources] class LakeBaseReader(
   // a skipped group's rows still occupy POSITIONS in the file — advance
   // the running index so deletion-vector matching stays aligned (a
   // tombstoned row inside a skipped group is dead either way)
-  private val it = new LakeGroupRead.GroupIterator(
-    part.file, conf, skip, n => { pos += n; groupsSkipped += 1 },
-    // page-read projection (r18): only the projected physical columns'
-    // chunks are fetched — plus the key columns when a winner-map
-    // lookup needs them on this delta-carrying day
-    project = full => LakeGroupRead.projectionOf(
-      full, schema, physical,
-      if (superseded == null || part.key == null) Nil
-      else LakeSnapshot.keyParts(part.key)))
+  private val it = open(part.file, conf, keyed = superseded != null, skip,
+    n => { pos += n; groupsSkipped += 1 })
+  private val keyOf = if (superseded == null) null else it.keyOf(keyParts)
 
   // the row-group tier's per-query surface (r18): Spark aggregates these
   // across tasks into the scan node's "graftRowGroupsSkipped" SQL metric
@@ -2068,15 +1705,13 @@ private[sources] class LakeBaseReader(
 
   override def next(): Boolean = {
     while (it.hasNext) {
-      val g = it.next()
+      val row = it.next()
       pos += 1
       val dead =
         (tombstoned != null && tombstoned.contains(pos)) ||
-          (superseded != null &&
-            superseded.containsKey(
-              LakeGroupRead.keyValue(g, it.fileSchema, part.key)))
+          (superseded != null && superseded.containsKey(keyOf(row)))
       if (!dead) {
-        current = convert(g, it.fileSchema)
+        current = withDay(row)
         return true
       }
     }
@@ -2096,13 +1731,14 @@ private[sources] class LakeBaseReader(
 private[sources] class LakeDeltaFoldReader(
     part: LakeDeltaFoldPartition, schema: StructType,
     physical: Array[String], hadoopConf: Map[String, String])
-  extends LakeRowReader(part.day, schema, physical) {
+  extends LakeRowReader(part.day, schema, physical, part.key) {
 
-  private val conf = LakeGroupRead.confOf(hadoopConf)
+  private val conf = LakeParquetRead.confOf(hadoopConf)
   private val winners =
     LakeDeltaStateCache.get(part.deltas, part.key, conf)
   private val files = part.deltas.iterator
-  private var it: LakeGroupRead.GroupIterator = _
+  private var it: LakeParquetRead.RowIterator = _
+  private var keyOf: InternalRow => Any = _
   private var path: String = _
   private var pos = -1L
   private var current: InternalRow = _
@@ -2113,15 +1749,16 @@ private[sources] class LakeDeltaFoldReader(
         if (it != null) { it.close(); it = null }
         if (!files.hasNext) return false
         path = files.next().path
-        it = new LakeGroupRead.GroupIterator(path, conf)
+        it = open(path, conf, keyed = true)
+        keyOf = it.keyOf(keyParts)
         pos = -1L
       }
       while (it.hasNext) {
-        val g = it.next()
+        val row = it.next()
         pos += 1
-        val w = winners.get(LakeGroupRead.keyValue(g, it.fileSchema, part.key))
+        val w = winners.get(keyOf(row))
         if (w.pos == pos && w.path == path && w.op == "u") {
-          current = convert(g, it.fileSchema)
+          current = withDay(row)
           return true
         }
       }

@@ -219,6 +219,30 @@ class GraftLakeSourceSpec extends AnyFunSuite {
       }
   }
 
+  test("a ts filter over an adopted TIMESTAMP_MILLIS source returns " +
+    "the matching rows, with and without the stats sidecar") {
+    val root = freshDir("millis")
+    val src = s"$root/src"
+    val conf = "spark.sql.parquet.outputTimestampType"
+    val prev = spark.conf.get(conf)
+    spark.conf.set(conf, "TIMESTAMP_MILLIS")
+    try Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 09:00:00"), 1.0),
+        (2L, java.sql.Timestamp.valueOf("2024-01-01 11:00:00"), 2.0))
+      .toDF("event_id", "ts", "value")
+      .withColumn("day", to_date(col("ts"))).coalesce(1)
+      .write.partitionBy("day").parquet(src)
+    finally spark.conf.set(conf, prev)
+    val dir = s"$root/lake"
+    LakeSnapshot.adoptParquet(spark, dir, src, "event_id", "ts")
+    val cut = col("ts") >= lit("2024-01-01 10:30:00").cast("timestamp")
+    def ids(df: DataFrame): Seq[Long] =
+      df.filter(cut).select("event_id").as[Long].collect().toSeq
+    assert(ids(LakeSnapshot.read(spark, dir)) === Seq(2L))
+    assert(ids(dsv2(dir)) === Seq(2L), "sidecar present")
+    dropSidecars(dir)
+    assert(ids(dsv2(dir)) === Seq(2L), "row-group stats only")
+  }
+
   test("row-group stats skip provably-empty groups; results unchanged " +
     "and the filters surface as pushed") {
     val dir = freshDir("statskip")
@@ -233,14 +257,14 @@ class GraftLakeSourceSpec extends AnyFunSuite {
     dropSidecars(dir)
     val mn = ev.agg(min("user_id")).head().getLong(0)
     val filt = col("user_id") <= lit(mn) // selective: one user bucket
-    LakeGroupRead.skippedGroups.set(0L)
+    LakeParquetRead.skippedGroups.set(0L)
     val v2 = dsv2(dir).filter(filt)
       .agg(count(lit(1)), round(sum("value"), 2)).head()
     val sc = LakeSnapshot.read(spark, dir).filter(filt)
       .agg(count(lit(1)), round(sum("value"), 2)).head()
     assert(v2 === sc)
     assert(v2.getLong(0) > 0, "the probe key must exist")
-    assert(LakeGroupRead.skippedGroups.get() > 0,
+    assert(LakeParquetRead.skippedGroups.get() > 0,
       "narrow stats plus a selective filter must skip row groups")
     val explained = dsv2(dir).filter(filt)
       .queryExecution.executedPlan.toString
@@ -253,10 +277,10 @@ class GraftLakeSourceSpec extends AnyFunSuite {
     val dir = freshDir("statskip_rename")
     buildFullLake(dir) // value renamed to amount; physical stays `value`
     dropSidecars(dir)
-    LakeGroupRead.skippedGroups.set(0L)
+    LakeParquetRead.skippedGroups.set(0L)
     // nothing is ≥ 1e9 — every base group is provably empty by stats
     assert(dsv2(dir).filter(col("amount") >= 1e9).count() === 0L)
-    assert(LakeGroupRead.skippedGroups.get() > 0,
+    assert(LakeParquetRead.skippedGroups.get() > 0,
       "the impossible range must skip via the physical column's stats")
   }
 
@@ -375,9 +399,9 @@ class GraftLakeSourceSpec extends AnyFunSuite {
       "the fully-backfilled day must file-skip from its zero null count")
     // row-group layer agrees when the sidecar is gone
     dropSidecars(dir)
-    LakeGroupRead.skippedGroups.set(0L)
+    LakeParquetRead.skippedGroups.set(0L)
     assert(dsv2(dir).filter(col("src").isNull).count() === 2L)
-    assert(LakeGroupRead.skippedGroups.get() > 0,
+    assert(LakeParquetRead.skippedGroups.get() > 0,
       "the group layer must skip zero-null groups from footer null counts")
     // exactness against the Scala read
     assert(rows(dsv2(dir).filter(col("src").isNull)) ===
@@ -573,10 +597,10 @@ class GraftLakeSourceSpec extends AnyFunSuite {
     LakeSnapshot.deleteKeysDelta(spark, dir,
       Seq((2L, ts(1))).toDF("event_id", "ts"), "event_id", "ts")
     LakeDeltaStateCache.clear()
-    val before = LakeGroupRead.deltaFileOpens.get()
+    val before = LakeParquetRead.deltaFileOpens.get()
     val got = dsv2(dir).agg(count(lit(1)), round(sum("value"), 2))
       .as[(Long, Double)].head()
-    val opens = LakeGroupRead.deltaFileOpens.get() - before
+    val opens = LakeParquetRead.deltaFileOpens.get() - before
     // 6 base partitions + 1 fold partition all need the 2-file state;
     // the executor-wide memo folds it ONCE -> 2 opens, not 14
     assert(opens == 2L, s"expected 2 delta-file opens, got $opens")
@@ -586,9 +610,9 @@ class GraftLakeSourceSpec extends AnyFunSuite {
     LakeSnapshot.mergeDelta(spark, dir,
       Seq((3L, ts(1), 3000.0)).toDF("event_id", "ts", "value"),
       "event_id", "ts")
-    val before2 = LakeGroupRead.deltaFileOpens.get()
+    val before2 = LakeParquetRead.deltaFileOpens.get()
     val got2 = dsv2(dir).agg(round(sum("value"), 2)).as[Double].head()
-    assert(LakeGroupRead.deltaFileOpens.get() - before2 == 3L)
+    assert(LakeParquetRead.deltaFileOpens.get() - before2 == 3L)
     assert(got2 === got._2 - 3.0 + 3000.0)
   }
 
@@ -803,17 +827,17 @@ class GraftLakeSourceSpec extends AnyFunSuite {
     // …and the PAGE READS: 2 base files, ONE leaf column each (the
     // pre-r18 reader materialized every column's pages regardless of
     // the projection — payload, blob and all)
-    val c0 = LakeGroupRead.leafColumnsRead.get()
+    val c0 = LakeParquetRead.leafColumnsRead.get()
     assert(mimes.as[String].collect().toSet ===
       Set("image/1", "image/2"))
-    assert(LakeGroupRead.leafColumnsRead.get() - c0 === 2L,
+    assert(LakeParquetRead.leafColumnsRead.get() - c0 === 2L,
       "SELECT media.mime over 2 files must request exactly 2 leaves")
     // top-level projection too: one leaf per file (the frame is built
     // BEFORE the counter snapshot — schema inference may open files)
     val ids = dsv2(dir).select("doc_id")
-    val c1 = LakeGroupRead.leafColumnsRead.get()
+    val c1 = LakeParquetRead.leafColumnsRead.get()
     assert(ids.as[Long].collect().toSet === Set(1L, 2L))
-    assert(LakeGroupRead.leafColumnsRead.get() - c1 === 2L)
+    assert(LakeParquetRead.leafColumnsRead.get() - c1 === 2L)
     // the full struct still round-trips whole
     val full = dsv2(dir).select("doc_id", "media")
       .collect().map(r => (r.getLong(0),
@@ -846,10 +870,10 @@ class GraftLakeSourceSpec extends AnyFunSuite {
           "'payload', CAST('y' AS BINARY))) AS frames"),
       "doc_id", "ts")
     val fm = dsv2(dir2).select(col("frames.mime").as("mimes"))
-    val c2 = LakeGroupRead.leafColumnsRead.get()
+    val c2 = LakeParquetRead.leafColumnsRead.get()
     assert(fm.as[Seq[String]].collect().flatten.toSet
       === Set("f/1", "f/2", "g/1", "g/2"))
-    assert(LakeGroupRead.leafColumnsRead.get() - c2 === 2L,
+    assert(LakeParquetRead.leafColumnsRead.get() - c2 === 2L,
       "2 files x the one projected list leaf (mime) — payload chunks " +
         "must not be requested")
   }

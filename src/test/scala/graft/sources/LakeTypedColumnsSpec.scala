@@ -166,10 +166,10 @@ class LakeTypedColumnsSpec extends AnyFunSuite {
       assert(rows(3).isNullAt(1) && rows(3).getInt(6) === 0,
         "Group-written null struct + empty array-of-struct")
       // a nested-field predicate stays residual-correct (no stats claim)
-      val g0 = LakeGroupRead.skippedGroups.get()
+      val g0 = LakeParquetRead.skippedGroups.get()
       assert(spark.sql("SELECT id FROM graft.med WHERE media.width = 1280")
         .as[Long].collect().toSeq === Seq(1L))
-      assert(LakeGroupRead.skippedGroups.get() === g0,
+      assert(LakeParquetRead.skippedGroups.get() === g0,
         "nested predicates must never become stats skip hints")
     } finally spark.sql("DROP TABLE graft.med")
   }

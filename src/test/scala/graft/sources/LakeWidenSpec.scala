@@ -194,4 +194,41 @@ class LakeWidenSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toSet
     assert(folded === Set((1L, 5L), (2L, Long.MaxValue)))
   }
+
+  test("a reader bound before a widen refuses the wide generation loudly, " +
+    "once per file, with the restart instruction") {
+    val dir = s"$wh/pinned"
+    LakeSnapshot.merge(spark, dir,
+      Seq((1L, java.sql.Timestamp.valueOf(ts(1)), 5, 0.5f))
+        .toDF("event_id", "ts", "qty", "ratio"),
+      "event_id", "ts")
+    // the consumer binds its schema BEFORE the widen
+    val pinned = spark.read.format("graft-lake").option("path", dir).load()
+      .schema
+    assert(pinned("qty").dataType === org.apache.spark.sql.types.IntegerType)
+    LakeSnapshot.widenColumn(spark, dir, "qty",
+      org.apache.spark.sql.types.LongType)
+    LakeSnapshot.widenColumn(spark, dir, "ratio",
+      org.apache.spark.sql.types.DoubleType)
+    // a wide generation: a COW merge rewrites day 1 at the wide types
+    LakeSnapshot.merge(spark, dir,
+      Seq((2L, java.sql.Timestamp.valueOf(ts(1)), Long.MaxValue, 2.5))
+        .toDF("event_id", "ts", "qty", "ratio"),
+      "event_id", "ts")
+    def msgs(t: Throwable): String =
+      if (t == null) "" else t.getMessage + " " + msgs(t.getCause)
+    def refused(cols: String*): String = msgs(intercept[Exception](
+      spark.read.format("graft-lake").schema(pinned).option("path", dir)
+        .load().select(cols.map(col): _*).collect()))
+    val qty = refused("event_id", "qty")
+    assert(qty.contains("'qty' was WIDENED to BIGINT") &&
+      qty.contains("restart the stream/query"), qty)
+    val ratio = refused("event_id", "ratio")
+    assert(ratio.contains("'ratio' was WIDENED to DOUBLE") &&
+      ratio.contains("restart the stream/query"), ratio)
+    // a re-bound reader reads the wide generation whole
+    assert(spark.read.format("graft-lake").option("path", dir).load()
+      .select("event_id", "qty").as[(Long, Long)].collect().toSet ===
+      Set((1L, 5L), (2L, Long.MaxValue)))
+  }
 }
