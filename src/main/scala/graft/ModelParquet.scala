@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetOutputFormat, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
@@ -10,8 +10,8 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.types.StructType
 
-/** DRIVER-side parquet writer for MODEL-sized frames (OPTIMIZATION r20 —
-  * VERDICT r19 #6).
+/** DRIVER-side parquet writer and reader for MODEL-sized frames
+  * (OPTIMIZATION r20 — VERDICT r19 #6).
   *
   * Every index-epoch commit rewrote its centroid/codebook frames through a
   * `coalesce(1).write` Spark job — a full scheduler round-trip (job, stage,
@@ -19,18 +19,20 @@ import org.apache.spark.sql.types.StructType
   * ALREADY driver-resident in most flows (the trainers collect the model;
   * the append paths collect it for the assignment kernels). At sf0.1 that
   * was 4+ such jobs per lifecycle entry (~0.1 s each); at cluster scale it
-  * is a pointless job per epoch on the maintenance path.
+  * is a pointless job per epoch on the maintenance path. Reading a stored
+  * model back cost a job too: a scan plus a collect, or a broadcast.
   *
-  * Two primitives, both zero-job:
+  * Three primitives, all zero-job:
   *
   *   - [[overwrite]]/[[overwriteFrom]]: write the rows as ONE parquet file
   *     through Spark's own `ParquetWriteSupport` — the exact row codec,
   *     logical types, and footer schema metadata a Spark write job
   *     produces, so every `spark.read.parquet` consumer sees an identical
   *     surface. (A `collect()` of a driver-local frame — `Seq.toDF` —
-  *     plans a LocalTableScan and launches NO job; read-back frames cost
-  *     one small collect job, still cheaper than the write job they
-  *     replace.)
+  *     plans a LocalTableScan and launches NO job.)
+  *   - [[read]]: the twin of [[overwrite]] — the rows and schema
+  *     `spark.read.parquet(dir).collect()` returns, decoded on the driver
+  *     by the lake's one record reader (Spark's row converter).
   *   - [[copyDir]]: byte-for-byte FS copy of a committed model directory
   *     into a new epoch directory — for the append/compact/retrain paths
   *     that re-publish an UNCHANGED model under the new epoch. Exactness
@@ -38,7 +40,7 @@ import org.apache.spark.sql.types.StructType
   *
   * Strictly for model-sized data (nLists ≈ √N rows, nSub × nCodes
   * codebook entries — the spark.ml "driver holds the model" shape); data
-  * frames keep their distributed writes.
+  * frames keep their distributed writes and reads.
   */
 object ModelParquet {
 
@@ -90,32 +92,61 @@ object ModelParquet {
       .build()
 
   /** [[overwrite]] of a DataFrame's rows: job-free for driver-local frames
-    * (LocalTableScan collects without a job), one small collect job for
-    * read-back frames. Model-sized inputs only.
+    * (LocalTableScan collects without a job), one small collect job for a
+    * frame that scans files. Model-sized inputs only.
     */
   def overwriteFrom(df: DataFrame, dir: String): Unit =
     overwrite(df.sparkSession, df.schema, df.collect().toSeq, dir)
 
+  /** The rows and schema `spark.read.parquet(dir).collect()` returns for
+    * a model-sized directory, read on the driver with no Spark job. The
+    * schema is the first data file's footer schema, as schema inference
+    * takes it; the data files decode in name order through
+    * [[graft.sources.LakeParquetRead.RowIterator]] under that schema.
+    */
+  def read(spark: SparkSession, dir: String): (StructType, Seq[Row]) = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = dataFiles(spark, dir).filter(_.getLen > 0)
+    require(files.nonEmpty, s"no model data file under $dir")
+    val schema = org.apache.spark.sql.graftbridge.GraftBridge
+      .parquetFileSchema(spark, files.head, conf)
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    val rows = files.flatMap { st =>
+      val it = new graft.sources.LakeParquetRead.RowIterator(
+        st.getPath.toString, conf, _ => schema)
+      // the converter reuses its row; the external copy does not
+      try it.map(r => toRow(r).asInstanceOf[Row]).toVector finally it.close()
+    }
+    (schema, rows)
+  }
+
   /** Byte-for-byte copy of a committed (model-sized) parquet directory's
-    * visible files into `dst` (replacing it) — the zero-job, trivially
-    * exact way to re-publish an unchanged model under a new epoch.
+    * data files into `dst` (replacing it) — the zero-job, trivially exact
+    * way to re-publish an unchanged model under a new epoch.
     */
   def copyDir(spark: SparkSession, src: String, dst: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val srcPath = new Path(src)
     val dstPath = new Path(dst)
-    val fs = srcPath.getFileSystem(conf)
+    val fs = new Path(src).getFileSystem(conf)
     fs.delete(dstPath, true)
     fs.mkdirs(dstPath)
-    fs.listStatus(srcPath).toSeq
+    dataFiles(spark, src).foreach { st =>
+      org.apache.hadoop.fs.FileUtil.copy(
+        fs, st.getPath, fs, new Path(dstPath, st.getPath.getName),
+        false, conf)
+    }
+  }
+
+  /** The files of `dir` a Spark scan reads (no `_`/`.` names: job
+    * markers and checksums), in name order.
+    */
+  private def dataFiles(spark: SparkSession, dir: String): Seq[FileStatus] = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
       .filter { st =>
         val n = st.getPath.getName
         st.isFile && !n.startsWith("_") && !n.startsWith(".")
       }
-      .foreach { st =>
-        org.apache.hadoop.fs.FileUtil.copy(
-          fs, st.getPath, fs, new Path(dstPath, st.getPath.getName),
-          false, conf)
-      }
+      .sortBy(_.getPath.getName)
   }
 }

@@ -117,8 +117,9 @@ object BloomStats {
     // logical -> physical: sidecars key the names the FILES carry, the
     // same resolution the planner's skip hints go through
     val phys = physOf(spark, dir)
-    val df = spark.read.parquet(genDir)
-    val fields = df.schema.fields.map(f => f.name -> f.dataType).toMap
+    val schema = LakeSnapshot.inferredSchema(spark, genDir)
+    val df = spark.read.schema(schema).parquet(genDir)
+    val fields = schema.fields.map(f => f.name -> f.dataType).toMap
     val cols: Seq[(String, String)] = declared.map(phys).distinct.flatMap {
       c => fields.get(c) match {
         case Some(StringType) => Some(c -> "s")

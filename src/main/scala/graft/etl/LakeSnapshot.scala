@@ -528,18 +528,18 @@ object LakeSnapshot {
     val m = new Path(LakePaths(dir).manifest)
     val f = fsOf(spark, dir)
     // hint-NAMED files (`_next_gen-<N>`): the file name IS the value, so
-    // a reader takes the max over one listing and never opens a hint file
+    // a reader takes the max over listings and never opens a hint file
     // — no delete→rename visibility gap (the ADVICE r13 number-reuse
     // hazard) and no CRC pairing window (the VERDICT r13 p23
-    // ChecksumException abort), both impossible by construction
-    val named = try {
-      if (!f.exists(m)) 0
-      else f.listStatus(m).iterator.map(_.getPath.getName)
-        .filter(_.startsWith("_next_gen-"))
-        .flatMap(n =>
-          scala.util.Try(n.stripPrefix("_next_gen-").toInt).toOption)
-        .foldLeft(0)(math.max)
-    } catch { case _: java.io.IOException => 0 }
+    // ChecksumException abort), both impossible by construction.
+    // A listing is not atomic: one that races a bump can pass the new
+    // hint's slot before its create and reach the retired hint's slot
+    // after its delete, missing both. A bump retires lower hints only
+    // once a listing has shown its new one, so a SECOND listing, begun
+    // after the first ended, sees the new hint (unless a further bump
+    // retired it meanwhile, leaving a higher one).
+    val named =
+      if (!f.exists(m)) 0 else math.max(listedHint(f, m), listedHint(f, m))
     // legacy single-file hint (pre-r14 lakes): value-bearing, so reading
     // it can race a legacy writer's swap — ANY IO failure (not just FNF:
     // ChecksumException is an IOException too) reads as 0; the claim
@@ -559,6 +559,21 @@ object LakeSnapshot {
     math.max(named, legacy)
   }
 
+  /** The highest `_next_gen-<N>` in one listing of the manifest
+    * directory. A listing that throws (a hint retired between the
+    * listing's read of names and its stat of them can fail it) is retried,
+    * never read as 0; one that keeps throwing fails loudly.
+    */
+  private def listedHint(f: FileSystem, m: Path): Int = {
+    def list(attempt: Int): Array[org.apache.hadoop.fs.FileStatus] =
+      try f.listStatus(m)
+      catch { case _: java.io.IOException if attempt < 8 => list(attempt + 1) }
+    list(1).iterator.map(_.getPath.getName)
+      .filter(_.startsWith("_next_gen-"))
+      .flatMap(n => scala.util.Try(n.stripPrefix("_next_gen-").toInt).toOption)
+      .foldLeft(0)(math.max)
+  }
+
   private[etl] def bumpGenHint(
       spark: SparkSession, dir: String, next: Int): Unit = {
     val m = LakePaths(dir).manifest
@@ -569,19 +584,22 @@ object LakeSnapshot {
     try { f.create(new Path(m, s"_next_gen-$next"), false).close() }
     catch { case _: java.io.IOException => () }
     // retire lower-valued hints (and any legacy file — provably < next,
-    // genHint folds it into the max) only AFTER the new hint is visible,
-    // so a concurrent listing always sees a value >= the pre-bump max
+    // genHint folds it into the max) only once a listing has shown the new
+    // hint, so every listing begun after the retirement sees a value >=
+    // the pre-bump max
     try {
-      f.listStatus(new Path(m)).foreach { st =>
-        val n = st.getPath.getName
-        val stale =
-          if (n == "_next_gen") true
-          else if (n.startsWith("_next_gen-"))
-            scala.util.Try(n.stripPrefix("_next_gen-").toInt)
-              .toOption.exists(_ < next)
-          else false
-        if (stale) f.delete(st.getPath, false)
-      }
+      val listed = f.listStatus(new Path(m))
+      if (listed.exists(_.getPath.getName == s"_next_gen-$next"))
+        listed.foreach { st =>
+          val n = st.getPath.getName
+          val stale =
+            if (n == "_next_gen") true
+            else if (n.startsWith("_next_gen-"))
+              scala.util.Try(n.stripPrefix("_next_gen-").toInt)
+                .toOption.exists(_ < next)
+            else false
+          if (stale) f.delete(st.getPath, false)
+        }
     } catch { case _: java.io.IOException => () }
   }
 
@@ -682,6 +700,42 @@ object LakeSnapshot {
       }.minByOption(_.getPath.toString)
     }.nextOption().map(GraftBridge.parquetFileSchema(
       spark, _, spark.sparkContext.hadoopConfiguration))
+
+  /** The schema `spark.read.parquet(dir)` infers for a directory of data
+    * files, or of `day=YYYY-MM-DD` leaves, from one footer read on the
+    * driver ([[footerSchema]]) instead of an inference job.
+    */
+  private[graft] def inferredSchema(
+      spark: SparkSession, dir: String): org.apache.spark.sql.types.StructType = {
+    val days = fsOf(spark, dir).listStatus(new Path(dir)).toSeq
+      .filter(st => st.isDirectory && DayLeaf.matches(st.getPath.getName))
+      .map(_.getPath.toString).sorted
+    val data = footerSchema(spark, if (days.isEmpty) Seq(dir) else days)
+      .getOrElse(throw new IllegalArgumentException(
+        s"no parquet data file under $dir to take a schema from"))
+    if (days.isEmpty) data else withDayColumn(data)
+  }
+
+  private val DayLeaf = "day=\\d{4}-\\d{2}-\\d{2}".r
+
+  /** `data` with the `day` partition column as schema inference types a
+    * `day=YYYY-MM-DD` value: DATE, in place when the files carry the
+    * column, else after the file columns.
+    */
+  private[graft] def withDayColumn(
+      data: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types.{DateType, StructField, StructType}
+    if (data.fieldNames.contains("day"))
+      StructType(data.map(f => if (f.name == "day") f.copy(dataType = DateType) else f))
+    else data.add(StructField("day", DateType))
+  }
+
+  /** `spark.read.parquet(dir)` of a flat directory with its schema from
+    * one footer ([[inferredSchema]]): planning launches no Spark job.
+    */
+  private[graft] def readFlat(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(inferredSchema(spark, dir)).parquet(dir)
 
   /** The file columns behind `groups` of generation leaf directories
     * (`<root>/gen=G/day=D`), each tagged with the group that first
@@ -1849,19 +1903,18 @@ object LakeSnapshot {
     require(!f.exists(new Path(srcDir, "manifest")),
       s"$srcDir already looks like a graft lake (has manifest/) — " +
         "read it directly instead of converting")
-    val DayName = "day=\\d{4}-\\d{2}-\\d{2}".r
     val kids = f.listStatus(src).toSeq
     val strays = kids.filter { st =>
       val n = st.getPath.getName
       !(n.startsWith("_") || n.startsWith(".")) &&
-        !(st.isDirectory && DayName.matches(n))
+        !(st.isDirectory && DayLeaf.matches(n))
     }
     require(strays.isEmpty,
       s"conversion source $srcDir must contain only day=YYYY-MM-DD " +
         s"directories (plus _/. metadata files) — found " +
         strays.map(_.getPath.getName).sorted.take(6).mkString(", "))
     val dayDirs = kids
-      .filter(st => st.isDirectory && DayName.matches(st.getPath.getName))
+      .filter(st => st.isDirectory && DayLeaf.matches(st.getPath.getName))
     require(dayDirs.nonEmpty, s"no day=YYYY-MM-DD directories at $srcDir")
     val files = dayDirs.flatMap(d => f.listStatus(d.getPath).filter { st =>
       val n = st.getPath.getName
@@ -1889,7 +1942,9 @@ object LakeSnapshot {
     val days = dayDirs.map(_.getPath.getName.stripPrefix("day="))
       .sorted
     if (validate) {
-      val rows = spark.read.parquet(srcDir)
+      require(fileSchemas.nonEmpty, s"no parquet data file under $srcDir")
+      val rows = spark.read.schema(withDayColumn(fileSchemas.head._2))
+        .parquet(srcDir)
       require(rows.columns.contains(keyCol) && rows.columns.contains(tsCol),
         s"key '$keyCol' / ts '$tsCol' must be columns of the source " +
           s"(found ${rows.columns.toSeq.filterNot(_ == "day")})")
@@ -2436,8 +2491,12 @@ object LakeSnapshot {
           .headOption
       anyDay match {
         case Some(d) =>
+          val leaf = d.getPath.toString
           return keyFirst(
-            spark.read.option("basePath", p.data).parquet(d.getPath.toString)
+            spark.read
+              .schema(withDayColumn(inferredSchema(spark, leaf)
+                .add("gen", org.apache.spark.sql.types.IntegerType)))
+              .option("basePath", p.data).parquet(leaf)
               .drop("gen").withColumn("day", col("day").cast("date"))
               .limit(0).withColumn("_change_type", lit("")))
         case None => sys.error(
@@ -2533,7 +2592,7 @@ object LakeSnapshot {
         else f.listStatus(root).filter(_.isDirectory).toSeq
       require(anyGen.nonEmpty,
         s"no cdf sidecars exist at $dir — cannot derive a feed schema")
-      return spark.read.parquet(anyGen.head.getPath.toString)
+      return readFlat(spark, anyGen.head.getPath.toString)
         .limit(0).withColumn("_commit_epoch", lit(0))
     }
     // a RENAME/DROP inside the window: a sidecar committed BEFORE the
@@ -2549,7 +2608,7 @@ object LakeSnapshot {
             kv.get("dropcol").map(v => (e, "dropcol", v))
         }.sortBy(_._1)
     gens.map { case (e, g) =>
-      val raw = spark.read.parquet(s"${p.cdf}/gen=$g")
+      val raw = readFlat(spark, s"${p.cdf}/gen=$g")
       colOps.filter(_._1 > e).foldLeft(raw) { case (df, (_, kind, v)) =>
         kind match {
           case "rename" =>

@@ -2,8 +2,9 @@ package graft.ops
 
 import scala.util.Random
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.GraftFunctions
 
 /** Embedding similarity operators (SURVEY.md §2.1 K3/K4 scale path).
@@ -251,9 +252,19 @@ object Similarity {
 
   /** Collected (list_id, centroid) rows, sorted by list id. */
   private def collectCentroids(centroids: DataFrame): Seq[(Int, Seq[Double])] =
-    centroids
-      .select(col("list_id").cast("int"), col("centroid").cast("array<double>"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq
+    centroidsOf(centroids
+      .select(col("list_id").cast("int").as("list_id"),
+        col("centroid").cast("array<double>").as("centroid"))
+      .collect().toSeq)
+
+  /** (list_id, centroid) of model rows (an int `list_id`, a numeric-array
+    * `centroid`, widened to double as [[collectCentroids]]' cast widens),
+    * sorted by list id.
+    */
+  private def centroidsOf(rows: Seq[Row]): Seq[(Int, Seq[Double])] =
+    rows.map(r => (r.getAs[Number]("list_id").intValue,
+      r.getSeq[Any](r.fieldIndex("centroid"))
+        .map(_.asInstanceOf[Number].doubleValue).toSeq))
       .sortBy(_._1)
 
   /** Nearest-centroid assignment — the k-means criterion [[ivfAdd]] and
@@ -517,8 +528,16 @@ object Similarity {
 
   /** Collected (m, code, qsub) codebook rows, sorted by (m, code). */
   private def collectCodebooks(codebooks: DataFrame): Seq[(Int, Int, Seq[Long])] =
-    codebooks.select(col("m").cast("int"), col("code").cast("int"), col("qsub"))
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2))).toSeq
+    codebooksOf(codebooks
+      .select(col("m").cast("int").as("m"), col("code").cast("int").as("code"),
+        col("qsub"))
+      .collect().toSeq)
+
+  /** (m, code, qsub) of codebook rows, sorted by (m, code). */
+  private def codebooksOf(rows: Seq[Row]): Seq[(Int, Int, Seq[Long])] =
+    rows.map(r => (r.getAs[Number]("m").intValue,
+      r.getAs[Number]("code").intValue,
+      r.getSeq[Long](r.fieldIndex("qsub")).toSeq))
       .sortBy(e => (e._1, e._2))
 
   private def codebooksLiteral(
@@ -890,12 +909,64 @@ object Similarity {
   private def ivf(dir: String): EpochIndex = EpochIndex(dir, Seq("n_lists"),
     Seq("assigned", "codes"), "list_id", models = Seq("centroids", "codebooks"))
 
-  /** The stored model `m` (`centroids` or `codebooks`) of `epoch`, planned
-    * from its footer schema without a Spark job.
+  /** The stored model `m` (`centroids` or `codebooks`) of `epoch`: its
+    * schema and rows, read on the driver with no Spark job
+    * ([[graft.ModelParquet.read]]). Only a committed view's epoch is ever
+    * asked for, so a claimed but uncommitted model is never read.
     */
   private def ivfModel(spark: SparkSession, dir: String, m: String,
-      epoch: Int): DataFrame =
-    ivf(dir).committed(spark, m, Seq(epoch)).drop("epoch")
+      epoch: Int): (StructType, Seq[Row]) =
+    graft.ModelParquet.read(spark, s"${ivf(dir).path(m)}/epoch=$epoch")
+
+  /** A stored model as a driver-local frame, for plans that join it. */
+  private def localFrame(spark: SparkSession,
+      model: (StructType, Seq[Row])): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(model._2.asJava, model._1)
+  }
+
+  /** A probe's lists and query. The query's `qvec` rows are collected
+    * once (no job for a driver-local query). The `nProbe` lists are the
+    * stored centroids of `epoch` ranked by `cosine_sim(centroid, qvec)`
+    * against every query row, on the driver: the same
+    * [[graft.functions.CosineSimilarity]] expression is evaluated (its
+    * `eval` does the codegen path's arithmetic), and [[byCsimDesc]] orders
+    * exactly as `orderBy(csim.desc, list_id)` does. The column, added to
+    * candidate rows, gives each one row per `qvec` — what a crossJoin with
+    * the query frame gives, without planning a broadcast of it.
+    */
+  private[ops] def rankLists(spark: SparkSession, dir: String, epoch: Int,
+      query: DataFrame, nProbe: Int): (Seq[Int], Column) = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val q = query.select(col("qvec"), col("qvec").cast("array<double>"))
+    val qs = q.collect().toSeq
+    val (schema, cents) = ivfModel(spark, dir, "centroids", epoch)
+    val scored = for (qr <- qs; c <- cents) yield
+      (c.getAs[Number]("list_id").intValue,
+        graft.functions.CosineSimilarity(
+          Literal.create(c.getAs[Any]("centroid"), schema("centroid").dataType),
+          Literal.create(qr.get(1), q.schema(1).dataType)).eval())
+    val qvec = explode(org.apache.spark.sql.graftbridge.GraftBridge.column(
+      Literal.create(qs.map(_.get(0)),
+        org.apache.spark.sql.types.ArrayType(q.schema(0).dataType))))
+    (scored.sorted(byCsimDesc).take(nProbe).map(_._1), qvec)
+  }
+
+  /** `orderBy(csim.desc, list_id)` over (list_id, csim) pairs: cosine
+    * descending with NULLS LAST, doubles compared as Spark's sort compares
+    * them (NaN greatest, -0.0 equal to 0.0), then list id ascending.
+    */
+  private[ops] val byCsimDesc: Ordering[(Int, Any)] = { (a, b) =>
+    val c = (a._2, b._2) match {
+      case (null, null) => 0
+      case (null, _) => 1
+      case (_, null) => -1
+      case (x: Double, y: Double) =>
+        org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(y, x)
+      case (x, y) => sys.error(s"cosine is not a double: $x, $y")
+    }
+    if (c != 0) c else Integer.compare(a._1, b._1)
+  }
 
   /** Persist a built IVF index: `assigned/epoch=E/list_id=L/` is PHYSICALLY
     * partitioned by inverted list, so a probe's `list_id IN (...)` prunes
@@ -928,18 +999,18 @@ object Similarity {
   }
 
   /** One claimed, tag-idempotent IVF/IVFPQ append epoch. `surfaces` gets
-    * a reader of the stored models and returns the epoch's data rows. The
-    * quantizers never refit on append, so the models are byte-copied
-    * forward. A tagged redelivery returns the epoch that already carries
+    * the view's epoch, whose stored models it reads, and returns the
+    * epoch's data rows. The quantizers never refit on append, so the
+    * models are byte-copied forward. A tagged redelivery returns the epoch that already carries
     * the tag, so a caller pinning the append into a LakeTxn row pins the
     * SAME epoch.
     */
   private def appendIvfEpoch(spark: SparkSession, dir: String, tag: String)(
-      surfaces: (String => DataFrame) => Seq[(String, () => DataFrame)]): Int = {
+      surfaces: Int => Seq[(String, () => DataFrame)]): Int = {
     val idx = ivf(dir)
     val v = idx.view(spark)
     v.prior(tag).getOrElse {
-      val data = surfaces(m => ivfModel(spark, dir, m, v.epoch))
+      val data = surfaces(v.epoch)
       val e = idx.claim(spark, v)
       idx.write(spark, e, data)
       idx.copyModels(spark, v.epoch, e)
@@ -955,9 +1026,9 @@ object Similarity {
   def appendToIvfIndex(
       rows: DataFrame, idCol: String, vecCol: String, dir: String,
       tag: String = ""): Int =
-    appendIvfEpoch(rows.sparkSession, dir, tag) { model =>
-      val centroids = model("centroids")
-      Seq("assigned" -> (() => assignToNearest(rows, idCol, vecCol, centroids)))
+    appendIvfEpoch(rows.sparkSession, dir, tag) { epoch =>
+      val cents = centroidsOf(ivfModel(rows.sparkSession, dir, "centroids", epoch)._2)
+      Seq("assigned" -> (() => assignToNearestSeq(rows, idCol, vecCol, cents)))
     }
 
   /** The index's vector rows AS OF `asOf` — (id, v, list_id, epoch) over
@@ -989,7 +1060,8 @@ object Similarity {
     ivf(dir).vacuum(spark, retainMs)
 
   /** The probed candidate read against the PERSISTED index: rank the
-    * stored centroids, then read only `list_id IN (...)` across committed
+    * stored centroids on the driver ([[rankLists]]; no job for a
+    * driver-local query), then read only `list_id IN (...)` across committed
     * epochs — both `epoch` and `list_id` are partition columns, so the
     * scan's PartitionFilters prove the pruned read (plan-locked in
     * SimilaritySpec). Package-visible split from [[ivfProbePersisted]] so
@@ -1002,19 +1074,10 @@ object Similarity {
       nProbe: Int = 4,
       asOf: Int = Int.MaxValue): DataFrame = {
     val v = ivf(dir).view(spark, asOf)
-    val centroids = ivfModel(spark, dir, "centroids", v.epoch)
-    val probeIds = query
-      .crossJoin(broadcast(centroids))
-      .select(col("list_id"),
-        GraftFunctions.cosine_sim(
-          col("centroid"), col("qvec").cast("array<double>")).as("csim"))
-      .orderBy(col("csim").desc, col("list_id"))
-      .limit(nProbe)
-      .select("list_id")
-      .collect().map(_.getInt(0)).toSeq // nProbe ints: probe metadata, not data
+    val (probeIds, qvec) = rankLists(spark, dir, v.epoch, query, nProbe)
     ivf(dir).committed(spark, "assigned", v.live)
       .where(col("list_id").isin(probeIds: _*))
-      .crossJoin(broadcast(query))
+      .withColumn("qvec", qvec)
       .select(
         col("id"),
         GraftFunctions.cosine_sim(col("v"), col("qvec")).as("cos"))
@@ -1088,14 +1151,11 @@ object Similarity {
     saveIvfEpoch(ivf, Seq("codes" -> (() => codes)), Some(pq.codebooks), dir)
   }
 
-  /** PQ shape recovered from a persisted codebooks frame — model-sized
-    * driver reads, no extra manifest fields to drift out of sync.
+  /** The PQ subspace width of stored codebook rows — recovered from the
+    * model, no extra manifest field to drift out of sync.
     */
-  private def pqMetaOf(codebooks: DataFrame): (Int, Int, Int) = {
-    val r = codebooks
-      .agg(max(col("m")), max(col("code")), max(size(col("qsub")))).head()
-    (r.getInt(0) + 1, r.getInt(2), r.getInt(1) + 1) // (nSub, subDim, nCodes)
-  }
+  private def subDimOf(books: (StructType, Seq[Row])): Int =
+    codebooksOf(books._2).map(_._3.size).max
 
   /** Incremental IVFPQ ingest: assign with the STORED centroids, encode
     * with the STORED codebooks (quantizers never refit on append — the
@@ -1106,16 +1166,17 @@ object Similarity {
       rows: DataFrame, idCol: String, vecCol: String, dir: String,
       tag: String = ""): Unit = {
     val spark = rows.sparkSession
-    appendIvfEpoch(spark, dir, tag) { model =>
+    appendIvfEpoch(spark, dir, tag) { epoch =>
       // r19 (guide §2.4): assignment and encoding are both per-row kernels
       // over the same batch, so the codes frame is ONE fused map pass.
       // The kernels are pure functions of (v, model), and the null-codes
       // filter drops never-encoded rows.
-      val cents = collectCentroids(model("centroids"))
+      val cents = centroidsOf(ivfModel(spark, dir, "centroids", epoch)._2)
       val booksC = booksLiteral(spark,
         cents.map { case (lid, c) => (0, lid, c) },
         org.apache.spark.sql.types.DoubleType)
-      val booksQ = codebooksLiteral(spark, collectCodebooks(model("codebooks")))
+      val booksQ = codebooksLiteral(spark,
+        codebooksOf(ivfModel(spark, dir, "codebooks", epoch)._2))
       val both = rows
         .select(col(idCol).as("id"), col(vecCol).as("v"))
         .withColumn("list_id", element_at(
@@ -1204,9 +1265,9 @@ object Similarity {
   }
 
   /** Top-k against the persisted IVFPQ index, touching storage in the
-    * production order: centroids (model-sized) → the probed lists' CODE
-    * partitions (the ~3%-of-bytes tier; `epoch`/`list_id` pruned,
-    * plan-locked) → full vectors for ONLY the `rerank` ADC-best rows.
+    * production order: centroids and codebooks (model-sized, read and the
+    * lists ranked on the driver) → the probed lists' CODE partitions (the
+    * ~3%-of-bytes tier; `epoch`/`list_id` pruned, plan-locked) → full vectors for ONLY the `rerank` ADC-best rows.
     * Equals the in-memory [[ivfPqTopK]] over the same logical content —
     * k3l shares k3i's DuckDB oracle verbatim to prove it.
     */
@@ -1219,16 +1280,10 @@ object Similarity {
       rerank: Int = 50,
       asOf: Int = Int.MaxValue): DataFrame = {
     val v = ivf(dir).view(spark, asOf)
-    val centroids = ivfModel(spark, dir, "centroids", v.epoch)
-    val codebooks = ivfModel(spark, dir, "codebooks", v.epoch)
-    val (nSub, subDim, nCodes) = pqMetaOf(codebooks)
-    val probeIds = query.crossJoin(broadcast(centroids))
-      .select(col("list_id"),
-        GraftFunctions.cosine_sim(
-          col("centroid"), col("qvec").cast("array<double>")).as("csim"))
-      .orderBy(col("csim").desc, col("list_id"))
-      .limit(nProbe).select("list_id")
-      .collect().map(_.getInt(0)).toSeq // nProbe ints: probe metadata
+    val (probeIds, qvec) = rankLists(spark, dir, v.epoch, query, nProbe)
+    val books = ivfModel(spark, dir, "codebooks", v.epoch)
+    val subDim = subDimOf(books)
+    val codebooks = localFrame(spark, books)
     // ADC query table from the stored codebooks (one broadcast row)
     val tbl = query.select(pqQuant(col("qvec")).as("qq"))
       .crossJoin(broadcast(codebooks))
@@ -1253,7 +1308,7 @@ object Similarity {
     ivf(dir).committed(spark, "assigned", v.live)
       .where(col("list_id").isin(probeIds: _*))
       .join(topIds, Seq("id"), "left_semi")
-      .crossJoin(broadcast(query))
+      .withColumn("qvec", qvec)
       .select(col("id"),
         round(GraftFunctions.cosine_sim(col("v"), col("qvec")), 4).as("cos"))
       .orderBy(col("cos").desc, col("id"))
@@ -1263,8 +1318,8 @@ object Similarity {
   /** BATCHED top-k against the persisted IVFPQ index — the serving shape
     * for query THROUGHPUT (k3f's lesson applied to the composed tier):
     * one distributed plan answers Q queries, never a driver loop of Q
-    * probes. Per-query probe lists come from a broadcast centroid join +
-    * window rank (map-side); the code tier is read ONCE, pruned to the
+    * probes. Per-query probe lists come from a broadcast join of the
+    * driver-read centroids + window rank (map-side); the code tier is read ONCE, pruned to the
     * UNION of all queries' probed lists (the only driver-resident value —
     * ≤ nLists ints); each code row fans out only to the queries that
     * probed its list; ADC tables ride a broadcast (Q × model-sized);
@@ -1281,9 +1336,10 @@ object Similarity {
       asOf: Int = Int.MaxValue): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val v = ivf(dir).view(spark, asOf)
-    val centroids = ivfModel(spark, dir, "centroids", v.epoch)
-    val codebooks = ivfModel(spark, dir, "codebooks", v.epoch)
-    val (nSub, subDim, nCodes) = pqMetaOf(codebooks)
+    val centroids = localFrame(spark, ivfModel(spark, dir, "centroids", v.epoch))
+    val books = ivfModel(spark, dir, "codebooks", v.epoch)
+    val subDim = subDimOf(books)
+    val codebooks = localFrame(spark, books)
     val lsObs = org.apache.spark.sql.Observation()
     val probePairs = queries.crossJoin(broadcast(centroids))
       .withColumn("__csim", GraftFunctions.cosine_sim(
@@ -1769,11 +1825,11 @@ object Similarity {
       threshold: Double,
       excludeTag: String = ""): DataFrame = {
     val v = ivf(dir).view(spark)
-    val centroids = ivfModel(spark, dir, "centroids", v.epoch)
+    val cents = centroidsOf(ivfModel(spark, dir, "centroids", v.epoch)._2)
     // r20 (§1): the touched-list set rides the checkpoint job as an
     // observe() metric instead of a separate distinct().collect() job
     val lsObs = org.apache.spark.sql.Observation()
-    val assigned = assignToNearest(batch, idCol, vecCol, centroids)
+    val assigned = assignToNearestSeq(batch, idCol, vecCol, cents)
       .observe(lsObs, collect_set(col("list_id")).as("lists"))
       .localCheckpoint(true) // feeds the list census AND two pair joins
     val touched = lsObs.get("lists").asInstanceOf[Seq[Any]]

@@ -1329,9 +1329,10 @@ private[sources] class LakeReaderFactory(
   * Spark parquet scan, and so [[LakeSnapshot.read]], runs. INT96 and
   * MILLIS timestamps, the int→long / float→double / decimal widenings,
   * nested, legacy-list and map shapes therefore read identically on
-  * every lake surface.
+  * every lake surface. [[graft.ModelParquet.read]] decodes model files
+  * with it on the driver.
   */
-private[sources] object LakeParquetRead {
+private[graft] object LakeParquetRead {
 
   def confOf(hadoopConf: Map[String, String]): Configuration = {
     val c = new Configuration(false)

@@ -439,7 +439,7 @@ private[sources] object GraftProcedures {
         // declaration-grade checks BEFORE anything moves: the source
         // schema (minus the day partition col) must be lake-bridgeable
         // and must contain the declared key/ts columns
-        val full = spark.read.parquet(src).schema
+        val full = LakeSnapshot.inferredSchema(spark, src)
         val dataSchema = StructType(full.fields.filterNot(_.name == "day"))
         LakeSnapshot.keyParts(key).foreach(k =>
           require(dataSchema.fieldNames.contains(k),

@@ -230,7 +230,7 @@ object StreamInput {
 
   /** Streaming reader over a prepared dir, one file per micro-batch. */
   def readEventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(dir).schema
+    val schema = graft.etl.LakeSnapshot.inferredSchema(spark, dir)
     spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", "1")

@@ -106,6 +106,53 @@ class ModelParquetSpec extends AnyFunSuite {
     } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  /** PQ codebook shapes: (m, code, qsub) with double and float elements. */
+  private def booksDf(elem: String) = Seq(
+    (0, 0, Seq(1.5, -2.0)), (0, 1, Seq(0.0, Double.MaxValue)),
+    (1, 0, Seq(-0.0, 3.25)), (1, 1, Seq.empty[Double])
+  ).toDF("m", "code", "qsub")
+    .withColumn("qsub", col("qsub").cast(s"array<$elem>"))
+
+  private def modelFrames = Seq(
+    "centroids" -> centroidsDf, "books_double" -> booksDf("double"),
+    "books_float" -> booksDf("float"))
+
+  test("read returns the rows and schema spark.read.parquet collects, " +
+    "from a driver write and from a one-file Spark write, with no job") {
+    for ((name, df) <- modelFrames) {
+      val driverDir = freshDir(s"read_driver_$name")
+      val sparkDir = freshDir(s"read_spark_$name")
+      ModelParquet.overwriteFrom(df, driverDir)
+      df.coalesce(1).write.mode("overwrite").parquet(sparkDir)
+      for (dir <- Seq(driverDir, sparkDir)) {
+        val got = TestJobs.launched(spark)(ModelParquet.read(spark, dir))
+        assert(got.jobs === 0, dir)
+        val inferred = spark.read.parquet(dir)
+        assert(got.result._1 === inferred.schema, dir)
+        assert(got.result._2 === inferred.collect().toSeq, dir)
+      }
+    }
+  }
+
+  test("read decodes every part- file of a Spark write in name order, " +
+    "and no job marker or checksum file") {
+    for ((name, df) <- modelFrames) {
+      val dir = freshDir(s"read_parts_$name")
+      df.repartition(3).write.mode("overwrite").parquet(dir)
+      val names = new java.io.File(dir).list().toSeq
+      assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")),
+        s"the fixture must hold job markers and checksums: $names")
+      val parts = names.filter(_.startsWith("part-")).sorted
+      assert(parts.size > 1, names)
+      val (schema, rows) = ModelParquet.read(spark, dir)
+      assert(schema === spark.read.parquet(dir).schema)
+      assert(rows === parts.flatMap(p =>
+        spark.read.parquet(s"$dir/$p").collect().toSeq))
+      assert(rows.map(_.toString).sorted ===
+        spark.read.parquet(dir).collect().map(_.toString).toSeq.sorted)
+    }
+  }
+
   test("overwrite replaces prior contents (overwrite semantics)") {
     val dir = freshDir("replace")
     ModelParquet.overwriteFrom(modelDf, dir)

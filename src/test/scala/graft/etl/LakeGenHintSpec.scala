@@ -5,7 +5,7 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.TestSpark
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -140,6 +140,60 @@ class LakeGenHintSpec extends AnyFunSuite {
     assert(got == 20L) // 10 rounds x 2 disjoint keys, all folded in
   }
 
+  /** A manifest directory on the `hintrace` filesystem ([[HintRaceFs]]),
+    * holding hint 5 and nothing else.
+    */
+  private def raceManifest(name: String): (String, Path) = {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.hintrace.impl", classOf[HintRaceFs].getName)
+    val local = Paths.get(freshDir(name)).toAbsolutePath
+    val dir = s"hintrace://$local"
+    val m = new Path(s"$dir/manifest")
+    val fs = m.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(m)
+    fs.create(new Path(m, "_next_gen-5"), false).close()
+    (dir, m)
+  }
+
+  test("a hint listing that throws is retried, never read as 0") {
+    val (dir, _) = raceManifest("race_throw")
+    HintRaceFs.failures.set(2)
+    try assert(LakeSnapshot.genHint(spark, dir) == 5)
+    finally HintRaceFs.failures.set(0)
+    assert(HintRaceFs.failures.get() == 0, "the failing listings never ran")
+  }
+
+  test("a listing torn by one bump (its create passed, its delete " +
+    "reached) does not read a lower hint") {
+    val (dir, m) = raceManifest("race_torn")
+    // the listing walks names in descending order: `_next_gen-6` is
+    // passed before the bump creates it, `_next_gen-5` reached after the
+    // bump retired it
+    HintRaceFs.tear.set(("_next_gen-5",
+      () => LakeSnapshot.bumpGenHint(spark, dir, 6)))
+    try assert(LakeSnapshot.genHint(spark, dir) >= 5)
+    finally HintRaceFs.tear.set(null)
+    val fs = m.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(new Path(m, "_next_gen-6")), "the bump never ran")
+    assert(LakeSnapshot.genHint(spark, dir) == 6)
+  }
+
+  test("a bump retires lower hints only once a listing shows its new one") {
+    val (dir, m) = raceManifest("race_unlisted")
+    val fs = m.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the store's listings lag its creates: `_next_gen-6` lands but no
+    // listing shows it yet, so `_next_gen-5` must stay
+    HintRaceFs.listAtMost.set(5)
+    try {
+      LakeSnapshot.bumpGenHint(spark, dir, 6)
+      assert(fs.exists(new Path(m, "_next_gen-6")))
+      assert(LakeSnapshot.genHint(spark, dir) == 5)
+    } finally HintRaceFs.listAtMost.set(Int.MaxValue)
+    assert(LakeSnapshot.genHint(spark, dir) == 6)
+    LakeSnapshot.bumpGenHint(spark, dir, 7)
+    assert(fs.listStatus(m).map(_.getPath.getName).toSeq == Seq("_next_gen-7"))
+  }
+
   test("legacy value-bearing _next_gen folds into the hint and is " +
     "retired by the next bump") {
     val dir = freshDir("legacy")
@@ -175,4 +229,44 @@ class LakeGenHintSpec extends AnyFunSuite {
     assert(LakeSnapshot.read(spark, dir)
       .filter(col("event_id") === 99L).count() == 1L)
   }
+}
+
+/** The local filesystem under the `hintrace` scheme, with three faults a
+  * test arms on listings of a `manifest` directory:
+  *   - `failures`: that many listings throw, as the local listing can when
+  *     a name it read is deleted before its stat;
+  *   - `tear`: the next listing reads names in descending order and runs
+  *     the action just before it reaches the given name, so it returns the
+  *     names above it as they were before the action and the rest as they
+  *     are after it;
+  *   - `listAtMost`: listings omit hints above the value, as a store whose
+  *     listings lag its creates does.
+  */
+class HintRaceFs extends RawLocalFileSystem {
+  import HintRaceFs._
+  override def getUri: java.net.URI = java.net.URI.create("hintrace:///")
+
+  override def listStatus(p: Path): Array[FileStatus] = {
+    if (p.getName != "manifest") return super.listStatus(p)
+    if (failures.getAndUpdate(n => math.max(0, n - 1)) > 0)
+      throw new java.io.FileNotFoundException(s"a listed hint vanished under $p")
+    val listed = Option(tear.getAndSet(null)) match {
+      case None => super.listStatus(p)
+      case Some((at, action)) =>
+        val before = super.listStatus(p).filter(_.getPath.getName > at)
+        action()
+        before ++ super.listStatus(p).filter(_.getPath.getName <= at)
+    }
+    listed.filter { st =>
+      val n = st.getPath.getName
+      !n.startsWith("_next_gen-") ||
+        n.stripPrefix("_next_gen-").toInt <= listAtMost.get()
+    }
+  }
+}
+
+object HintRaceFs {
+  val failures = new AtomicInteger(0)
+  val tear = new java.util.concurrent.atomic.AtomicReference[(String, () => Unit)]()
+  val listAtMost = new AtomicInteger(Int.MaxValue)
 }

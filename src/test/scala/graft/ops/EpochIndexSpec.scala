@@ -113,7 +113,7 @@ class EpochIndexSpec extends AnyFunSuite {
       (dir, r) => Similarity.vacuumIvfIndex(spark, dir, r),
       dir => rows(Similarity.ivfProbePersisted(
         spark, dir, query, k = 20, nProbe = 2)),
-      Seq(2, 3, 0, 2, 0, 4)),
+      Seq(2, 2, 0, 2, 0, 1)),
     Kind("ivfpq", Seq("assigned", "centroids", "codes", "codebooks"),
       dir => Similarity.saveIvfPqIndex(
         Similarity.ivfBuildFixed(corpusVec, "id", "v", centroids),
@@ -127,7 +127,7 @@ class EpochIndexSpec extends AnyFunSuite {
       (dir, r) => Similarity.vacuumIvfIndex(spark, dir, r),
       dir => rows(Similarity.ivfPqTopKPersisted(
         spark, dir, query, k = 20, nProbe = 2, rerank = 50)),
-      Seq(4, 6, 0, 4, 0, 10)))
+      Seq(4, 4, 0, 4, 0, 5)))
 
   private val partOf = Map("text" -> "pb", "span" -> "pb", "cosine" -> "pb",
     "ivf" -> "list_id", "ivfpq" -> "list_id")

@@ -722,11 +722,15 @@ class GraftCatalogSpec extends AnyFunSuite {
       .withColumn("day", to_date(col("ts")))
       .write.partitionBy("day").parquet(src)
     try {
-      // a bad key refuses BEFORE anything moves
-      assert(intercept[Exception] {
-        spark.sql("CALL graft.system.convert_parquet(`table` => 'conv', " +
-          s"source => '$src', key => 'nope')").collect()
-      }.getMessage.contains("not a column"))
+      // a bad key refuses BEFORE anything moves, from the source's
+      // footer schema: no Spark job
+      val refused = org.apache.spark.sql.graftbridge.TestJobs.launched(spark)(
+        intercept[Exception] {
+          spark.sql("CALL graft.system.convert_parquet(`table` => 'conv', " +
+            s"source => '$src', key => 'nope')").collect()
+        })
+      assert(refused.result.getMessage.contains("not a column"))
+      assert(refused.jobs === 0)
       assert(Files.exists(Paths.get(src)), "refusal must not move the source")
       val res = spark.sql("CALL graft.system.convert_parquet(" +
         s"`table` => 'conv', source => '$src', key => 'event_id')").head()
